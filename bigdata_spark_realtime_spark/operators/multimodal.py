@@ -19,6 +19,7 @@ testable.
 
 from __future__ import annotations
 
+import functools
 import hashlib
 from collections.abc import Iterator
 
@@ -543,28 +544,26 @@ def extract_features(media: DataFrame, dim: int = FEATURE_DIM) -> DataFrame:
 #: changes every projection (and the fixture ground truth)
 PROJ_SEED = "bsrproj1"
 
-_SIGN_CACHE: dict[int, "object"] = {}
 
-
+@functools.cache
 def _sign_matrix(dim: int):
     """Fixed-seed ±1 projection matrix over the 256 intensity bins,
     derived bin-by-bin from md5 so it is bit-identical everywhere
     (generator process, executors, any numpy version) — the same
     integer-determinism rationale as the SRP planes
     (functions/hashing.py): seeded float RNGs are library-versioned,
-    md5 is specified."""
+    md5 is specified. The cached result is shared, so it is read-only."""
     import numpy as np
 
-    if dim not in _SIGN_CACHE:
-        signs = np.empty((dim, 256), dtype=np.int64)
-        for d in range(dim):
-            digest = hashlib.md5(f"{PROJ_SEED}|{d}".encode()).digest()
-            # 256 sign bits from 2 chained md5 blocks (16 bytes = 128 bits)
-            digest += hashlib.md5(digest).digest()
-            bits = np.unpackbits(np.frombuffer(digest, dtype=np.uint8))
-            signs[d] = bits.astype(np.int64) * 2 - 1
-        _SIGN_CACHE[dim] = signs
-    return _SIGN_CACHE[dim]
+    signs = np.empty((dim, 256), dtype=np.int64)
+    for d in range(dim):
+        digest = hashlib.md5(f"{PROJ_SEED}|{d}".encode()).digest()
+        # 256 sign bits from 2 chained md5 blocks (16 bytes = 128 bits)
+        digest += hashlib.md5(digest).digest()
+        bits = np.unpackbits(np.frombuffer(digest, dtype=np.uint8))
+        signs[d] = bits.astype(np.int64) * 2 - 1
+    signs.flags.writeable = False
+    return signs
 
 
 def int_feature_projection(content: bytes, dim: int = FEATURE_DIM) -> list[int]:

@@ -121,32 +121,6 @@ def _factorize_pairs(pairs: list[tuple]) -> tuple[np.ndarray, list[tuple]]:
     return codes, list(uniques)
 
 
-#: memo of the partition-count probe, keyed by the input frame's
-#: identity (the loader memoizes table frames per session, so identity
-#: is stable): df.rdd.getNumPartitions() costs a ~70 ms plan→RDD
-#: conversion per call, and every kernel invocation would pay it
-import weakref
-
-_NPART_MEMO: "weakref.WeakValueDictionary[int, DataFrame]" = (
-    weakref.WeakValueDictionary()
-)
-_NPART: dict[int, int] = {}
-
-
-def _num_partitions(df: DataFrame) -> int:
-    key = id(df)
-    if _NPART_MEMO.get(key) is df:
-        return _NPART[key]
-    n = df.rdd.getNumPartitions()
-    # prune counts whose weak entry died (otherwise every GC'd frame
-    # leaves a permanent orphan int for the process lifetime)
-    for dead in _NPART.keys() - _NPART_MEMO.keys():
-        del _NPART[dead]
-    _NPART_MEMO[key] = df  # weak: entry dies with the frame, id can't alias
-    _NPART[key] = n
-    return n
-
-
 def _doc_rows(
     docs: DataFrame, min_parallelism: int | None, key_col: str = "doc_id"
 ) -> DataFrame:
@@ -162,7 +136,7 @@ def _doc_rows(
     strictly-zero-exchange plan (decontamination's corpus side) pass
     None."""
     sel = docs.select(key_col, "text")
-    if min_parallelism and _num_partitions(docs) < min_parallelism:
+    if min_parallelism and docs.rdd.getNumPartitions() < min_parallelism:
         return sel.repartition(min_parallelism)
     return sel
 
@@ -432,7 +406,7 @@ def repetition_metrics(
     inp = docs.select(
         "doc_id", "text", *(c for c in passthrough if c not in ("doc_id", "text"))
     )
-    if min_parallelism and _num_partitions(docs) < min_parallelism:
+    if min_parallelism and docs.rdd.getNumPartitions() < min_parallelism:
         inp = inp.repartition(min_parallelism)
     return inp.mapInPandas(gen, f"doc_id long, n_tokens long, {cols}{extra}")
 
@@ -612,13 +586,14 @@ def bucket_pairs(
     (caller, sf_dir, table-mtime) plan, a few MB of int64 rows. Routing
     the persist through scoped_persist was tried in round 12: eviction
     clears the plan's single shared CacheManager entry out from under
-    the dedup-family memo (plans/ext_dedup._CAND_MEMO holds the same
-    DataFrame across invocations and never re-persists), forcing full
-    signature-pipeline recomputes — measured 2.2-4.1x on the
-    minhash/resolve/simhash-pairs/SRP bench queries. Lifetime is owned
-    by the callers: the dedup memo FIFO-drops its strong refs and
-    Spark's ContextCleaner reclaims the blocks; everything else dies
-    with the session.
+    the memoized dedup candidate frame (plans/ext_dedup._candidates
+    holds the same DataFrame across invocations and never
+    re-persists), forcing full signature-pipeline recomputes — measured
+    2.2-4.1x on the minhash/resolve/simhash-pairs/SRP bench queries.
+    Lifetime is owned by the callers: when the engine memo
+    (bigdata_spark_realtime_spark/cache.py) evicts the candidate frame
+    its last reference goes and Spark's ContextCleaner reclaims the
+    blocks; everything else dies with the session.
     """
     from pyspark.sql import Window
     from pyspark.sql import functions as F

@@ -42,7 +42,7 @@ from pyspark.sql import functions as F
 from bigdata_spark_realtime_spark.functions import hashing as H
 from bigdata_spark_realtime_spark.plans.ext_dedup import (
     _SIG_CTE,
-    _candidates_from_docs,
+    _candidates,
     _shingle_sets,
     _signatures_docs,
 )
@@ -135,7 +135,7 @@ def ext_minhash_error_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     the two already-rounded 4-dp values, so it is a multiple of 1e-4
     with no 5th-decimal tie for either engine to round differently."""
     docs = load_table(spark, sf_dir, "documents")
-    cand = _candidates_from_docs(docs)
+    cand = _candidates(spark, sf_dir)
     per_doc = (
         _signatures_docs(docs)
         .join(_shingle_sets(spark, sf_dir), "doc_id")

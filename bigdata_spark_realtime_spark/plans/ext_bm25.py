@@ -144,13 +144,12 @@ def bm25_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     # `split` is evaluated once per row: CollapseProject refuses to
     # inline a projection whose output feeds two expensive consumers.
     terms = sorted({term for q in QUERIES.values() for term in q.split(" ")})
-    terms_sql = ", ".join(f"'{x}'" for x in terms)
     toks = docs.select("doc_id", F.split("text", " ", -1).alias("toks"))
     base = scoped_persist_if_large(
         toks.select(
             "doc_id",
             F.size("toks").cast("long").alias("dl"),
-            F.expr(f"filter(toks, x -> x IN ({terms_sql}))").alias("qtoks"),
+            F.filter("toks", lambda x: x.isin(*terms)).alias("qtoks"),
         ),
         "ext_bm25_agg",
         sf_dir,

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bigdata_spark_realtime_spark import cache
 from bigdata_spark_realtime_spark.functions import hashing as H
 from bigdata_spark_realtime_spark.operators.shingling import (  # noqa: F401 — re-exported
     MAX_BUCKET_COLLECT,
@@ -169,7 +170,7 @@ def _bands(sig: DataFrame) -> DataFrame:
 # re-exported above for the dedup-family callers and the skew tests.
 
 
-def _candidates(sig: DataFrame) -> DataFrame:
+def _candidates_from_sig(sig: DataFrame) -> DataFrame:
     """Bucket-local pair generation instead of a global self-join: group
     by band bucket, emit doc_id pairs inside each bucket. One shuffle on
     the bucket key; bucket sizes are tiny by LSH design, and degenerate
@@ -178,23 +179,6 @@ def _candidates(sig: DataFrame) -> DataFrame:
     synthetic signatures; the registered queries take the fused
     kernel path below.)"""
     return _bucket_pairs(_bands(sig), ("band", "k1", "k2"))
-
-
-#: per-session memo of the LSH candidate-pair DataFrame, keyed by the
-#: identity of the (already session-memoized — sources/tables.py) docs
-#: frame. Three queries consume the SAME candidate set (minhash_lsh,
-#: resolve, ngram_jaccard); without the memo each rebuilds the pipeline
-#: and — because two pickles of the kernel closure are different bytes —
-#: Spark's cache-by-canonical-plan can never unify them, so the
-#: persist()ed tagged frame inside _bucket_pairs is re-materialized per
-#: query. Returning one DataFrame object makes every consumer hit the
-#: same cache entry, exactly like a production dedup pipeline that
-#: materializes candidates once and fans out. Entries die with the
-#: session; a regenerated table yields a new docs frame (mtime-keyed
-#: loader memo) and therefore a fresh entry.
-import weakref
-
-_CAND_MEMO: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
 
 
 def _candidates_from_docs(docs: DataFrame) -> DataFrame:
@@ -206,25 +190,29 @@ def _candidates_from_docs(docs: DataFrame) -> DataFrame:
         minhash_band_keys,
     )
 
-    memo = _CAND_MEMO.setdefault(docs.sparkSession, {})
-    entry = memo.get(id(docs))
-    if entry is not None and entry[0] is docs:
-        return entry[1]
     bands = minhash_band_keys(
         docs, min_parallelism=docs.sparkSession.sparkContext.defaultParallelism
     )
-    cand = _bucket_pairs(bands, ("band", "k1", "k2"))
-    # bound the memo: a regenerated table yields a NEW docs frame (the
-    # loader memo is mtime-keyed), and the superseded entry's strong
-    # refs would otherwise pin its persist()ed candidate pipeline in
-    # executor storage for the session's lifetime. FIFO-evicting past 8
-    # entries drops our refs; Spark's ContextCleaner then reclaims the
-    # unreferenced persisted blocks.
-    while len(memo) >= 8:
-        del memo[next(iter(memo))]
-    # hold the docs ref so its id() stays unique for the memo's lifetime
-    memo[id(docs)] = (docs, cand)
-    return cand
+    return _bucket_pairs(bands, ("band", "k1", "k2"))
+
+
+def _candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The LSH candidate-pair frame of the documents table, memoized on
+    that table. Four queries consume the SAME candidate set
+    (minhash_lsh, resolve, ngram_jaccard, approx_audit); rebuilt
+    pipelines never share Spark's cache — two pickles of the kernel
+    closure are different bytes, so cache-by-canonical-plan cannot
+    unify them, and the persist()ed tagged frame inside _bucket_pairs
+    would re-materialize per query. Returning one DataFrame object
+    makes every consumer hit the same cache entry, like a production
+    dedup pipeline that materializes candidates once and fans out."""
+    return cache.memo(
+        spark,
+        sf_dir,
+        "documents",
+        "candidates",
+        lambda: _candidates_from_docs(load_table(spark, sf_dir, "documents")),
+    )
 
 
 @register("ext_dedup_minhash_lsh", oracle=MINHASH_ORACLE)
@@ -234,7 +222,7 @@ def ext_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     generation. 1−(1−s⁴)^16 ≈ 0.9998 candidate recall at the
     Jaccard-0.8 verify threshold; the only shuffle keys are the band
     buckets."""
-    return _candidates_from_docs(load_table(spark, sf_dir, "documents"))
+    return _candidates(spark, sf_dir)
 
 
 # ---------------------------------------------------------------------------
@@ -273,7 +261,7 @@ def ext_dedup_resolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bigdata_spark_realtime_spark.operators.components import resolve_keepers
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    pairs = _candidates_from_docs(load_table(spark, sf_dir, "documents"))
+    pairs = _candidates(spark, sf_dir)
     return resolve_keepers(docs, "doc_id", pairs, "doc_a", "doc_b")
 
 
@@ -304,7 +292,7 @@ def ext_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (MEMORY_AND_DISK — spills rather than OOMs at corpus scale) so the
     # shingling pass runs once, mirroring the oracle's MATERIALIZED sh
     sh = _shingle_sets(spark, sf_dir).persist()
-    cand = _candidates_from_docs(load_table(spark, sf_dir, "documents"))
+    cand = _candidates(spark, sf_dir)
     s1 = sh.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a"))
     s2 = sh.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b"))
     jac = F.size(F.array_intersect("sh_a", "sh_b")).cast("double") / F.size(

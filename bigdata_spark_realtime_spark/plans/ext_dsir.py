@@ -57,6 +57,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bigdata_spark_realtime_spark import cache
 from bigdata_spark_realtime_spark.functions import hashing as H
 from bigdata_spark_realtime_spark.plans.registry import register
 from bigdata_spark_realtime_spark.sources.tables import load_table
@@ -118,18 +119,17 @@ FROM scored CROSS JOIN m
 """
 
 
-#: per-process memo of trained ratio tables keyed by the documents
-#: table's storage fingerprint (the ext_lm._LM_CACHE pattern); each
-#: entry is one fixed-size int array
-_DSIR_CACHE: dict[tuple, object] = {}
-
-
 def train_dsir(spark: SparkSession, sf_dir: str):
     """Bucket census → integer ratio table (numpy int64, length
     ``DSIR_BUCKETS``). The census reaches the driver as ≤ B rows by
-    construction — the model is fixed-size, not vocabulary-bounded."""
-    import os
+    construction — the model is fixed-size, not vocabulary-bounded.
+    Memoized on the documents table, like the LM."""
+    return cache.memo(
+        spark, sf_dir, "documents", "dsir", lambda: _train_dsir(spark, sf_dir)
+    )
 
+
+def _train_dsir(spark: SparkSession, sf_dir: str):
     import numpy as np
     import pandas as pd
 
@@ -138,12 +138,6 @@ def train_dsir(spark: SparkSession, sf_dir: str):
         _shingle_strs,
         _toks,
     )
-    from bigdata_spark_realtime_spark.sources.tables import _file_sig
-
-    path = os.path.join(sf_dir, "documents.parquet")
-    key = (os.path.abspath(path), _file_sig(path))
-    if key in _DSIR_CACHE:
-        return _DSIR_CACHE[key]
 
     docs = load_table(spark, sf_dir, "documents").where(
         F.col("text").isNotNull()
@@ -206,9 +200,6 @@ def train_dsir(spark: SparkSession, sf_dir: str):
         ],
         dtype=np.int64,
     )
-    while len(_DSIR_CACHE) >= 8:
-        del _DSIR_CACHE[next(iter(_DSIR_CACHE))]
-    _DSIR_CACHE[key] = ratio
     return ratio
 
 

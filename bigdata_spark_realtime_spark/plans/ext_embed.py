@@ -42,6 +42,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bigdata_spark_realtime_spark import cache
 from bigdata_spark_realtime_spark.plans.registry import register
 from bigdata_spark_realtime_spark.sources.tables import load_table
 
@@ -184,31 +185,19 @@ def ext_embed_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _centroids(spark, sf_dir)
 
 
-#: per-process memo of collected centroid tables keyed by the
-#: embeddings table's storage fingerprint (the ext_dsir._DSIR_CACHE
-#: pattern); each entry is L x 64 ints — a model artifact, refreshed
-#: when the backing file changes
-_CENTROID_CACHE: dict[tuple, dict] = {}
-
-
 def _centroid_artifact(
     spark: SparkSession, sf_dir: str
 ) -> dict[int, dict[int, int]]:
-    import os
+    """Collected centroid table ``{label: {dim: centroid_q}}`` — L x 64
+    ints, a model artifact memoized on the embeddings table."""
 
-    from bigdata_spark_realtime_spark.sources.tables import _file_sig
+    def build() -> dict[int, dict[int, int]]:
+        by_label: dict[int, dict[int, int]] = {}
+        for r in _centroids(spark, sf_dir).collect():
+            by_label.setdefault(r["label"], {})[r["dim"]] = r["centroid_q"]
+        return by_label
 
-    path = os.path.join(sf_dir, "embeddings.parquet")
-    key = (os.path.abspath(path), _file_sig(path))
-    if key in _CENTROID_CACHE:
-        return _CENTROID_CACHE[key]
-    by_label: dict[int, dict[int, int]] = {}
-    for r in _centroids(spark, sf_dir).collect():
-        by_label.setdefault(r["label"], {})[r["dim"]] = r["centroid_q"]
-    while len(_CENTROID_CACHE) >= 8:
-        del _CENTROID_CACHE[next(iter(_CENTROID_CACHE))]
-    _CENTROID_CACHE[key] = by_label
-    return by_label
+    return cache.memo(spark, sf_dir, "embeddings", "centroids", build)
 
 
 ASSIGN_ORACLE = f"""

@@ -44,6 +44,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bigdata_spark_realtime_spark import cache
 from bigdata_spark_realtime_spark.functions import hashing as H
 from bigdata_spark_realtime_spark.plans.registry import register
 from bigdata_spark_realtime_spark.sources.tables import load_table
@@ -133,14 +134,6 @@ def _bigram_rows(docs: DataFrame) -> DataFrame:
     )
 
 
-#: per-process memo of trained LMs keyed by the documents table's
-#: storage fingerprint (same staleness rule as the table cache): the
-#: model is deterministic data derived from the table, so reuse across
-#: queries/sessions is safe and saves the ~0.7 s train job every
-#: LM-scoring invocation (ext_lm_score, ext_curation_scored) would pay
-_LM_CACHE: dict[tuple, tuple] = {}
-
-
 def train_lm(spark: SparkSession, sf_dir: str):
     """Train the bigram LM on the deterministic 10% hash-slice and
     return ``(big: dict[(w1, w2), int], uni: dict[w1, int], vocab)``.
@@ -151,15 +144,18 @@ def train_lm(spark: SparkSession, sf_dir: str):
     :data:`LM_MAX_BIGRAMS` so an over-vocabulary corpus fails loudly
     instead of OOMing the driver. (For an LM too large for one worker,
     the broadcast-join form survives in the streaming twin,
-    plans/streaming_queries.stream_lm_bucket.)"""
-    import os
+    plans/streaming_queries.stream_lm_bucket.)
 
-    from bigdata_spark_realtime_spark.sources.tables import _file_sig
+    The model is deterministic data derived from the documents table,
+    so it is memoized on that table: reuse saves the ~0.7 s train job
+    every LM-scoring invocation (ext_lm_score, ext_curation_scored)
+    would pay."""
+    return cache.memo(
+        spark, sf_dir, "documents", "lm", lambda: _train_lm(spark, sf_dir)
+    )
 
-    path = os.path.join(sf_dir, "documents.parquet")
-    key = (os.path.abspath(path), _file_sig(path))
-    if key in _LM_CACHE:
-        return _LM_CACHE[key]
+
+def _train_lm(spark: SparkSession, sf_dir: str):
     docs = load_table(spark, sf_dir, "documents")
     # filter BEFORE the pair kernel: Catalyst cannot push a predicate
     # through mapInPandas, so filtering after would run the kernel on
@@ -191,13 +187,7 @@ def train_lm(spark: SparkSession, sf_dir: str):
     uni: dict[str, int] = {}
     for (w1, _), c in big.items():
         uni[w1] = uni.get(w1, 0) + c
-    # bound the cache: regenerated tables mint new (path, sig) keys and
-    # the superseded LMs would otherwise accumulate for the process
-    # lifetime (each is vocab-bounded but the count is not)
-    while len(_LM_CACHE) >= 8:
-        del _LM_CACHE[next(iter(_LM_CACHE))]
-    _LM_CACHE[key] = (big, uni, len(uni))
-    return _LM_CACHE[key]
+    return big, uni, len(uni)
 
 
 @register("ext_lm_score", oracle=LM_ORACLE)

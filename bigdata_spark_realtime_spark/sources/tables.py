@@ -14,6 +14,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bigdata_spark_realtime_spark import cache
+
 #: the ten driver-generated tables (TESTDATA.md / FIXTURES.md Group 1)
 TABLE_NAMES = (
     "region",
@@ -41,54 +43,20 @@ def ensure_session_confs(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
 
 
-#: per-session memo of loaded table DataFrames. A DataFrame is an
-#: immutable lazy plan, so reuse is safe and saves the 0.1-0.25 s of
-#: py4j footer-read round-trips every `spark.read.parquet` costs —
-#: ~5 s across one bench pass. Keyed by the live JVM session object
-#: (WeakKeyDictionary: entries die with their session, and a restarted
-#: session can never collide with a dead one's key the way `id()`
-#: reuse could) AND by the backing file's (mtime_ns, size): an in-place
-#: regeneration of a parquet file naturally misses the memo instead of
-#: serving a plan whose footer/schema snapshot is stale. The driver
-#: regenerates testdata between processes today, but the cache no
-#: longer depends on that.
-import weakref
-
-_TABLE_CACHE: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
-
-
-def clear_table_cache() -> None:
-    _TABLE_CACHE.clear()
-
-
-def _file_sig(path: str) -> tuple:
-    """(mtime_ns, size) fingerprint of a table's backing storage; for a
-    parquet *directory*, the sorted per-entry fingerprints (a replaced,
-    added, or removed part-file changes the signature)."""
-    if os.path.isdir(path):
-        return tuple(
-            sorted(
-                (e.name, e.stat().st_mtime_ns, e.stat().st_size)
-                for e in os.scandir(path)
-            )
-        )
-    st = os.stat(path)
-    return (st.st_mtime_ns, st.st_size)
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    per_session = _TABLE_CACHE.setdefault(spark, {})
-    path = os.path.join(os.path.abspath(sf_dir), f"{name}.parquet")
-    key = (path, _file_sig(path))
-    df = per_session.get(key)
-    if df is None:
+    """The table's DataFrame, memoized per session by ``cache.memo``.
+    A DataFrame is an immutable lazy plan, so reuse is safe and saves
+    the 0.1-0.25 s of py4j footer-read round-trips every
+    ``spark.read.parquet`` costs — ~5 s across one bench pass."""
+
+    def build() -> DataFrame:
         ensure_session_confs(spark)
         if name == "events":
-            df = _load_events(spark, sf_dir)
-        else:
-            df = spark.read.parquet(path)
-        per_session[key] = df
-    return df
+            return _load_events(spark, sf_dir)
+        path = os.path.join(os.path.abspath(sf_dir), f"{name}.parquet")
+        return spark.read.parquet(path)
+
+    return cache.memo(spark, sf_dir, name, "table", build)
 
 
 def events_ts_kind(path: str) -> str:

@@ -5,6 +5,8 @@ Runs the bench's 67 headline queries in bench order (same warm-up, same
 noop-sink action) and, AFTER each query (untimed), snapshots:
 
 - cached-RDD count and total memory/disk bytes (``getRDDStorageInfo``),
+- the engine memo's live entry count per artifact (``cache.entries()``:
+  table frames, dedup candidates, LM, DSIR ratio, centroids),
 - cumulative JVM GC count/time (all collector MX beans),
 - the query's wall seconds.
 
@@ -32,7 +34,9 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 WARM_DIR = os.environ.get("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
 
 
-def jvm_stats(spark) -> dict:
+def snapshot(spark) -> dict:
+    from bigdata_spark_realtime_spark import cache
+
     sc = spark.sparkContext
     infos = sc._jsc.sc().getRDDStorageInfo()
     n_cached = len(infos)
@@ -51,6 +55,7 @@ def jvm_stats(spark) -> dict:
         "cached_rdds": n_cached,
         "cached_mem_mb": round(mem / 1e6, 1),
         "cached_disk_mb": round(disk / 1e6, 1),
+        "memo_entries": cache.entries(),
         "gc_count": gc_count,
         "gc_ms": gc_ms,
         "heap_used_mb": round(heap_used / 1e6),
@@ -86,7 +91,7 @@ def main() -> int:
         except Exception as e:  # noqa: BLE001
             print(f"warm-up failed {name}: {e!r}"[:200], file=sys.stderr)
 
-    base = jvm_stats(spark)
+    base = snapshot(spark)
     print(json.dumps({"pos": -1, "query": "<post-warmup>", **base}))
     prev_gc_ms = base["gc_ms"]
     for pos, name in enumerate(names):
@@ -95,7 +100,7 @@ def main() -> int:
             "overwrite"
         ).save()
         sec = round(time.perf_counter() - t0, 3)
-        st = jvm_stats(spark)
+        st = snapshot(spark)
         st["gc_ms_delta"] = st["gc_ms"] - prev_gc_ms
         prev_gc_ms = st["gc_ms"]
         print(json.dumps({"pos": pos, "query": name, "sec": sec, **st}))

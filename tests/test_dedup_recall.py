@@ -25,7 +25,7 @@ from bigdata_spark_realtime_spark.functions import hashing as H
 from bigdata_spark_realtime_spark.plans.ext_dedup import (
     MAX_BUCKET_COLLECT,
     _bucket_pairs,
-    _candidates,
+    _candidates_from_sig,
     _signatures_docs,
 )
 
@@ -83,7 +83,7 @@ def test_minhash_candidate_recall_at_verify_threshold(spark):
     df = spark.createDataFrame(docs, "doc_id long, text string")
     cand = {
         (r.doc_a, r.doc_b)
-        for r in _candidates(_signatures_docs(df)).collect()
+        for r in _candidates_from_sig(_signatures_docs(df)).collect()
     }
     recall = len(cand & true_pairs) / len(true_pairs)
     assert recall >= 0.95, f"candidate recall {recall:.3f} < 0.95 at s>=0.8"

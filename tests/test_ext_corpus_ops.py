@@ -9,8 +9,14 @@ covered separately by test_queries_oracle.py.
 
 from __future__ import annotations
 
+import hashlib
+
+import numpy as np
+import pandas as pd
 import pyspark.sql.functions as F
 
+from bigdata_spark_realtime_spark import cache
+from bigdata_spark_realtime_spark.plans import ext_dsir as D
 from bigdata_spark_realtime_spark.plans.ext_lm import _bigram_rows
 from bigdata_spark_realtime_spark.plans.ext_order import (
     EPOCH_SEED,
@@ -52,7 +58,7 @@ def test_train_lm_size_guard_fails_loudly(spark, sf_dir, monkeypatch):
     from bigdata_spark_realtime_spark.plans import ext_lm
 
     monkeypatch.setattr(ext_lm, "LM_MAX_BIGRAMS", 1)
-    monkeypatch.setattr(ext_lm, "_LM_CACHE", {})  # bypass the memo
+    cache.clear()  # a memoized LM would skip the guard
     with pytest.raises(RuntimeError, match="stream_lm_bucket"):
         ext_lm.train_lm(spark, sf_dir)
 
@@ -147,13 +153,12 @@ def test_tfidf_rare_token_wins(spark, tmp_path):
     ).withColumn("n_chars", F.length("text")).write.mode("overwrite").parquet(
         path + "/documents.parquet"
     )
-    from bigdata_spark_realtime_spark.sources.tables import clear_table_cache
 
-    clear_table_cache()
+    cache.clear()
     try:
         out = ext_text_tfidf(spark, path).collect()
     finally:
-        clear_table_cache()
+        cache.clear()
     doc1 = sorted(
         (r for r in out if r["doc_id"] == 1), key=lambda r: r["rnk"]
     )
@@ -211,7 +216,6 @@ def test_chunk_windows_cover_every_token(spark):
     text = " ".join(f"t{i}" for i in range(n_tokens))
     docs = _docs(spark, [(1, text)])
     from bigdata_spark_realtime_spark.plans.ext_chunk import ext_chunk_windows
-    from bigdata_spark_realtime_spark.sources.tables import clear_table_cache
     import tempfile, os
 
     with tempfile.TemporaryDirectory() as d:
@@ -220,14 +224,14 @@ def test_chunk_windows_cover_every_token(spark):
         ).withColumn("n_chars", F.length("text")).write.parquet(
             os.path.join(d, "documents.parquet")
         )
-        clear_table_cache()
+        cache.clear()
         try:
             rows = sorted(
                 ext_chunk_windows(spark, d).collect(),
                 key=lambda r: r["chunk_id"],
             )
         finally:
-            clear_table_cache()
+            cache.clear()
     # chunk i starts at i*STRIDE and holds min(CHUNK_W, n - i*STRIDE)
     assert len(rows) == (n_tokens + STRIDE - 1) // STRIDE
     seen = set()
@@ -262,7 +266,6 @@ def _write_docs(spark, rows, d):
 
 def test_corpus_profile_integer_median(spark, tmp_path):
     from bigdata_spark_realtime_spark.plans.ext_profile import ext_corpus_profile
-    from bigdata_spark_realtime_spark.sources.tables import clear_table_cache
 
     # group en/s1: token counts 1, 3, 10 -> median 3 (odd count)
     # group de/s2: token counts 2, 4    -> median (2+4) DIV 2 = 3 (even)
@@ -275,11 +278,11 @@ def test_corpus_profile_integer_median(spark, tmp_path):
     ]
     d = str(tmp_path)
     _write_docs(spark, rows, d)
-    clear_table_cache()
+    cache.clear()
     try:
         got = {(r["lang"], r["source"]): r for r in ext_corpus_profile(spark, d).collect()}
     finally:
-        clear_table_cache()
+        cache.clear()
     en = got[("en", "s1")]
     assert (en["n_docs"], en["total_tokens"], en["median_tokens"]) == (3, 14, 3)
     assert (en["min_tokens"], en["max_tokens"]) == (1, 10)
@@ -290,7 +293,6 @@ def test_corpus_profile_integer_median(spark, tmp_path):
 def test_source_overlap_planted_shared_window(spark, tmp_path):
     from bigdata_spark_realtime_spark.plans.ext_profile import ext_source_overlap
     from bigdata_spark_realtime_spark.plans.ext_substring import SPAN_W
-    from bigdata_spark_realtime_spark.sources.tables import clear_table_cache
 
     shared = " ".join(f"s{i}" for i in range(SPAN_W))
     rows = [
@@ -300,14 +302,14 @@ def test_source_overlap_planted_shared_window(spark, tmp_path):
     ]
     d = str(tmp_path)
     _write_docs(spark, rows, d)
-    clear_table_cache()
+    cache.clear()
     try:
         got = {
             (r["source_a"], r["source_b"]): r["n_shared_windows"]
             for r in ext_source_overlap(spark, d).collect()
         }
     finally:
-        clear_table_cache()
+        cache.clear()
     # exactly the one planted window shared between A and B; C clean
     assert got == {("srcA", "srcB"): 1}
 
@@ -326,16 +328,15 @@ def test_classifier_score_matches_manual_dot_product(spark, tmp_path):
         CLF_W,
         ext_quality_classifier,
     )
-    from bigdata_spark_realtime_spark.sources.tables import clear_table_cache
 
     rows = [(1, "alpha beta gamma", "en", "s1"), (2, "solo", "en", "s1")]
     d = str(tmp_path)
     _write_docs(spark, rows, d)
-    clear_table_cache()
+    cache.clear()
     try:
         got = {r["doc_id"]: r for r in ext_quality_classifier(spark, d).collect()}
     finally:
-        clear_table_cache()
+        cache.clear()
     w = np.array(CLF_W, dtype=np.int64)
     # doc 1: 3 unigrams + 2 bigrams = 5 features
     feats = ["alpha", "beta", "gamma", "alpha beta", "beta gamma"]
@@ -356,16 +357,15 @@ def test_classifier_drops_null_text(spark, tmp_path):
     from bigdata_spark_realtime_spark.plans.ext_quality import (
         ext_quality_classifier,
     )
-    from bigdata_spark_realtime_spark.sources.tables import clear_table_cache
 
     rows = [(1, "alpha beta", "en", "s1"), (2, None, "en", "s1"), (3, "", "en", "s1")]
     d = str(tmp_path)
     _write_docs(spark, rows, d)
-    clear_table_cache()
+    cache.clear()
     try:
         got = {r["doc_id"]: r for r in ext_quality_classifier(spark, d).collect()}
     finally:
-        clear_table_cache()
+        cache.clear()
     assert set(got) == {1, 3}  # NULL dropped; empty text scores as [""]
     assert got[3]["n_features"] == 1
 
@@ -383,7 +383,6 @@ def test_dsir_prefers_target_like_documents(spark, tmp_path):
     import hashlib
 
     from bigdata_spark_realtime_spark.plans import ext_dsir
-    from bigdata_spark_realtime_spark.sources.tables import clear_table_cache
 
     def in_slice(doc_id: int) -> bool:
         h = int(hashlib.md5(f"dsir|{doc_id}".encode()).hexdigest()[:8], 16)
@@ -401,23 +400,109 @@ def test_dsir_prefers_target_like_documents(spark, tmp_path):
     rows += [(i, offtarget_text, "en", "s1") for i in other_ids[2:]]
     d = str(tmp_path)
     _write_docs(spark, rows, d)
-    clear_table_cache()
-    ext_dsir._DSIR_CACHE.clear()
+    cache.clear()
     try:
         got = {
             r["doc_id"]: r for r in ext_dsir.ext_dsir_select(spark, d).collect()
         }
     finally:
-        clear_table_cache()
-        ext_dsir._DSIR_CACHE.clear()
+        cache.clear()
     assert got[probe_like]["dsir_weight"] > got[probe_off]["dsir_weight"]
     assert got[probe_like]["dsir_keep"] == "keep"
     assert got[probe_off]["dsir_keep"] == "drop"
     # the model is fixed-size by construction — DSIR's scale guarantee
     ratio = ext_dsir.train_dsir(spark, d)
     assert len(ratio) == ext_dsir.DSIR_BUCKETS
-    clear_table_cache()
-    ext_dsir._DSIR_CACHE.clear()
+    cache.clear()
+
+
+TEXTS = [
+    "hello world hello world again",
+    "a b c a b c a",
+    "",
+    "single",
+    "x " * 60 + "y",
+    "unicode ünïcödé tøken ünïcödé tøken",
+    "the quick brown fox jumps over the lazy dog",
+    " leading and  double  spaces ",
+]
+
+
+def _old_h32(strings):
+    return np.fromiter(
+        (int(hashlib.md5(s.encode()).hexdigest()[:8], 16) for s in strings),
+        np.int64,
+        len(strings),
+    )
+
+
+def _feats(text):
+    toks = ("" if text is None else text).split(" ")
+    return toks + [
+        " ".join(toks[i : i + 2]) for i in range(len(toks) - 1)
+    ]
+
+
+def test_dsir_score_kernel_matches_per_row_reference():
+    rng = np.random.RandomState(7)
+    ratio = rng.randint(0, 10 * D.SCALE, size=D.DSIR_BUCKETS).astype(np.int64)
+    bc = type("B", (), {"value": ratio})()
+    pdf = pd.DataFrame(
+        {
+            "doc_id": list(range(len(TEXTS))) + [99],
+            "text": TEXTS + [None],
+        }
+    )
+    out = pd.concat(list(D.make_score_kernel(bc)([pdf])), ignore_index=True)
+    got = {r.doc_id: (r.n_feats, r.dsir_weight) for r in out.itertuples()}
+    assert 99 not in got  # NULL text drops, as before
+    for i, t in enumerate(TEXTS):
+        feats = _feats(t)
+        bs = _old_h32(feats) % D.DSIR_BUCKETS
+        # the exact old per-row arithmetic: Python int sum, floor div
+        want_w = int(ratio[bs].sum()) // len(feats)
+        assert got[i] == (len(feats), want_w), (i, t)
+
+
+def test_dsir_score_kernel_empty_batch_and_all_null():
+    bc = type("B", (), {"value": np.ones(D.DSIR_BUCKETS, dtype=np.int64)})()
+    empty = pd.DataFrame({"doc_id": pd.Series([], dtype="int64"), "text": []})
+    nulls = pd.DataFrame({"doc_id": [1, 2], "text": [None, None]})
+    assert list(D.make_score_kernel(bc)([empty])) == []
+    assert list(D.make_score_kernel(bc)([nulls])) == []
+
+
+def test_dsir_trained_ratio_matches_per_row_reference(spark, sf_dir):
+    import os
+
+    path = os.path.join(sf_dir, "documents.parquet")
+    cache.clear()
+    got = D.train_dsir(spark, sf_dir)
+
+    # old per-row census arithmetic over the same corpus
+    docs = pd.read_parquet(path)
+    raw = np.zeros(D.DSIR_BUCKETS, dtype=np.int64)
+    tgt = np.zeros(D.DSIR_BUCKETS, dtype=np.int64)
+    for doc_id, text in zip(docs["doc_id"], docs["text"]):
+        if text is None:
+            continue
+        feats = _feats(text)
+        bs = _old_h32(feats) % D.DSIR_BUCKETS
+        counts = np.bincount(bs, minlength=D.DSIR_BUCKETS)
+        raw += counts
+        key = f"dsir|{doc_id}".encode()
+        if int(hashlib.md5(key).hexdigest()[:8], 16) % 100 < D.TARGET_PCT:
+            tgt += counts
+    tr, tt = int(raw.sum()), int(tgt.sum())
+    want = np.array(
+        [
+            D.SCALE * (int(tgt[b]) + 1) * (tr + D.DSIR_BUCKETS)
+            // ((int(raw[b]) + 1) * (tt + D.DSIR_BUCKETS))
+            for b in range(D.DSIR_BUCKETS)
+        ],
+        dtype=np.int64,
+    )
+    assert (np.asarray(got) == want).all()
 
 
 # ---------------------------------------------------------------------------
@@ -469,7 +554,6 @@ def test_curation_scored_survivors_pass_standalone_gates(spark, sf_dir):
 
 def test_bm25_term_stuffed_doc_ranks_first(spark, tmp_path):
     from bigdata_spark_realtime_spark.plans.ext_bm25 import ext_bm25_search
-    from bigdata_spark_realtime_spark.sources.tables import clear_table_cache
 
     rows = [
         (1, "spark window agg spark window agg spark", "en", "s1"),
@@ -478,17 +562,39 @@ def test_bm25_term_stuffed_doc_ranks_first(spark, tmp_path):
     ]
     d = str(tmp_path)
     _write_docs(spark, rows, d)
-    clear_table_cache()
+    cache.clear()
     try:
         out = ext_bm25_search(spark, d).collect()
     finally:
-        clear_table_cache()
+        cache.clear()
     sw = sorted(
         (r for r in out if r["query_id"] == "q_spark_window"),
         key=lambda r: r["rnk"],
     )
     assert sw and sw[0]["doc_id"] == 1  # all three query terms, repeated
     assert {r["doc_id"] for r in sw} == {1, 2}  # doc 3 has no query term
+
+
+def test_bm25_query_terms_filter_literally(spark, tmp_path, monkeypatch):
+    """Query terms reach the token filter as values, never as SQL text:
+    a term holding a quote or a backslash matches only itself."""
+    from bigdata_spark_realtime_spark.plans import ext_bm25
+
+    monkeypatch.setattr(
+        ext_bm25, "QUERIES", {"q_quote": "it's", "q_slash": "a\\b"}
+    )
+    rows = [
+        (1, "it's here it's", "en", "s1"),
+        (2, "a\\b there", "en", "s1"),
+        (3, "its ab a\\\\b it''s", "en", "s1"),
+    ]
+    d = str(tmp_path)
+    _write_docs(spark, rows, d)
+    got = {
+        (r["query_id"], r["doc_id"])
+        for r in ext_bm25.ext_bm25_search(spark, d).collect()
+    }
+    assert got == {("q_quote", 1), ("q_slash", 2)}
 
 
 def test_hybrid_rrf_rewards_presence_in_both_rankings(spark, sf_dir):
@@ -558,7 +664,6 @@ def test_bpe_merges_counts_planted_pairs(spark, tmp_path):
     repetitions — the BPE property boilerplate doc-freq would miss)
     must rank first with its exact occurrence count."""
     from bigdata_spark_realtime_spark.plans.ext_bpe import ext_bpe_merges
-    from bigdata_spark_realtime_spark.sources.tables import clear_table_cache
 
     rows = [
         (1, "a b a b a b", "en", "s1"),   # (a,b) x3, (b,a) x2
@@ -567,11 +672,11 @@ def test_bpe_merges_counts_planted_pairs(spark, tmp_path):
     ]
     d = str(tmp_path)
     _write_docs(spark, rows, d)
-    clear_table_cache()
+    cache.clear()
     try:
         got = ext_bpe_merges(spark, d).collect()
     finally:
-        clear_table_cache()
+        cache.clear()
     first = got[0]
     assert (first["w1"], first["w2"], first["pair_count"], first["rnk"]) == (
         "a", "b", 4, 1,

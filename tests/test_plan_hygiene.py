@@ -727,3 +727,39 @@ def test_rollup_cube_grand_total_branch_reads_the_cache(spark, sf_dir):
         # whose build plan the formatted tree prints exactly once
         expands = len(re.findall(r"\(\d+\) Expand", plan))
         assert expands == 1, (name, expands)
+
+
+def test_cache_py_is_the_only_memo():
+    """bigdata_spark_realtime_spark/cache.py is the engine's one memo:
+    no other module may define a module-level ``_*CACHE``/``_*MEMO``
+    store or import ``file_sig`` to build its own staleness key."""
+    import ast
+    import pathlib
+
+    import bigdata_spark_realtime_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    memo_name = re.compile(r"_[A-Z_]*(CACHE|MEMO)")
+    offenders = []
+    for path in sorted(root.rglob("*.py")):
+        if path == root / "cache.py":
+            continue
+        tree = ast.parse(path.read_text(), str(path))
+        for node in tree.body:
+            targets = (
+                node.targets if isinstance(node, ast.Assign)
+                else [node.target] if isinstance(node, ast.AnnAssign)
+                else []
+            )
+            offenders += [
+                f"{path.relative_to(root)}: {t.id}"
+                for t in targets
+                if isinstance(t, ast.Name) and memo_name.fullmatch(t.id)
+            ]
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.ImportFrom)
+                and any(a.name == "file_sig" for a in node.names)
+            ) or (isinstance(node, ast.Attribute) and node.attr == "file_sig"):
+                offenders.append(f"{path.relative_to(root)}: uses file_sig")
+    assert not offenders, offenders

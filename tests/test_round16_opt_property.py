@@ -1,9 +1,10 @@
 """Round-16 optimization-round property pins.
 
 The r16 optimization round (a) factorized the DSIR census/score
-kernels (plans/ext_dsir.py) the way r15 factorized the classifier/LM
-kernels, (b) added a total-cells gate to the SimHash counts@contrib
-fast path (operators/shingling.py, r15 ADVICE), and (c) introduced the
+kernels (plans/ext_dsir.py; pinned in test_ext_corpus_ops.py's DSIR
+section) the way r15 factorized the classifier/LM kernels, (b) added
+a total-cells gate to the SimHash counts@contrib fast path
+(operators/shingling.py, r15 ADVICE), and (c) introduced the
 size-gated ``scoped_persist_if_large`` helper (plans/corpus.py) used by
 the bm25/tfidf single-scan rewrites. Each rewrite must be BIT-IDENTICAL
 to the shape it replaced — these tests pin the kernels against direct
@@ -17,12 +18,10 @@ from __future__ import annotations
 import hashlib
 
 import numpy as np
-import pandas as pd
 import pytest
 
 from bigdata_spark_realtime_spark.operators import shingling as S
 from bigdata_spark_realtime_spark.plans import corpus as C
-from bigdata_spark_realtime_spark.plans import ext_dsir as D
 
 TEXTS = [
     "hello world hello world again",
@@ -34,88 +33,6 @@ TEXTS = [
     "the quick brown fox jumps over the lazy dog",
     " leading and  double  spaces ",
 ]
-
-
-def _old_h32(strings):
-    return np.fromiter(
-        (int(hashlib.md5(s.encode()).hexdigest()[:8], 16) for s in strings),
-        np.int64,
-        len(strings),
-    )
-
-
-def _feats(text):
-    toks = ("" if text is None else text).split(" ")
-    return toks + [
-        " ".join(toks[i : i + 2]) for i in range(len(toks) - 1)
-    ]
-
-
-# ---------------------------------------------------------------- DSIR
-
-
-def test_dsir_score_kernel_matches_per_row_reference():
-    rng = np.random.RandomState(7)
-    ratio = rng.randint(0, 10 * D.SCALE, size=D.DSIR_BUCKETS).astype(np.int64)
-    bc = type("B", (), {"value": ratio})()
-    pdf = pd.DataFrame(
-        {
-            "doc_id": list(range(len(TEXTS))) + [99],
-            "text": TEXTS + [None],
-        }
-    )
-    out = pd.concat(list(D.make_score_kernel(bc)([pdf])), ignore_index=True)
-    got = {r.doc_id: (r.n_feats, r.dsir_weight) for r in out.itertuples()}
-    assert 99 not in got  # NULL text drops, as before
-    for i, t in enumerate(TEXTS):
-        feats = _feats(t)
-        bs = _old_h32(feats) % D.DSIR_BUCKETS
-        # the exact old per-row arithmetic: Python int sum, floor div
-        want_w = int(ratio[bs].sum()) // len(feats)
-        assert got[i] == (len(feats), want_w), (i, t)
-
-
-def test_dsir_score_kernel_empty_batch_and_all_null():
-    bc = type("B", (), {"value": np.ones(D.DSIR_BUCKETS, dtype=np.int64)})()
-    empty = pd.DataFrame({"doc_id": pd.Series([], dtype="int64"), "text": []})
-    nulls = pd.DataFrame({"doc_id": [1, 2], "text": [None, None]})
-    assert list(D.make_score_kernel(bc)([empty])) == []
-    assert list(D.make_score_kernel(bc)([nulls])) == []
-
-
-def test_dsir_trained_ratio_matches_per_row_reference(spark, sf_dir):
-    import os
-
-    from bigdata_spark_realtime_spark.sources.tables import _file_sig
-
-    path = os.path.join(sf_dir, "documents.parquet")
-    D._DSIR_CACHE.pop((os.path.abspath(path), _file_sig(path)), None)
-    got = D.train_dsir(spark, sf_dir)
-
-    # old per-row census arithmetic over the same corpus
-    docs = pd.read_parquet(path)
-    raw = np.zeros(D.DSIR_BUCKETS, dtype=np.int64)
-    tgt = np.zeros(D.DSIR_BUCKETS, dtype=np.int64)
-    for doc_id, text in zip(docs["doc_id"], docs["text"]):
-        if text is None:
-            continue
-        feats = _feats(text)
-        bs = _old_h32(feats) % D.DSIR_BUCKETS
-        counts = np.bincount(bs, minlength=D.DSIR_BUCKETS)
-        raw += counts
-        key = f"dsir|{doc_id}".encode()
-        if int(hashlib.md5(key).hexdigest()[:8], 16) % 100 < D.TARGET_PCT:
-            tgt += counts
-    tr, tt = int(raw.sum()), int(tgt.sum())
-    want = np.array(
-        [
-            D.SCALE * (int(tgt[b]) + 1) * (tr + D.DSIR_BUCKETS)
-            // ((int(raw[b]) + 1) * (tt + D.DSIR_BUCKETS))
-            for b in range(D.DSIR_BUCKETS)
-        ],
-        dtype=np.int64,
-    )
-    assert (np.asarray(got) == want).all()
 
 
 # ------------------------------------------------- SimHash cell gate

@@ -12,6 +12,8 @@ kept), or signatures silently diverge between engines.
 
 from __future__ import annotations
 
+import os
+
 import duckdb
 import pytest
 
@@ -158,18 +160,31 @@ def test_repetition_metrics_edges(spark, edge_docs_df):
     assert m[5]["n_tokens"] == 7
 
 
-def test_candidate_memo_reuses_one_frame(spark, sf_dir):
+def test_candidate_memo_reuses_one_frame(spark, sf_dir, tmp_path, monkeypatch):
     """minhash_lsh / resolve / ngram_jaccard must consume the SAME
-    candidate DataFrame object (plans/ext_dedup._CAND_MEMO) so the
+    candidate DataFrame object (plans/ext_dedup._candidates) so the
     persisted tagged frame materializes once per session — two pickles
     of the kernel closure are different bytes, so canonical-plan
     caching cannot unify rebuilt pipelines."""
-    from bigdata_spark_realtime_spark.plans.ext_dedup import (
-        _candidates_from_docs,
-    )
-    from bigdata_spark_realtime_spark.sources.tables import load_table
+    import shutil
 
-    docs = load_table(spark, sf_dir, "documents")
-    assert _candidates_from_docs(docs) is _candidates_from_docs(docs)
-    other = docs.limit(5)
-    assert _candidates_from_docs(other) is not _candidates_from_docs(docs)
+    from bigdata_spark_realtime_spark.plans import ext_dedup
+
+    seen = []
+    memoized = ext_dedup._candidates
+
+    def spy(spark_, sf_dir_):
+        seen.append(memoized(spark_, sf_dir_))
+        return seen[-1]
+
+    monkeypatch.setattr(ext_dedup, "_candidates", spy)
+    ext_dedup.ext_dedup_minhash_lsh(spark, sf_dir)
+    ext_dedup.ext_dedup_resolve(spark, sf_dir)
+    ext_dedup.ext_dedup_ngram_jaccard(spark, sf_dir)
+    assert len(seen) == 3 and seen[0] is seen[1] is seen[2]
+
+    # a different documents table is a different candidate frame
+    shutil.copyfile(
+        os.path.join(sf_dir, "documents.parquet"), tmp_path / "documents.parquet"
+    )
+    assert memoized(spark, str(tmp_path)) is not seen[0]

@@ -252,10 +252,25 @@ def test_events_ts_kind_classification(tmp_path):
         assert events_ts_kind(path) == want, tag
 
 
-def test_table_cache_misses_on_inplace_regeneration(tmp_path, spark):
-    """The per-session memo is keyed by (path, mtime_ns, size): replacing
-    a parquet file in place — as a testdata regeneration would — must
-    miss the cache and re-read the new footer, not serve the stale plan."""
+def _regenerate(path: str, table) -> None:
+    """Rewrite a parquet file in place AND force a distinct mtime (some
+    filesystems have coarse timestamp granularity)."""
+    pq.write_table(table, path)
+    st = os.stat(path)
+    os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000))
+
+
+def test_table_cache_misses_on_inplace_regeneration(tmp_path, spark, sf_dir):
+    """Every memoized artifact is keyed by its table's (path, mtime_ns,
+    size): replacing a parquet file in place — as a testdata
+    regeneration would — must miss and rebuild from the new file, not
+    serve the stale value; an unchanged file serves the same object."""
+    from bigdata_spark_realtime_spark.plans import (
+        ext_dedup,
+        ext_dsir,
+        ext_embed,
+        ext_lm,
+    )
     from bigdata_spark_realtime_spark.sources.tables import load_table
 
     path = str(tmp_path / "region.parquet")
@@ -263,17 +278,76 @@ def test_table_cache_misses_on_inplace_regeneration(tmp_path, spark):
     df1 = load_table(spark, str(tmp_path), "region")
     assert df1.count() == 3
 
-    # rewrite in place with different contents AND force a distinct
-    # mtime (some filesystems have coarse timestamp granularity)
-    pq.write_table(pa.table({"r_regionkey": pa.array([0, 1], pa.int64())}), path)
-    st = os.stat(path)
-    os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000))
-
+    _regenerate(path, pa.table({"r_regionkey": pa.array([0, 1], pa.int64())}))
     df2 = load_table(spark, str(tmp_path), "region")
     assert df2.count() == 2
 
     # and an unchanged file still hits the memo (same plan object back)
     assert load_table(spark, str(tmp_path), "region") is df2
+
+    d = str(tmp_path)
+    artifacts = {
+        "documents": [
+            lambda: load_table(spark, d, "documents"),
+            lambda: ext_dedup._candidates(spark, d),
+            lambda: ext_lm.train_lm(spark, d),
+            lambda: ext_dsir.train_dsir(spark, d),
+        ],
+        "embeddings": [
+            lambda: load_table(spark, d, "embeddings"),
+            lambda: ext_embed._centroid_artifact(spark, d),
+        ],
+    }
+    for table, builds in artifacts.items():
+        full = pq.read_table(os.path.join(sf_dir, f"{table}.parquet"))
+        path = os.path.join(d, f"{table}.parquet")
+        pq.write_table(full, path)
+        before = [build() for build in builds]
+        assert all(build() is v for build, v in zip(builds, before)), table
+
+        half = full.slice(0, full.num_rows // 2)
+        _regenerate(path, half)
+        after = [build() for build in builds]
+        assert all(v1 is not v0 for v0, v1 in zip(before, after)), table
+        assert after[0].count() == half.num_rows
+        assert all(build() is v for build, v in zip(builds, after)), table
+
+
+def test_memo_evicts_least_recently_used(tmp_path, monkeypatch):
+    """Past MAX_ENTRIES a session's least-recently-used entry is
+    evicted and a just-hit one is kept; entries die with the session."""
+    import gc
+
+    from bigdata_spark_realtime_spark import cache
+
+    class Session:  # any weak-referenceable key stands in for a SparkSession
+        pass
+
+    monkeypatch.setattr(cache, "MAX_ENTRIES", 3)
+    for t in "abcd":
+        (tmp_path / f"{t}.parquet").write_bytes(t.encode())
+    session = Session()
+    built = []
+
+    def get(t):
+        return cache.memo(
+            session, str(tmp_path), t, "lru", lambda: built.append(t) or object()
+        )
+
+    a = get("a")
+    get("b")
+    get("c")
+    assert get("a") is a  # hit: "a" is now the most recently used
+    get("d")  # past the cap: evicts "b", the least recently used
+    assert get("a") is a
+    assert built == list("abcd")
+    get("b")
+    assert built == list("abcdb")
+    assert cache.entries()["lru"] == 3
+
+    del session
+    gc.collect()
+    assert "lru" not in cache.entries()
 
 
 def test_scoped_persist_bounds_cache_entries(spark):
