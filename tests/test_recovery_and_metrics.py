@@ -13,7 +13,12 @@ from bigdata_spark_realtime_spark.sources.kafka import (
     kafka_source_options,
     with_kafka_payload,
 )
-from bigdata_spark_realtime_spark.streaming.metrics import BatchMetrics, with_batch_counts
+from bigdata_spark_realtime_spark.streaming.metrics import (
+    DURATIONS,
+    STATE_FIELDS,
+    BatchMetrics,
+    with_batch_counts,
+)
 from bigdata_spark_realtime_spark.streaming.sinks import foreach_batch_upsert
 
 
@@ -92,6 +97,20 @@ def test_observe_metrics_per_batch(spark, tmp_path):
     batches = listener.metrics["ingest"]
     assert sum(b["rows"] for b in batches) == 3
     assert len(batches) >= 2  # one observation per micro-batch
+
+    # one progress summary per micro-batch: rates, phase times, state size
+    summaries = listener.batches
+    assert [s["batchId"] for s in summaries] == list(range(len(summaries)))
+    assert sum(s["numInputRows"] for s in summaries) == 3
+    for s in summaries:
+        assert set(s) == {"batchId", "numInputRows", "inputRowsPerSecond",
+                          "processedRowsPerSecond", "durationMs", *STATE_FIELDS}
+        assert isinstance(s["inputRowsPerSecond"], float)
+        assert isinstance(s["processedRowsPerSecond"], float)
+        assert tuple(s["durationMs"]) == DURATIONS
+        assert all(isinstance(v, int) and v >= 0 for v in s["durationMs"].values())
+        assert s["durationMs"]["triggerExecution"] >= s["durationMs"]["addBatch"]
+        assert {s[k] for k in STATE_FIELDS} == {0}  # no stateful operator here
 
 
 def test_kafka_builders(spark):
