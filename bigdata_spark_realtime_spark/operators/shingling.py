@@ -517,10 +517,8 @@ def simhash_fingerprints(
 # ---------------------------------------------------------------------------
 # LSH candidate-pair generation (shared by the MinHash / SimHash / SRP
 # dedup families). Lives HERE — not in plans/ext_dedup.py, whose import
-# registers seven gate queries — so a plan module can build bucket
-# pairs without dragging the dedup family's registrations into the
-# correctness-gate window (registration order is a documented contract,
-# plans/registry.py).
+# registers seven queries — so any module can build bucket pairs
+# without importing the dedup family.
 # ---------------------------------------------------------------------------
 
 #: buckets larger than this skip the collect_list path: one degenerate

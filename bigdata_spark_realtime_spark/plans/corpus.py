@@ -3,10 +3,8 @@
 Text normalization and embedding-typing primitives used across the
 dedup / text / similarity / decontamination plan modules. They live in
 their own module so that importing a helper never imports a module
-that *registers queries* — registration order is a documented contract
-(plans/registry.py: the external gate windows the first 50 registered
-queries), and a helper import must not drag another suite's
-registrations into the window as a side effect.
+that *registers queries*: a caller that needs one expression should not
+pay for, or depend on, another suite's query definitions.
 """
 
 from __future__ import annotations
@@ -52,9 +50,8 @@ def emb_double(df: DataFrame) -> DataFrame:
 # serving suites (`app/dwd_DauApp.scala:128-145`). The star schema has
 # no birthday/gender columns; both are derived deterministically from
 # c_custkey so the two engines agree. They live HERE (not in
-# plans/scalar_fns.py, where the f4/j1 queries use them) so that a
-# refresh-rotation head containing joins/serving/aggregations never
-# drags scalar_fns' seven registrations into the gate window.
+# plans/scalar_fns.py, where the f4/j1 queries use them) so that joins,
+# serving and aggregations share them without importing scalar_fns.
 # ---------------------------------------------------------------------------
 
 BIRTHDAY_SQL = "DATE '1970-01-01' + CAST(c_custkey * 37 % 15000 AS INT)"

@@ -7,7 +7,7 @@ formulation — ``ntile(B) OVER (ORDER BY value)`` — is a GLOBAL sort +
 rank: the one plan shape this engine bans at 100 TB.
 
 Scale-safe shape: reuse the deterministic integer quantile-sketch keys
-(`plans/ext_sketch_tail.py` — DDSketch-style octave buckets, no float
+(`plans/ext_sketch.py` — DDSketch-style octave buckets, no float
 log anywhere). Per feature group: (1) one map-side-combined shuffle
 builds the (group, bucket) histogram — register-sized, a few hundred
 rows per group regardless of input size; (2) a window over that TINY

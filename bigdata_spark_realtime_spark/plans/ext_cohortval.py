@@ -212,3 +212,60 @@ def _cohort_grid_cum(grid: DataFrame) -> DataFrame:
         "cents",
         F.sum("cents").over(wcum).cast("bigint").alias("cum_cents"),
     )
+
+
+@register("stream_cohort_value", oracle=COHORT_VALUE_ORACLE)
+def stream_cohort_value(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Cohort LTV as continuous intake — the live acquisition-value
+    curve: TWO complete-mode states, both associative — per-user
+    first-seen day (a min) and per-(user, day) purchase count/cent
+    sums (user × day bounded). The drained frames join batch-side (one
+    side renamed: both derive from memory-sink relations), re-aggregate
+    into the (cohort, offset) grid, and run the same cumulative
+    projection. Oracle = the batch SQL."""
+    from bigdata_spark_realtime_spark.plans.streaming_queries import (
+        _drain_to_memory,
+        _events_stream,
+    )
+
+    ev = _events_stream(spark, sf_dir)
+    firsts_state = ev.groupBy("user_id").agg(
+        F.min(F.expr("unix_micros(event_time) div 86400000000")).alias(
+            "cohort_day"
+        )
+    )
+    spend_state = (
+        ev.where(F.col("event_type") == "purchase")
+        .select(
+            "user_id",
+            F.expr("unix_micros(event_time) div 86400000000").alias("day"),
+            F.floor(F.col("value") * 100).cast("bigint").alias("v100"),
+        )
+        .groupBy("user_id", "day")
+        .agg(F.count(F.lit(1)).alias("n"), F.sum("v100").alias("cents"))
+    )
+    firsts = _drain_to_memory(firsts_state, spark, output_mode="complete").select(
+        F.col("user_id").alias("uid_f"),
+        F.col("cohort_day").cast("bigint").alias("cohort_day"),
+    )
+    spend = _drain_to_memory(spend_state, spark, output_mode="complete").select(
+        "user_id",
+        F.col("day").cast("bigint").alias("day"),
+        F.col("n").cast("bigint").alias("n"),
+        F.col("cents").cast("bigint").alias("cents"),
+    )
+    grid = (
+        spend.join(firsts, spend["user_id"] == firsts["uid_f"])
+        .select(
+            "cohort_day",
+            (F.col("day") - F.col("cohort_day")).alias("day_offset"),
+            "n",
+            "cents",
+        )
+        .groupBy("cohort_day", "day_offset")
+        .agg(
+            F.sum("n").cast("bigint").alias("n_purchases"),
+            F.sum("cents").cast("bigint").alias("cents"),
+        )
+    )
+    return _cohort_grid_cum(grid)

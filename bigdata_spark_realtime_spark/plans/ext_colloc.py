@@ -129,3 +129,69 @@ def ext_bigram_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     return scored.orderBy(
         F.col("lift_q").desc(), F.col("cab").desc(), "w1", "w2"
     ).limit(PMI_TOP_K)
+
+
+@register("stream_bigram_pmi", oracle=BIGRAM_PMI_ORACLE)
+def stream_bigram_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Collocation mining as continuous intake — the live phrase
+    tracker: unigram and bigram counts accumulate in the state store
+    as two complete-mode aggregations over the document stream
+    (addition is associative — any arrival order converges; state is
+    vocabulary-/bigram-vocabulary-bounded, the same cardinality any
+    batch count materializes), then the lift scoring and top-K run on
+    the drained count frames exactly like the batch operator
+    (`plans/ext_colloc.ext_bigram_pmi`). Oracle = the batch SQL."""
+    from bigdata_spark_realtime_spark.plans.streaming_queries import (
+        _docs_stream,
+        _drain_to_memory,
+    )
+
+    toks = _docs_stream(spark, sf_dir).select(
+        F.split("text", " ", -1).alias("t")
+    )
+    uni_state = (
+        toks.select(F.explode("t").alias("w"))
+        .groupBy("w")
+        .agg(F.count(F.lit(1)).alias("cw"))
+    )
+    big_state = (
+        toks.select(
+            F.explode(
+                F.expr(
+                    "zip_with(slice(t, 1, size(t) - 1), "
+                    "slice(t, 2, size(t) - 1), "
+                    "(a, b) -> struct(a AS w1, b AS w2))"
+                )
+            ).alias("p")
+        )
+        .select("p.w1", "p.w2")
+        .groupBy("w1", "w2")
+        .agg(F.count(F.lit(1)).alias("cab"))
+    )
+    uni = _drain_to_memory(uni_state, spark, output_mode="complete").select(
+        "w", F.col("cw").cast("bigint").alias("cw")
+    )
+    bc = (
+        _drain_to_memory(big_state, spark, output_mode="complete")
+        .select("w1", "w2", F.col("cab").cast("bigint").alias("cab"))
+        .where(F.col("cab") >= PMI_MIN_COUNT)
+    )
+    n = uni.agg(F.sum("cw").cast("bigint").alias("n_tokens"))
+    u1 = uni.select(F.col("w").alias("w1"), F.col("cw").alias("c1"))
+    u2 = uni.select(F.col("w").alias("w2"), F.col("cw").alias("c2"))
+    scored = (
+        bc.join(u1, "w1")
+        .join(u2, "w2")
+        .crossJoin(F.broadcast(n))
+        .select(
+            "w1",
+            "w2",
+            "cab",
+            F.expr(
+                f"CAST({PMI_SCALE} * cab * n_tokens DIV (c1 * c2) AS BIGINT)"
+            ).alias("lift_q"),
+        )
+    )
+    return scored.orderBy(
+        F.col("lift_q").desc(), F.col("cab").desc(), "w1", "w2"
+    ).limit(PMI_TOP_K)

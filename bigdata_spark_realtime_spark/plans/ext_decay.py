@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from bigdata_spark_realtime_spark.functions import hashing as H
+from bigdata_spark_realtime_spark.plans.ext_windows2 import _item_expr
 from bigdata_spark_realtime_spark.plans.registry import register
 from bigdata_spark_realtime_spark.sources.tables import load_table
 
@@ -144,3 +145,36 @@ def ext_weighted_sample_stratified(
         .where(F.col("rn") <= STRATIFIED_K)
         .select("event_id", "event_type", "w_cents", "priority")
     )
+
+
+@register("stream_decayed_leaderboard", oracle=DECAY_ORACLE)
+def stream_decayed_leaderboard(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Decayed ranking as continuous intake — the live leaderboard:
+    (item, day) cent sums accumulate in complete mode (associative,
+    items × days state), then the integer decay shift against the
+    drained max-day anchor and the top-K run exactly like the batch
+    operator. Oracle = the batch SQL."""
+    from bigdata_spark_realtime_spark.plans.streaming_queries import (
+        _drain_to_memory,
+        _events_stream,
+    )
+
+    ev = _events_stream(spark, sf_dir)
+    state = (
+        ev.where(
+            F.col("event_type").isin("click", "view", "purchase")
+            & F.col("props").isNotNull()
+        )
+        .select(
+            _item_expr(),
+            F.expr("unix_micros(event_time) div 86400000000").alias("day"),
+            F.floor(F.col("value") * 100).cast("bigint").alias("v100"),
+        )
+        .where(F.col("item").isNotNull())
+        .groupBy("item", "day")
+        .agg(F.sum("v100").alias("v100"))
+    )
+    id_day = _drain_to_memory(state, spark, output_mode="complete").select(
+        "item", "day", F.col("v100").cast("bigint").alias("v100")
+    )
+    return _leaderboard_from_partials(id_day)

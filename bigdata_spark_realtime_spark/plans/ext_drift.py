@@ -226,3 +226,58 @@ def ext_event_mix_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
     )
     return _gini_from_counts(d)
+
+
+@register("stream_event_mix_gini", oracle=GINI_ORACLE)
+def stream_event_mix_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Mix impurity as continuous intake — the live composition
+    monitor: (day, type) counts accumulate as one complete-mode
+    aggregation (calendar-bounded state), then the permille-quantized
+    Gini projection runs on the drained partials exactly like the
+    batch operator. Oracle = the batch SQL."""
+    from bigdata_spark_realtime_spark.plans.streaming_queries import (
+        _drain_to_memory,
+        _events_stream,
+    )
+
+    ev = _events_stream(spark, sf_dir)
+    state = ev.groupBy(
+        F.date_format(F.date_trunc("day", "event_time"), "yyyy-MM-dd").alias(
+            "day"
+        ),
+        "event_type",
+    ).agg(F.count(F.lit(1)).alias("c"))
+    d = _drain_to_memory(state, spark, output_mode="complete").select(
+        "day", "event_type", F.col("c").cast("bigint").alias("c")
+    )
+    return _gini_from_counts(d)
+
+
+@register("stream_distribution_drift", oracle=DRIFT_ORACLE)
+def stream_distribution_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Drift monitoring as continuous intake — the live data-quality
+    gate: (type, day, octave-bucket) counts accumulate as one
+    complete-mode aggregation (bounded by days × types × ~60 buckets),
+    then the midpoint split and cross-multiplied KS run on the drained
+    partials exactly like the batch operator. Oracle = the batch SQL."""
+    from bigdata_spark_realtime_spark.plans.streaming_queries import (
+        _drain_to_memory,
+        _events_stream,
+    )
+
+    ev = _events_stream(spark, sf_dir)
+    state = (
+        ev.where(F.col("value") > 0)
+        .select(
+            "event_type",
+            F.expr("unix_micros(event_time) div 86400000000").alias("day"),
+            F.floor(F.col("value") * 100).cast("bigint").alias("v100"),
+        )
+        .withColumn("bkt", F.expr(_OCTAVE_SPARK))
+        .groupBy("event_type", "day", "bkt")
+        .agg(F.count(F.lit(1)).alias("c"))
+    )
+    d = _drain_to_memory(state, spark, output_mode="complete").select(
+        "event_type", "day", "bkt", F.col("c").cast("bigint").alias("c")
+    )
+    return _drift_from_day_buckets(d)

@@ -297,3 +297,32 @@ def ext_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
         keep=1,
     )
     return keep_by_corpus_mean(scored)
+
+
+@register("stream_dsir_select", oracle=DSIR_ORACLE)
+def stream_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """DSIR selection as continuous intake — the production shape for
+    importance-weighting documents at ingest time: the ratio table is
+    FIXED (trained batch-side on the deterministic 10% hash-slice; a
+    fixed-size model by construction, plans/ext_dsir.train_dsir) and
+    broadcast; the corpus STREAMS through the identical stateless
+    scoring kernel (plans/ext_dsir.make_score_kernel runs unchanged on
+    a streaming frame), per-doc rows append with no streaming state at
+    all. The corpus-mean keep rule is applied to the drained result —
+    in production the mean is a slowly-moving statistic refreshed
+    batch-side, exactly like the model. Oracle = the batch operator's
+    SQL: scoring is per-row and the mean is computed over the same
+    complete corpus, so streamed and batched answers are identical."""
+    from bigdata_spark_realtime_spark.plans.streaming_queries import (
+        _docs_stream,
+        _drain_to_memory,
+    )
+
+    ratio = train_dsir(spark, sf_dir)
+    bc = spark.sparkContext.broadcast(ratio)
+    scored = (
+        _docs_stream(spark, sf_dir)
+        .select("doc_id", "text")
+        .mapInPandas(make_score_kernel(bc), SCORE_SCHEMA)
+    )
+    return keep_by_corpus_mean(_drain_to_memory(scored, spark))

@@ -372,3 +372,76 @@ def ext_centroid_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("label_a", "label_b")
         .agg(F.sum(F.col("cq_a") * F.col("cq_b")).alias("dot_q"))
     )
+
+
+@register("stream_embed_quantize", oracle=QUANTIZE_ORACLE)
+def stream_embed_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """int8 quantization as continuous intake — the production shape
+    for an embedding feed landing in an ANN/KV store: the per-dim
+    scale table is FIXED (fitted batch-side on the standing corpus —
+    64 rows at any scale, plans/ext_embed.fit_scales) and enters each
+    micro-batch as a broadcast stream-static join; vectors STREAM
+    through the identical pure-codegen quantize with zero streaming
+    state (per-row op, append mode). In production the scales refresh
+    batch-side like any model artifact; re-fitting on every batch
+    would let the quantization of old vectors drift. Oracle = the
+    batch operator's SQL: the quantize is per-row and the scales come
+    from the same complete corpus, so streamed == batched exactly."""
+    from bigdata_spark_realtime_spark.plans.streaming_queries import (
+        _drain_to_memory,
+        _embeddings_stream,
+    )
+
+    scales = fit_scales(spark, sf_dir)
+    dims = (
+        _embeddings_stream(spark, sf_dir)
+        .where(F.col("embedding").isNotNull())
+        .select("vec_id", F.posexplode("embedding").alias("dim", "v"))
+    )
+    return _drain_to_memory(quantize_components(dims, scales), spark)
+
+
+@register("stream_embed_centroids", oracle=CENTROIDS_ORACLE)
+def stream_embed_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Label centroids maintained as STATEFUL streaming aggregation —
+    the continuously-refreshed class-prototype store (the statistic
+    `ext_kmeans_assign` and a production quantizer refresh consume).
+    Where the HLL/CMS twins stream mergeable *sketch* state, this
+    streams mergeable *numeric* state: per-(label, dim) running
+    ``(sum(vq), count)`` in Spark's state store, updated per
+    micro-batch in complete mode. Integer sums are associative and
+    accumulation-order-independent, so ANY micro-batch arrival order
+    produces bit-identical state — the drained result hash-matches
+    the batch operator's oracle exactly. State is L x 64 rows
+    (dimension-bounded), never corpus-sized; the truncating-DIV mean
+    is taken on the drained frame, outside the incremental state."""
+    from bigdata_spark_realtime_spark.plans.streaming_queries import (
+        _drain_to_memory,
+        _embeddings_stream,
+    )
+
+    vq = (
+        _embeddings_stream(spark, sf_dir)
+        .where(F.col("embedding").isNotNull())
+        .select("label", F.posexplode("embedding").alias("dim", "v"))
+        .select(
+            "label",
+            "dim",
+            F.floor(
+                F.col("v").cast("double") * F.lit(float(FIXED_POINT))
+            )
+            .cast("bigint")
+            .alias("vq"),
+        )
+    )
+    state = vq.groupBy("label", "dim").agg(
+        F.sum("vq").alias("sum_q"),
+        F.count(F.lit(1)).alias("n_vectors"),
+    )
+    drained = _drain_to_memory(state, spark, output_mode="complete")
+    return drained.select(
+        "label",
+        F.col("dim").cast("int").alias("dim"),
+        F.expr("sum_q DIV n_vectors").alias("centroid_q"),
+        "n_vectors",
+    )

@@ -17,6 +17,11 @@ same key, never a per-user sort of the raw stream.
 * ``ext_retention_cohorts`` — the signup-cohort activity matrix:
   cohort = each user's first-seen day, one row per (cohort_day,
   day_offset) counting distinct users active that day.
+* ``stream_funnel_steps`` — the funnel as continuous intake: the
+  stream keeps only the three step event types, and the staged
+  conditional mins run on the drained rows as window expressions over
+  one user_id partition. Step times are data timestamps, so any
+  micro-batch schedule converges to FUNNEL_ORACLE's three counts.
 
 Exactness: all comparisons are integer epoch-microseconds / DATE
 arithmetic; counts are exact. Timestamps never pass through floats.
@@ -363,9 +368,7 @@ GROUP BY 1, 2
 """
 
 
-# registered by plans/ext_funnel_tail.py — this module sits INSIDE the
-# pinned round-9 gate window, so registering here would splice the
-# window (see registry._PLAN_MODULES)
+@register("ext_event_transitions_daily", oracle=TRANSITIONS_DAILY_ORACLE)
 def ext_event_transitions_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Day-bounded variant of :func:`ext_event_transitions` — the
     production profile the base query's docstring prescribes: the lead
@@ -407,8 +410,7 @@ FROM funnel
 """
 
 
-# registered by plans/ext_funnel_tail.py (splice rule — this module is
-# inside the pinned round-9 gate window)
+@register("ext_funnel_conversion", oracle=CONVERSION_ORACLE)
 def ext_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Step-over-step funnel conversion rates in integer ppm — the
     number product analytics actually reads off the funnel (step 1
@@ -431,4 +433,74 @@ def ext_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .cast("bigint")
         .alias("conv_from_prev_ppm"),
+    )
+
+
+@register("stream_funnel_steps", oracle=FUNNEL_ORACLE)
+def stream_funnel_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Ordered 3-step funnel (7-day completion window) as continuous
+    intake: stateless in-stream filter+projection, staged
+    conditional-min aggregation on the drained step events."""
+    from bigdata_spark_realtime_spark.plans.streaming_queries import (
+        _drain_to_memory,
+        _events_stream,
+    )
+
+    ev_stream = _events_stream(spark, sf_dir)
+    proj = ev_stream.where(
+        F.col("event_type").isin("signup", "click", "purchase")
+    ).select("user_id", "event_type", F.unix_micros("event_time").alias("us"))
+    ev = _drain_to_memory(proj, spark)
+
+    # Join-free staging (the batch plan's per-stage joins would self-join
+    # the memory-sink View, which defeats Spark's self-join attribute
+    # dedup — INTERNAL_ERROR "conflicting references"): the conditional
+    # mins chain as window expressions over ONE user partition instead.
+    # t2's predicate reads the t1 column the previous Window produced, so
+    # Catalyst stacks three Window nodes over a single user_id exchange —
+    # one scan, one shuffle, no per-user sort (unbounded frames need no
+    # orderBy). Semantics identical to FUNNEL_ORACLE's staged mins.
+    w = Window.partitionBy("user_id")
+    typed = ev.withColumn(
+        "t1",
+        F.min(F.when(F.col("event_type") == "signup", F.col("us"))).over(w),
+    )
+    typed = typed.withColumn(
+        "t2",
+        F.min(
+            F.when(
+                (F.col("event_type") == "click") & (F.col("us") > F.col("t1")),
+                F.col("us"),
+            )
+        ).over(w),
+    )
+    typed = typed.withColumn(
+        "t3",
+        F.min(
+            F.when(
+                (F.col("event_type") == "purchase")
+                & (F.col("us") > F.col("t2")),
+                F.col("us"),
+            )
+        ).over(w),
+    )
+    per_user = typed.groupBy("user_id").agg(
+        F.max("t1").alias("t1"), F.max("t2").alias("t2"), F.max("t3").alias("t3")
+    )
+    counts = per_user.agg(
+        F.count("t1").cast("bigint").alias("n1"),
+        F.count("t2").cast("bigint").alias("n2"),
+        F.count(
+            F.when(F.col("t3") - F.col("t1") <= FUNNEL_WINDOW_US, F.lit(1))
+        )
+        .cast("bigint")
+        .alias("n3"),
+    )
+    return counts.selectExpr(
+        "stack(3, 1, 'signup', n1,"
+        "         2, 'click_after_signup', n2,"
+        "         3, 'purchase_in_window', n3)"
+        " AS (step, step_name, n_users)"
+    ).select(
+        F.col("step").cast("int").alias("step"), "step_name", "n_users"
     )

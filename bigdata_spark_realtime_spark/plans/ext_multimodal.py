@@ -18,7 +18,8 @@ from __future__ import annotations
 import os
 import tempfile
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import functions as F
 
 from bigdata_spark_realtime_spark.operators.multimodal import (
     decode_media,
@@ -26,6 +27,7 @@ from bigdata_spark_realtime_spark.operators.multimodal import (
     extract_media_meta,
 )
 from bigdata_spark_realtime_spark.plans.registry import register
+from bigdata_spark_realtime_spark.sources.replay import file_replay_stream
 from bigdata_spark_realtime_spark.sources.tables import load_table
 
 #: versioned fixture root shared by the decode query and its oracle;
@@ -130,11 +132,7 @@ FROM (SELECT doc_id, text FROM documents),
 """
 
 
-# NOTE: frames/resize are REGISTERED by plans/ext_media_tail.py, which
-# sits after the pinned round-6 gate window in registry._PLAN_MODULES —
-# decorating them here would splice two queries into the middle of the
-# first-50 window and silently evict its last two entries from the
-# external gate.
+@register("ext_multimodal_frames", oracle=FRAMES_ORACLE)
 def ext_multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Frame sampling (1→N binary explode): one frame per 100-byte
     payload window with an md5 frame checksum — the mapInPandas shape a
@@ -160,6 +158,7 @@ FROM read_json('{MEDIA_BASE}/media_truth.jsonl', format='newline_delimited',
 RESIZE_ORACLE = _resize_oracle()
 
 
+@register("ext_multimodal_resize", oracle=RESIZE_ORACLE)
 def ext_multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Image resize over the REAL media fixtures, oracle-gated on the
     full round trip: PNG payloads are decoded, nearest-neighbor
@@ -226,6 +225,7 @@ WHERE bit_count(xor(a.phash, b.phash)) <= 3
 """
 
 
+@register("ext_multimodal_phash_pairs", oracle=PHASH_ORACLE)
 def ext_multimodal_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Image near-duplicate pairs by 64-bit perceptual hash — the
     dedup family extended to the image modality with the REAL PNG
@@ -279,6 +279,7 @@ WHERE bit_count(xor(a.ahash, b.ahash)) <= 3
 """
 
 
+@register("ext_multimodal_audiohash_pairs", oracle=AUDIOHASH_ORACLE)
 def ext_multimodal_audiohash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Audio near-duplicate pairs by 64-bit energy signature — the
     PCM sibling of `ext_multimodal_phash_pairs`, completing the dedup
@@ -331,6 +332,7 @@ WHERE frame_idx % {VIDEO_EVERY_K} = 0
 """
 
 
+@register("ext_multimodal_video_frames", oracle=VIDEO_FRAMES_ORACLE)
 def ext_multimodal_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Video keyframe sampling with REAL codecs end to end: fixture
     clips are MJV containers (operators/media_codec.mjv_encode — the
@@ -383,6 +385,7 @@ WHERE pls IS NOT NULL
 """
 
 
+@register("ext_multimodal_scene_cuts", oracle=SCENE_CUTS_ORACLE)
 def ext_multimodal_scene_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scene-cut detection over the MJV clips — the segmentation step a
     video curation pipeline runs before clip-level dedup/captioning:
@@ -411,6 +414,64 @@ def ext_multimodal_scene_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
         os.path.join(ensure_media_fixtures(), "media_video.parquet")
     )
     st = video_frame_stats(media)
+    w = Window.partitionBy("media_id").orderBy("frame_idx")
+    lagd = st.select(
+        "media_id",
+        "frame_idx",
+        "luma_sum",
+        "n_pix",
+        F.lag("luma_sum").over(w).alias("pls"),
+        F.lag("n_pix").over(w).alias("pnp"),
+    )
+    return lagd.where(
+        F.col("pls").isNotNull()
+        & (
+            F.abs(
+                F.col("luma_sum") * F.col("pnp")
+                - F.col("pls") * F.col("n_pix")
+            )
+            > F.lit(SCENE_CUT_THRESHOLD) * F.col("n_pix") * F.col("pnp")
+        )
+    ).select("media_id", F.col("frame_idx").cast("int").alias("cut_frame"))
+
+
+def _media_video_stream(spark: SparkSession) -> DataFrame:
+    """Replay the MJV clip table as a file-source stream
+    (layout-robust: sources/replay.py handles both the single-file
+    fixture layout and a Spark-written directory table)."""
+    return file_replay_stream(
+        spark, os.path.join(ensure_media_fixtures(), "media_video.parquet")
+    )
+
+
+@register("stream_scene_cuts", oracle=SCENE_CUTS_ORACLE)
+def stream_scene_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Scene-cut detection as continuous intake — the live video
+    segmentation front of a curation pipeline: each arriving clip is
+    container-parsed and reduced to per-frame integer luma totals
+    INSIDE the stream (operators/multimodal.video_frame_stats as a
+    stateless Arrow ``mapInPandas`` over the micro-batch — 2 int64s
+    per frame leave the task, never pixels), so the expensive decode
+    happens exactly once, at arrival. The lag-window cut rule — the
+    exact cross-multiply |ls_i*np_prev − ls_prev*np_i| > T*np_i*np_prev
+    of plans/ext_multimodal.ext_multimodal_scene_cuts — runs on the
+    drained frame-stats rows, which are clip-local, so any micro-batch
+    arrival order yields the same per-clip sequences and the result
+    hash-matches the batch oracle.
+
+    Scale (100 TB): the in-stream kernel is payload-partitioned and
+    stateless — no state store at all; drained stats are frame-count
+    bounded (2 int64s/frame), and the cut window partitions by
+    media_id, shuffling only those rows."""
+    from bigdata_spark_realtime_spark.operators.multimodal import (
+        video_frame_stats,
+    )
+    from bigdata_spark_realtime_spark.plans.streaming_queries import (
+        _drain_to_memory,
+    )
+
+    media = _media_video_stream(spark)
+    st = _drain_to_memory(video_frame_stats(media), spark)
     w = Window.partitionBy("media_id").orderBy("frame_idx")
     lagd = st.select(
         "media_id",

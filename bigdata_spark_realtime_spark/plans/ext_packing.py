@@ -21,11 +21,14 @@ the order key and the arithmetic are exact integers.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from bigdata_spark_realtime_spark.functions import hashing as H
 from bigdata_spark_realtime_spark.plans.registry import register
+from bigdata_spark_realtime_spark.sources.replay import file_replay_stream
 from bigdata_spark_realtime_spark.sources.tables import load_table
 
 #: shards = independent packing streams (1024+ at corpus scale; 16 keeps
@@ -67,6 +70,51 @@ def ext_pack_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     h = H.h32(F.col("doc_id").cast("string"))
     sharded = docs.select(
         "doc_id", "n_chars", h.alias("h"), (h % N_SHARDS).alias("shard")
+    )
+    win = (
+        Window.partitionBy("shard")
+        .orderBy("h", "doc_id")
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    start = F.coalesce(F.sum("n_chars").over(win), F.lit(0))
+    return sharded.select(
+        "doc_id",
+        "shard",
+        F.floor(start / PACK_BUDGET).cast("long").alias("pack_id"),
+        start.cast("long").alias("start_offset"),
+    )
+
+
+@register("stream_pack_shards", oracle=PACKING_ORACLE)
+def stream_pack_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Sequence packing as continuous intake — documents stream in and
+    the map-side shard assignment (`h32(doc_id) % N_SHARDS`, the only
+    corpus-wide operation) runs per micro-batch, stateless; the
+    per-shard greedy packing — the running-total window over the
+    deterministic (hash, doc_id) order of
+    plans/ext_packing.ext_pack_shards — runs on the drained shard
+    rows. The order key is data-derived, not arrival-derived, so any
+    micro-batch schedule converges to the same packs and the batch
+    PACKING_ORACLE verifies the stream end-to-end.
+
+    Scale (100 TB): in-stream work is a stateless projection (no
+    shuffle, no state store); the drained side packs each shard as an
+    independent window partition — the same one-shuffle plan as the
+    batch operator, with arrival-time shard assignment amortized into
+    ingest."""
+    from bigdata_spark_realtime_spark.plans.streaming_queries import (
+        _drain_to_memory,
+    )
+
+    docs = file_replay_stream(
+        spark, os.path.join(sf_dir, "documents.parquet")
+    )
+    h = H.h32(F.col("doc_id").cast("string"))
+    sharded = _drain_to_memory(
+        docs.select(
+            "doc_id", "n_chars", h.alias("h"), (h % N_SHARDS).alias("shard")
+        ),
+        spark,
     )
     win = (
         Window.partitionBy("shard")

@@ -29,9 +29,7 @@ counts) and inherent to cross-day sessionization, but on an unbounded
 event log a user's lifetime history would sit in one sort buffer;
 `ext_session_paths_daily` is the production profile with the same
 composite (user_id, day) retention horizon
-`ext_event_transitions_daily` uses (registered by
-plans/ext_paths_daily.py — this module sits inside the pinned r11
-gate window, so registering here would splice it).
+`ext_event_transitions_daily` uses.
 """
 
 from __future__ import annotations
@@ -159,9 +157,7 @@ LIMIT {PATH_TOP_K}
 """
 
 
-# registered by plans/ext_paths_daily.py — this module's own
-# registrations land inside the pinned r11 gate window, so a register()
-# call here would splice the window (see registry._PLAN_MODULES)
+@register("ext_session_paths_daily", oracle=SESSION_PATHS_DAILY_ORACLE)
 def ext_session_paths_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Day-bounded variant of :func:`ext_session_paths` — the
     production profile for an unbounded event log: every window
@@ -242,6 +238,45 @@ def ext_ab_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         assigned.groupBy("arm")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_users"),
+            F.sum("converted").cast("bigint").alias("n_converted"),
+        )
+        .select(
+            F.col("arm").cast("bigint").alias("arm"),
+            "n_users",
+            "n_converted",
+            F.expr(f"({PPM} * n_converted) div n_users").alias("conv_ppm"),
+        )
+    )
+
+
+@register("stream_ab_assignment", oracle=AB_ORACLE)
+def stream_ab_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """A/B conversion as continuous intake — the live experiment
+    scoreboard: per-user converted-flags accumulate as a complete-mode
+    max (associative, user-bounded state — the same cardinality any
+    batch per-user aggregate materializes); arm assignment and the
+    per-arm counts run on the drained frame exactly like the batch
+    operator. Oracle = the batch SQL."""
+    from bigdata_spark_realtime_spark.plans.streaming_queries import (
+        _drain_to_memory,
+        _events_stream,
+    )
+
+    ev = _events_stream(spark, sf_dir)
+    state = ev.groupBy("user_id").agg(
+        F.max(
+            F.when(F.col("event_type") == "purchase", 1).otherwise(0)
+        ).alias("converted")
+    )
+    per_user = _drain_to_memory(state, spark, output_mode="complete").select(
+        (H.h32(F.concat(F.col("user_id").cast("string"), F.lit("|ab"))) % 2)
+        .alias("arm"),
+        F.col("converted").cast("bigint").alias("converted"),
+    )
+    return (
+        per_user.groupBy("arm")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_users"),
             F.sum("converted").cast("bigint").alias("n_converted"),

@@ -18,10 +18,6 @@ suite (plans/ext_text.py):
   count aggregation, and the top-K compiles to TakeOrderedAndProject
   (K × n_partitions rows at the driver, never a global sort).
 
-Both register AFTER the round-6 gate window (plans/registry.py): they
-are covered by the local all-queries oracle mirror this round and
-rotate into the external window next.
-
 Reference parity: the reference has no corpus-quality surface; this
 extends SURVEY.md §2's ext suite (100 TB training-data contract).
 """

@@ -59,3 +59,41 @@ def ext_rollup_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("ct").alias("ct"),
         F.sum("value_cents").alias("value_cents"),
     )
+
+
+@register("stream_rollup_cascade", oracle=ROLLUP_ORACLE)
+def stream_rollup_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The rollup cascade as continuous intake — the live hypertable:
+    the HOURLY grain accumulates in Spark's state store (complete
+    mode, integer-cent sums quantized BEFORE the first aggregation so
+    merge order is irrelevant); the DAILY grain re-aggregates the
+    drained hourly frame exactly as the batch operator does, never
+    touching raw events again. Hour-count-bounded state forever;
+    oracle = the batch operator's SQL (which itself goes straight to
+    raw — the stream must reproduce the lossless cascade)."""
+    from bigdata_spark_realtime_spark.plans.streaming_queries import (
+        _drain_to_memory,
+        _events_stream,
+    )
+
+    # event_time is the helper's vintage-normalized TimestampType
+    # column (raw `ts` may be int64 nanos in some testdata vintages)
+    ev = _events_stream(spark, sf_dir).select(
+        F.date_format(
+            F.date_trunc("hour", "event_time"), "yyyy-MM-dd HH"
+        ).alias("hour"),
+        F.date_format(
+            F.date_trunc("day", "event_time"), "yyyy-MM-dd"
+        ).alias("day"),
+        "event_type",
+        F.floor(F.col("value") * 100).cast("bigint").alias("cents"),
+    )
+    hourly = ev.groupBy("hour", "day", "event_type").agg(
+        F.count(F.lit(1)).alias("ct"),
+        F.sum("cents").alias("value_cents"),
+    )
+    drained = _drain_to_memory(hourly, spark, output_mode="complete")
+    return drained.groupBy("day", "event_type").agg(
+        F.sum("ct").alias("ct"),
+        F.sum("value_cents").alias("value_cents"),
+    )

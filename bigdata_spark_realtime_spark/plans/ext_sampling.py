@@ -211,6 +211,7 @@ LIMIT {SAMPLE_K}
 """
 
 
+@register("ext_sample_topk_hash", oracle=TOPK_HASH_ORACLE)
 def ext_sample_topk_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fixed-SIZE uniform sample without replacement: the K smallest
     md5-hash values corpus-wide — the deterministic engine-agnostic

@@ -373,3 +373,32 @@ def ext_twa_value(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("twa_num div twa_den").alias("twa_cents"),
         )
     )
+
+
+@register("stream_timeseries_gapfill", oracle=GAPFILL_ORACLE)
+def stream_timeseries_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Gap-filled resample as continuous intake — the live metrics
+    dashboard's dense grid: hourly (count, cents-sum) partials
+    accumulate as one complete-mode aggregation (associative,
+    calendar-bounded state), then the sequence-explode grid and the
+    LOCF window run on the drained partials exactly like the batch
+    operator. Oracle = the batch SQL."""
+    from bigdata_spark_realtime_spark.plans.streaming_queries import (
+        _drain_to_memory,
+        _events_stream,
+    )
+
+    ev = _events_stream(spark, sf_dir)
+    state = ev.groupBy(
+        "event_type", F.date_trunc("hour", "event_time").alias("h")
+    ).agg(
+        F.count(F.lit(1)).alias("cnt"),
+        F.sum(F.floor(F.col("value") * 100).cast("bigint")).alias("v100"),
+    )
+    hourly = _drain_to_memory(state, spark, output_mode="complete").select(
+        "event_type",
+        "h",
+        F.col("cnt").cast("bigint").alias("cnt"),
+        F.col("v100").cast("bigint").alias("v100"),
+    )
+    return _gapfill_from_hourly(hourly, "stream_gapfill")

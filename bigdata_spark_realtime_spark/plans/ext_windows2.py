@@ -272,3 +272,36 @@ def ext_balance_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"ELSE ({PPM} * (r - 1)) div (n - 1) END AS BIGINT)"
         ).alias("pct_ppm"),
     )
+
+
+def _item_expr():
+    return F.get_json_object("props", "$.k").cast("bigint").alias("item")
+
+
+@register("stream_trending_items", oracle=TRENDING_ORACLE)
+def stream_trending_items(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Trending as continuous intake — the live risers board: (item,
+    hour) counts accumulate as one complete-mode aggregation
+    (associative; state bounded by items × hours), then the lag + rank
+    projection runs on the drained partials exactly like the batch
+    operator. Oracle = the batch SQL."""
+    from bigdata_spark_realtime_spark.plans.streaming_queries import (
+        _drain_to_memory,
+        _events_stream,
+    )
+
+    ev = _events_stream(spark, sf_dir)
+    state = (
+        ev.where(
+            F.col("event_type").isin("click", "view", "purchase")
+            & F.col("props").isNotNull()
+        )
+        .select(_item_expr(), F.date_trunc("hour", "event_time").alias("h"))
+        .where(F.col("item").isNotNull())
+        .groupBy("item", "h")
+        .agg(F.count(F.lit(1)).alias("c"))
+    )
+    ih = _drain_to_memory(state, spark, output_mode="complete").select(
+        "item", "h", F.col("c").cast("bigint").alias("c")
+    )
+    return _trending_from_partials(ih)

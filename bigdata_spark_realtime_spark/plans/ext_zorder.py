@@ -83,3 +83,37 @@ def ext_zorder_key(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("zkey").cast("bigint").alias("z_min"),
         F.max("zkey").cast("bigint").alias("z_max"),
     )
+
+
+@register("stream_zorder_census", oracle=ZORDER_ORACLE)
+def stream_zorder_census(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Z-order layout census as continuous intake — the live writer's
+    bucket planner: the Morton key is a stateless map-side expression
+    on the stream, and count/min/max per bucket are associative, so
+    the census accumulates as one complete-mode aggregation with
+    1024-row state. Oracle = the batch SQL."""
+    from bigdata_spark_realtime_spark.plans.streaming_queries import (
+        _drain_to_memory,
+        _events_stream,
+    )
+
+    ev = _events_stream(spark, sf_dir)
+    keyed = ev.select(
+        F.expr(f"user_id % {1 << ZBITS}").alias("x"),
+        F.expr(
+            f"(unix_micros(event_time) div 3600000000) % {1 << ZBITS}"
+        ).alias("y"),
+    ).select(F.expr(_morton_spark("x", "y")).cast("bigint").alias("zkey"))
+    state = keyed.groupBy(
+        F.expr(f"shiftright(zkey, {ZBUCKET_SHIFT})").alias("zbucket")
+    ).agg(
+        F.count(F.lit(1)).alias("n_events"),
+        F.min("zkey").alias("z_min"),
+        F.max("zkey").alias("z_max"),
+    )
+    return _drain_to_memory(state, spark, output_mode="complete").select(
+        "zbucket",
+        F.col("n_events").cast("bigint").alias("n_events"),
+        F.col("z_min").cast("bigint").alias("z_min"),
+        F.col("z_max").cast("bigint").alias("z_max"),
+    )

@@ -9,7 +9,7 @@ wrapped Spark's built-in approx_count_distinct / percentile_approx,
 whose sketch state is engine-internal — the registry's only rows-only
 gate entry. Round 9 rebased it on the engine's OWN deterministic
 sketches (the HLL of plans/ext_sketch.py and the DDSketch-style
-integer-bucket histogram of plans/ext_sketch_tail.py), so the
+integer-bucket histogram of plans/ext_sketch.py), so the
 estimates themselves are now bit-exact cross-engine and the gate entry
 is hash-checked like every other query:
 
@@ -256,7 +256,7 @@ def approx_aggregates(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # --- quantile-sketch median (bucket build mirrors
-    # plans/ext_sketch_tail.ext_quantile_sketch) ---
+    # plans/ext_sketch.ext_quantile_sketch) ---
     cents = ev.where(F.col("value") > 0).select(
         "event_type",
         F.floor(F.col("value") * 100).cast("bigint").alias("v100"),

@@ -7,7 +7,7 @@ parquet tables. Column names must match exactly (the comparison sorts
 columns by name and hashes values) — every computed column is aliased
 identically on both sides.
 
-Registration is declarative::
+Registration is declarative, on the query's own definition::
 
     @register("q1_pricing_summary", oracle="SELECT ...")
     def q1(spark, sf_dir): ...
@@ -15,11 +15,21 @@ Registration is declarative::
 Queries whose semantics are not SQL-expressible (custom stateful
 streaming) register with ``oracle=None`` and get the driver's weaker
 rows-only check.
+
+The external correctness gate hash-checks the first 50 entries of
+``queries()``. That gate window is :data:`GATE_WINDOW`, not module
+import order: :func:`load_all` returns its names first, in tuple order,
+then every other query in registration order. To rotate, edit
+``GATE_WINDOW``; ``tests/test_registry.py`` names every query that must
+be in it (those with no green gate row), and
+``python scripts/freshness_audit.py`` lists the stale and body-drifted
+rows to fill the rest.
 """
 
 from __future__ import annotations
 
 import importlib
+import pkgutil
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -38,142 +48,63 @@ class QuerySpec:
 
 QUERIES: dict[str, QuerySpec] = {}
 
-#: plan modules scanned by :func:`load_all`.
-#:
-#: ORDER IS A DOCUMENTED CONTRACT (pinned by tests/test_registry.py):
-#: the external correctness gate hash-checks the first 50 registered
-#: queries per round. Round 5's window covered the 50 queries registered
-#: by the trailing eight modules below; this round leads with everything
-#: that window missed, so r5 ∪ r6 gives every one of the 100 registered
-#: queries an independent driver-verified row — full-registry coverage
-#: in two rounds. The local oracle mirror (tests/test_queries_oracle.py)
-#: always runs all queries regardless of this order; which queries fall
-#: outside a given round's external window is recorded in the round
-#: VERDICT.
-_PLAN_MODULES = (
-    # r15 window (exactly 50 queries): refresh rotation planned at the
-    # end of round 14 (plans/ROTATION_R15.md, deleted in this rotation
-    # commit) and re-simulated in a fresh interpreter before
-    # committing. Seats first driver rows for the round-13 late
-    # additions ext_ann_recall_eval / ext_minhash_error_audit (slots
-    # 11-12) and stream_funnel_steps (slot 17); retires every round-14
-    # body-drift row (the ext_dedup seven at 2-8, ext_embed four at
-    # 20-23, ext_annops pair at 19/24, olap_extras pair at 27-28, and
-    # the fourteen streaming_queries twins re-bodied by the r14 replay
-    # migration) plus ext_pii_redact (slot 1, last pre-r9 survivor).
-    # Import side effects counted: ext_approx_audit drags ext_dedup
-    # (2-8) and ext_similarity (9-10); ext_stream_tail6 drags
-    # ext_funnel (13-16); ext_annops drags ext_ivf (18); olap_extras
-    # drags ext_sketch (25-26); streaming_queries' oracle builders drag
-    # ext_sampling, ext_decontam, ext_lm, ext_snapshot, ext_attrib,
-    # ext_skewcheck. The four fixture-replay twins sit at the END of
-    # streaming_queries.py so they spill to slots 51-54 and keep their
-    # r12 greens.
-    "bigdata_spark_realtime_spark.plans.ext_pii",
-    "bigdata_spark_realtime_spark.plans.ext_approx_audit",
-    "bigdata_spark_realtime_spark.plans.ext_stream_tail6",
-    "bigdata_spark_realtime_spark.plans.ext_annops",
-    "bigdata_spark_realtime_spark.plans.ext_embed",
-    "bigdata_spark_realtime_spark.plans.olap_extras",
-    "bigdata_spark_realtime_spark.plans.streaming_queries",
-    # below here every query is OUTSIDE the 50-slot gate window; all
-    # have driver-verified rows (r8-r14).
-    # Relative order preserved from the r14 layout so refresh-rotation
-    # planning (plans/ROTATION_R16.md) composes against a stable base.
-    "bigdata_spark_realtime_spark.plans.analytic",
-    "bigdata_spark_realtime_spark.plans.ext_similarity",
-    "bigdata_spark_realtime_spark.plans.ext_srp",
-    "bigdata_spark_realtime_spark.plans.serving",
-    "bigdata_spark_realtime_spark.plans.ext_asof",
-    "bigdata_spark_realtime_spark.plans.dedup",
-    "bigdata_spark_realtime_spark.plans.ext_text",
-    "bigdata_spark_realtime_spark.plans.ext_tfidf",
-    "bigdata_spark_realtime_spark.plans.ext_bm25",
-    "bigdata_spark_realtime_spark.plans.ext_semantic",
-    "bigdata_spark_realtime_spark.plans.ext_substring",
-    "bigdata_spark_realtime_spark.plans.ext_quality",
-    "bigdata_spark_realtime_spark.plans.ext_mixture",
-    "bigdata_spark_realtime_spark.plans.ext_profile",
-    "bigdata_spark_realtime_spark.plans.ext_stream_tail5",
-    "bigdata_spark_realtime_spark.plans.ext_media_tail",
-    "bigdata_spark_realtime_spark.plans.ext_chunk",
-    "bigdata_spark_realtime_spark.plans.ext_curation3",
-    "bigdata_spark_realtime_spark.plans.ext_hybrid",
-    "bigdata_spark_realtime_spark.plans.ext_order",
-    "bigdata_spark_realtime_spark.plans.ext_pit",
-    "bigdata_spark_realtime_spark.plans.ext_contract",
-    "bigdata_spark_realtime_spark.plans.transforms",
-    "bigdata_spark_realtime_spark.plans.tpch",
-    "bigdata_spark_realtime_spark.plans.joins",
-    "bigdata_spark_realtime_spark.plans.aggregations",
-    "bigdata_spark_realtime_spark.plans.sort_limit",
-    "bigdata_spark_realtime_spark.plans.ext_split",
-    "bigdata_spark_realtime_spark.plans.ext_triplets",
-    "bigdata_spark_realtime_spark.plans.ext_dedup_impact",
-    "bigdata_spark_realtime_spark.plans.scalar_fns",
-    "bigdata_spark_realtime_spark.plans.windows",
-    "bigdata_spark_realtime_spark.plans.ext_nullprobe",
-    "bigdata_spark_realtime_spark.plans.ext_convert",
-    "bigdata_spark_realtime_spark.plans.ext_cohortval",
-    "bigdata_spark_realtime_spark.plans.ext_decay",
-    "bigdata_spark_realtime_spark.plans.ext_rolling",
-    "bigdata_spark_realtime_spark.plans.ext_windows2",
-    "bigdata_spark_realtime_spark.plans.ext_stream_tail4",
-    "bigdata_spark_realtime_spark.plans.ext_stream_tail3",
-    "bigdata_spark_realtime_spark.plans.ext_communities",
-    "bigdata_spark_realtime_spark.plans.ext_embaudit",
-    "bigdata_spark_realtime_spark.plans.ext_paths_daily",
-    "bigdata_spark_realtime_spark.plans.ext_funnel_tail",
-    "bigdata_spark_realtime_spark.plans.ext_graphrank",
-    "bigdata_spark_realtime_spark.plans.ext_graphtri",
-    "bigdata_spark_realtime_spark.plans.ext_sketch_window",
-    "bigdata_spark_realtime_spark.plans.ext_attrib",
-    "bigdata_spark_realtime_spark.plans.ext_snapshot",
-    "bigdata_spark_realtime_spark.plans.ext_colloc",
-    "bigdata_spark_realtime_spark.plans.ext_stream_tail2",
-    "bigdata_spark_realtime_spark.plans.ext_skewcheck",
-    "bigdata_spark_realtime_spark.plans.ext_scd2",
-    "bigdata_spark_realtime_spark.plans.ext_anomaly",
-    "bigdata_spark_realtime_spark.plans.ext_setjoin",
-    "bigdata_spark_realtime_spark.plans.ext_binning",
-    "bigdata_spark_realtime_spark.plans.ext_sampling_tail",
-    "bigdata_spark_realtime_spark.plans.ext_timeseries",
-    "bigdata_spark_realtime_spark.plans.ext_timeseries2",
-    "bigdata_spark_realtime_spark.plans.ext_concurrency",
-    "bigdata_spark_realtime_spark.plans.ext_paths",
-    "bigdata_spark_realtime_spark.plans.ext_fuzzy",
-    "bigdata_spark_realtime_spark.plans.ext_sampling2",
-    "bigdata_spark_realtime_spark.plans.ext_sketch2",
-    "bigdata_spark_realtime_spark.plans.ext_fkaudit",
-    "bigdata_spark_realtime_spark.plans.ext_zorder",
-    "bigdata_spark_realtime_spark.plans.ext_drift",
-    "bigdata_spark_realtime_spark.plans.ext_dsir",
-    "bigdata_spark_realtime_spark.plans.ext_bpe",
-    "bigdata_spark_realtime_spark.plans.ext_stream_tail",
-    "bigdata_spark_realtime_spark.plans.ext_vocab",
-    "bigdata_spark_realtime_spark.plans.ext_media_tail2",
-    "bigdata_spark_realtime_spark.plans.ext_rangejoin",
-    "bigdata_spark_realtime_spark.plans.ext_rollup",
-    "bigdata_spark_realtime_spark.plans.ext_sketch_tail",
-    "bigdata_spark_realtime_spark.plans.ext_funnel",
-    "bigdata_spark_realtime_spark.plans.ext_lm",
-    "bigdata_spark_realtime_spark.plans.ext_sketch",
-    "bigdata_spark_realtime_spark.plans.ext_multimodal",
-    "bigdata_spark_realtime_spark.plans.ext_packing",
-    "bigdata_spark_realtime_spark.plans.sessionize",
-    "bigdata_spark_realtime_spark.plans.ext_ivf",
-    "bigdata_spark_realtime_spark.plans.ext_dedup",
-    "bigdata_spark_realtime_spark.plans.ext_sampling",
-    "bigdata_spark_realtime_spark.plans.ext_decontam",
-    # round-14 additions (PENDING_FIRST_DRIVER_ROW; behind the executed
-    # R15 window — they seat in R16): the second batch of
-    # approximation-quality audits
-    "bigdata_spark_realtime_spark.plans.ext_approx_audit2",
-    "bigdata_spark_realtime_spark.plans.ext_approx_audit3",
-    # round-15 additions (PENDING_FIRST_DRIVER_ROW; seat in R16):
-    # URL-canonicalization dedup + the serving-stats intake twins
-    "bigdata_spark_realtime_spark.plans.ext_urlnorm",
-    "bigdata_spark_realtime_spark.plans.ext_stream_tail7",
+#: the 50 queries the external gate checks next, in gate order
+GATE_WINDOW: tuple[str, ...] = (
+    # never verified by the external gate
+    "ext_dedup_url",
+    "ext_hll_error_audit",
+    "ext_quantile_error_audit",
+    "ext_semantic_gap_audit",
+    "ext_simhash_error_audit",
+    "ext_srp_error_audit",
+    "stream_stats_by_item_age",
+    "stream_stats_by_item_gender",
+    # effective body changed since the last green gate row
+    # (scripts/freshness_audit.py), oldest green round first, ties by
+    # name: r9-r13
+    "ext_bpe_apply_merge",
+    "ext_bpe_merges",
+    "ext_dsir_select",
+    "ext_multimodal_audiohash_pairs",
+    "ext_multimodal_phash_pairs",
+    "ext_multimodal_scene_cuts",
+    "ext_multimodal_video_frames",
+    "ext_bigram_pmi",
+    "ext_concurrency_peak",
+    "ext_event_transitions_daily",
+    "ext_funnel_conversion",
+    "ext_item_pagerank",
+    "ext_triangle_count",
+    "ext_item_communities",
+    "ext_split_leakage",
+    "a1_count_total",
+    "a2_hourly_counts_topk",
+    "a3_day_over_day",
+    "a4_stats_by_item_top100",
+    "a5_age_rebucket",
+    "a6_gender_relabel",
+    "t1_json_extract",
+    "t4_error_route",
+    "t6_multiplex_split",
+    "t7_explode_tokens",
+    "t8_cdc_op_normalize",
+    "t9_table_routing",
+    # r14, the first 15 by name
+    "analytic_order_sequence",
+    "bucketed_colocated_join",
+    "cube_status_priority",
+    "exact_percentiles",
+    "ext_bm25_search",
+    "ext_chunk_windows",
+    "ext_curation_full",
+    "ext_curation_scored",
+    "ext_dedup_semantic",
+    "ext_dedup_substring",
+    "ext_quality_classifier",
+    "ext_text_boilerplate_ngrams",
+    "ext_text_fingerprint",
+    "ext_text_lang_id",
+    "ext_text_quality_score",
 )
 
 
@@ -188,11 +119,20 @@ def register(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryF
 
 
 def load_all() -> dict[str, QuerySpec]:
-    # import errors propagate — a typo'd module name must fail the gate
-    # loudly, not silently shrink the registered query set
-    for mod in _PLAN_MODULES:
-        importlib.import_module(mod)
-    return QUERIES
+    """Import every module of the ``plans`` package and return the
+    registered specs: ``GATE_WINDOW`` first, then the rest in
+    registration order. Import errors propagate, so a broken plan
+    module fails the gate loudly instead of shrinking the query set."""
+    from bigdata_spark_realtime_spark import plans
+
+    for mod in sorted(m.name for m in pkgutil.iter_modules(plans.__path__)):
+        importlib.import_module(f"{plans.__name__}.{mod}")
+    missing = [n for n in GATE_WINDOW if n not in QUERIES]
+    if missing:
+        raise KeyError(f"GATE_WINDOW names unregistered queries: {missing}")
+    specs = {n: QUERIES[n] for n in GATE_WINDOW}
+    specs.update(QUERIES)
+    return specs
 
 
 def all_queries() -> dict[str, QueryFn]:

@@ -11,6 +11,7 @@ star schema: `events` plays the page-log/dau stream (user_id = mid),
 from __future__ import annotations
 
 import datetime
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -253,3 +254,80 @@ def serving_detail_by_item(spark: SparkSession, sf_dir: str) -> DataFrame:
         .offset((PAGE_NO - 1) * PAGE_SIZE)
         .limit(PAGE_SIZE)
     )
+
+
+# The stream twins of the two stats queries. ``_wide_stream`` stays
+# separate from ``_wide``: a streaming plan gets no AQE join promotion,
+# so the stream side broadcasts the filtered part dim explicitly, while
+# the batch side leaves that choice to AQE.
+def _wide_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """lineitem replayed as a file-source stream, enriched in-stream
+    with the three static dims (same join graph as ``_wide``,
+    stream-static instead of batch-batch)."""
+    from bigdata_spark_realtime_spark.sources.replay import file_replay_stream
+
+    li = file_replay_stream(
+        spark, os.path.join(sf_dir, "lineitem.parquet")
+    ).select("l_orderkey", "l_partkey", "l_extendedprice", "l_discount")
+    p = (
+        load_table(spark, sf_dir, "part")
+        .where(fns.match_all_tokens(F.col("p_name"), ITEM))
+        .select("p_partkey")
+    )
+    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    c = load_table(spark, sf_dir, "customer").select(
+        "c_custkey",
+        fns.age_years(birthday_col(), F.to_date(F.lit(AGE_REF_DATE))).alias(
+            "user_age"
+        ),
+        gender_col().alias("user_gender"),
+    )
+    return (
+        li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
+        .join(o, li.l_orderkey == o.o_orderkey)
+        .join(c, o.o_custkey == c.c_custkey)
+        .select(
+            (F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias(
+                "split_total_amount"
+            ),
+            "user_age",
+            "user_gender",
+        )
+    )
+
+
+@register("stream_stats_by_item_age", oracle=STATS_AGE_ORACLE)
+def stream_stats_by_item_age(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """statsByItem?t=age as continuous intake: stream-static dim
+    enrichment, running per-user_age sum in the state store, A5
+    re-bucket on the drained frame."""
+    from bigdata_spark_realtime_spark.plans.streaming_queries import (
+        _drain_to_memory,
+    )
+
+    inner = _wide_stream(spark, sf_dir).groupBy("user_age").agg(
+        F.sum("split_total_amount").alias("amount")
+    )
+    drained = _drain_to_memory(inner, spark, output_mode="complete")
+    return drained.groupBy(
+        fns.age_bucket(F.col("user_age")).alias("name")
+    ).agg(F.round(F.sum("amount"), 2).alias("value"))
+
+
+@register("stream_stats_by_item_gender", oracle=STATS_GENDER_ORACLE)
+def stream_stats_by_item_gender(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """statsByItem?t=gender as continuous intake: same intake chain,
+    running per-gender sum, A6 decode on the drained frame."""
+    from bigdata_spark_realtime_spark.plans.streaming_queries import (
+        _drain_to_memory,
+    )
+
+    inner = _wide_stream(spark, sf_dir).groupBy("user_gender").agg(
+        F.sum("split_total_amount").alias("amount")
+    )
+    drained = _drain_to_memory(inner, spark, output_mode="complete")
+    return drained.groupBy(
+        fns.gender_decode(F.col("user_gender")).alias("name")
+    ).agg(F.round(F.sum("amount"), 2).alias("value"))

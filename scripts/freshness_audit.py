@@ -2,10 +2,13 @@
 with a green external-gate row (hash-green, or rows-only for declared
 ``oracle=None`` queries).
 
-Rotation planning input: once PENDING_FIRST_DRIVER_ROW hits zero (R12),
-every window becomes a refresh rotation and the head should chase the
-smallest `latest` values here — no green row should age past ~5 rounds
-(round-10 judge task #6). Run per round:
+Rotation planning input for ``registry.GATE_WINDOW``: every query
+listed as never verified must be in the window
+(tests/test_registry.py enforces it); fill the rest with the
+body-drifted rows, oldest green round first, so no green row ages past
+~5 rounds. A query whose defining module changed since its green round
+(it moved, say) and whose body the anchor tree cannot resolve is
+reported under the module-granularity fallback. Run per round:
 
     python scripts/freshness_audit.py
 """
@@ -44,8 +47,8 @@ def main() -> int:
           dict(sorted(ages.items())))
     never = sorted(n for n in names if n not in latest)
     if never:
-        print(f"{len(never)} never verified (rotation targets, tracked by "
-              f"PENDING_FIRST_DRIVER_ROW / the in-flight window): "
+        print(f"{len(never)} never verified (must be in "
+              f"registry.GATE_WINDOW): "
               f"{', '.join(never[:8])}{' …' if len(never) > 8 else ''}")
     stale = sorted(
         (latest[n], n) for n in names if n in latest and latest[n] < newest - 4

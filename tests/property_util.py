@@ -26,7 +26,7 @@ def h32(s: str) -> int:
 
 def octave_bucket(v: int) -> int:
     """The engine's shared integer octave key (ext_binning /
-    ext_sketch_tail / ext_drift): identity below 8, else
+    ext_sketch / ext_drift): identity below 8, else
     (bitlen << 3) | top-3-bits."""
     if v < 8:
         return v

@@ -775,7 +775,7 @@ def test_hll_intersection_estimate_within_tolerance(spark, sf_dir):
     (m=256 → ~6.5% per-term error, and differencing compounds it) —
     the point is the merged-union algebra is sane, the exactness claim
     lives in the integer-state oracle."""
-    from bigdata_spark_realtime_spark.plans.ext_sketch_tail import (
+    from bigdata_spark_realtime_spark.plans.ext_sketch import (
         ext_hll_set_algebra,
         hll_intersection_estimate,
     )
@@ -800,7 +800,7 @@ def test_quantile_sketch_estimates_within_relative_error(spark, sf_dir):
     percentiles (nearest-rank)."""
     import numpy as np
 
-    from bigdata_spark_realtime_spark.plans.ext_sketch_tail import (
+    from bigdata_spark_realtime_spark.plans.ext_sketch import (
         ext_quantile_sketch,
         qsketch_quantile,
     )

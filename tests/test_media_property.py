@@ -108,7 +108,7 @@ def test_qsketch_bucket_bounds_contain_their_values(v100):
     """Every cents value must land inside [lo, hi) of its own bucket
     key, and the relative bucket width must respect the <= 1/8 bound
     for the octave-keyed range (v100 >= 8)."""
-    from bigdata_spark_realtime_spark.plans.ext_sketch_tail import (
+    from bigdata_spark_realtime_spark.plans.ext_sketch import (
         qsketch_bucket_bounds,
     )
 

@@ -7,7 +7,7 @@ parallelism, so a result that silently depends on the shuffle layout
 (a window tie resolved by partition order, a non-associative merge, an
 undeterministic first()) would sail through them and explode at the
 gate, or worse, at 1000 executors where the layout is never the same
-twice. This mirror re-runs every PENDING_FIRST_DRIVER_ROW query under
+twice. This mirror re-runs every query in _AT_RISK under
 a sibling session with a deliberately different, prime
 ``spark.sql.shuffle.partitions`` and requires row-identical results.
 
@@ -20,7 +20,6 @@ from __future__ import annotations
 import pytest
 
 from bigdata_spark_realtime_spark.plans import registry
-from test_registry import CURRENT_ROTATION_TARGETS, PENDING_FIRST_DRIVER_ROW
 
 
 def _canon(v):
@@ -69,10 +68,25 @@ def perturbed(spark):
     return s
 
 
-#: never-driver-verified queries plus the current rotation's targets —
-#: the queries whose next driver row is their FIRST; a layout-dependent
-#: result would fail that one shot
-_AT_RISK = sorted(PENDING_FIRST_DRIVER_ROW | CURRENT_ROTATION_TARGETS)
+#: the eight queries with no gate row yet (all in
+#: registry.GATE_WINDOW), whose next gate row is their first — a
+#: layout-dependent result would fail that one shot — plus the three
+#: that got their first gate rows in the r15 window
+_AT_RISK = sorted(
+    {
+        "ext_dedup_url",
+        "ext_hll_error_audit",
+        "ext_quantile_error_audit",
+        "ext_semantic_gap_audit",
+        "ext_simhash_error_audit",
+        "ext_srp_error_audit",
+        "stream_stats_by_item_age",
+        "stream_stats_by_item_gender",
+        "ext_ann_recall_eval",
+        "ext_minhash_error_audit",
+        "stream_funnel_steps",
+    }
+)
 
 
 @pytest.mark.parametrize("name", _AT_RISK)

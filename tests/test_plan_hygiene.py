@@ -763,3 +763,38 @@ def test_cache_py_is_the_only_memo():
             ) or (isinstance(node, ast.Attribute) and node.attr == "file_sig"):
                 offenders.append(f"{path.relative_to(root)}: uses file_sig")
     assert not offenders, offenders
+
+
+def test_queries_register_by_decorator_on_their_own_definition():
+    """Every ``register(...)`` call in a plan module decorates the
+    query's own ``def``: the call form ``register(name)(fn)`` would let
+    one module register a query defined in another, away from its
+    family's oracle and helpers."""
+    import ast
+    import pathlib
+
+    from bigdata_spark_realtime_spark import plans
+
+    def is_register(node):
+        f = node.func
+        return (isinstance(f, ast.Name) and f.id == "register") or (
+            isinstance(f, ast.Attribute) and f.attr == "register"
+        )
+
+    offenders = []
+    for path in sorted(pathlib.Path(plans.__file__).parent.glob("*.py")):
+        tree = ast.parse(path.read_text(), str(path))
+        decorators = {
+            id(d)
+            for node in ast.walk(tree)
+            if isinstance(node, ast.FunctionDef)
+            for d in node.decorator_list
+        }
+        offenders += [
+            f"{path.name}:{node.lineno}"
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Call)
+            and is_register(node)
+            and id(node) not in decorators
+        ]
+    assert not offenders, offenders

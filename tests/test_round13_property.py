@@ -17,8 +17,6 @@ def _rows(df):
 def test_stream_scene_cuts_equals_batch(spark, sf_dir):
     from bigdata_spark_realtime_spark.plans.ext_multimodal import (
         ext_multimodal_scene_cuts,
-    )
-    from bigdata_spark_realtime_spark.plans.ext_stream_tail5 import (
         stream_scene_cuts,
     )
 
@@ -28,8 +26,8 @@ def test_stream_scene_cuts_equals_batch(spark, sf_dir):
 
 
 def test_stream_pack_shards_equals_batch(spark, sf_dir):
-    from bigdata_spark_realtime_spark.plans.ext_packing import ext_pack_shards
-    from bigdata_spark_realtime_spark.plans.ext_stream_tail5 import (
+    from bigdata_spark_realtime_spark.plans.ext_packing import (
+        ext_pack_shards,
         stream_pack_shards,
     )
 
@@ -44,9 +42,7 @@ def test_stream_pack_shards_is_arrival_order_invariant(spark, sf_dir):
     stream (fresh symlink dir, fresh memory sink) yields identical
     packs — the property that lets the batch PACKING_ORACLE verify a
     continuous intake."""
-    from bigdata_spark_realtime_spark.plans.ext_stream_tail5 import (
-        stream_pack_shards,
-    )
+    from bigdata_spark_realtime_spark.plans.ext_packing import stream_pack_shards
 
     assert _rows(stream_pack_shards(spark, sf_dir)) == _rows(
         stream_pack_shards(spark, sf_dir)

@@ -23,7 +23,7 @@ def _rows(df):
 
 def test_stream_funnel_steps_equals_batch(spark, sf_dir):
     from bigdata_spark_realtime_spark.plans.ext_funnel import ext_funnel_steps
-    from bigdata_spark_realtime_spark.plans.ext_stream_tail6 import (
+    from bigdata_spark_realtime_spark.plans.ext_funnel import (
         stream_funnel_steps,
     )
 

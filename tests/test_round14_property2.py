@@ -1,5 +1,5 @@
 """R14 surface growth: the second approximation-quality audit pair
-(plans/ext_approx_audit2.py) pinned against independent references —
+(plans/ext_approx_audit.py) pinned against independent references —
 numpy for the exact vector math, collections.Counter for the exact
 token-space cosine — plus the structural invariants that make each
 audit trustworthy (the same strategy as r13's
@@ -15,7 +15,7 @@ import numpy as np
 
 
 def test_semantic_gap_audit_invariants_and_numpy_reference(spark, sf_dir):
-    from bigdata_spark_realtime_spark.plans.ext_approx_audit2 import (
+    from bigdata_spark_realtime_spark.plans.ext_approx_audit import (
         AUDIT_N,
         ext_semantic_gap_audit,
     )
@@ -57,7 +57,7 @@ def test_semantic_gap_audit_invariants_and_numpy_reference(spark, sf_dir):
 
 
 def test_simhash_error_audit_pure_python_reference(spark, sf_dir):
-    from bigdata_spark_realtime_spark.plans.ext_approx_audit2 import (
+    from bigdata_spark_realtime_spark.plans.ext_approx_audit import (
         ext_simhash_error_audit,
     )
     from bigdata_spark_realtime_spark.plans.ext_dedup import SIMHASH_BITS
@@ -110,7 +110,7 @@ def test_simhash_audit_pairs_subset_of_production_candidates(spark, sf_dir):
     audited row below the production hamming threshold must be a
     production near-dup pair, the fanout bound must hold, and the
     hamming values must agree with the production query's."""
-    from bigdata_spark_realtime_spark.plans.ext_approx_audit2 import (
+    from bigdata_spark_realtime_spark.plans.ext_approx_audit import (
         AUDIT_FANOUT,
         ext_simhash_error_audit,
     )
@@ -168,7 +168,7 @@ def test_hll_and_quantile_audits_within_published_error(spark, sf_dir):
     """The sketch audits must report errors inside the estimators'
     published envelopes at test SF: HLL σ ≈ 1.04/√256 ≈ 6.5% (allow
     4σ), bucket-median ≤ 12.5% relative (3-bit mantissa buckets)."""
-    from bigdata_spark_realtime_spark.plans.ext_approx_audit3 import (
+    from bigdata_spark_realtime_spark.plans.ext_approx_audit import (
         ext_hll_error_audit,
         ext_quantile_error_audit,
     )
@@ -191,7 +191,7 @@ def test_srp_error_audit_structure_and_reference(spark, sf_dir):
 
     from bigdata_spark_realtime_spark.functions import hashing as H
     from bigdata_spark_realtime_spark.plans.corpus import emb_double
-    from bigdata_spark_realtime_spark.plans.ext_approx_audit3 import (
+    from bigdata_spark_realtime_spark.plans.ext_approx_audit import (
         _SRP_PLANES,
         ext_srp_error_audit,
     )

@@ -104,25 +104,11 @@ def test_dedup_url_plan_shape(spark, sf_dir):
     assert len(re.findall(r"\(\d+\) Exchange", plan)) == 2, plan
 
 
-def test_stats_twin_oracles_are_byte_identical_to_serving():
-    """ext_stream_tail7 rebuilds serving's ITEM / STATS oracles instead
-    of importing them (a serving import would drag four registrations
-    into the R16 gate window); this pin is what makes the duplication
-    safe — any future edit to either side must touch both."""
-    from bigdata_spark_realtime_spark.plans import ext_stream_tail7 as tail7
-    from bigdata_spark_realtime_spark.plans import serving
-
-    assert tail7.ITEM == serving.ITEM
-    assert tail7.STATS_AGE_ORACLE == serving.STATS_AGE_ORACLE
-    assert tail7.STATS_GENDER_ORACLE == serving.STATS_GENDER_ORACLE
-
-
 @pytest.mark.parametrize("t", ["age", "gender"])
 def test_stats_twin_equals_batch_serving(spark, sf_dir, t):
-    from bigdata_spark_realtime_spark.plans import ext_stream_tail7 as tail7
     from bigdata_spark_realtime_spark.plans import serving
 
-    twin = getattr(tail7, f"stream_stats_by_item_{t}")(spark, sf_dir)
+    twin = getattr(serving, f"stream_stats_by_item_{t}")(spark, sf_dir)
     batch = getattr(serving, f"serving_stats_by_item_{t}")(spark, sf_dir)
     assert sorted(map(tuple, twin.collect())) == sorted(
         map(tuple, batch.collect())
@@ -132,7 +118,6 @@ def test_stats_twin_equals_batch_serving(spark, sf_dir, t):
 def test_stats_twin_on_multipart_lineitem(spark, sf_dir, tmp_path_factory):
     """The twin's replay must survive the production layout: a
     Spark-written 3-part lineitem directory table."""
-    from bigdata_spark_realtime_spark.plans import ext_stream_tail7 as tail7
     from bigdata_spark_realtime_spark.plans import serving
 
     work = str(tmp_path_factory.mktemp("stats_twin_sf"))
@@ -146,7 +131,7 @@ def test_stats_twin_on_multipart_lineitem(spark, sf_dir, tmp_path_factory):
             spark.read.parquet(src).repartition(3).write.parquet(dst)
         else:
             os.symlink(src, dst)
-    twin = tail7.stream_stats_by_item_age(spark, work)
+    twin = serving.stream_stats_by_item_age(spark, work)
     batch = serving.serving_stats_by_item_age(spark, sf_dir)
     assert sorted(map(tuple, twin.collect())) == sorted(
         map(tuple, batch.collect())
