@@ -22,10 +22,27 @@ failures are under ``errors`` and the surviving queries' sum under
 ``partial_sum_sec``) — a partial run must never report a smaller, i.e.
 better-looking, total than a clean run. Sometimes-failing queries are
 listed under ``flaky`` without nulling the total.
+
+This is the repo's one warm-up and timing loop (:func:`warm_up`,
+:func:`timed_noop`, :func:`time_passes`); ``scripts/scale_smoke.py``
+times through it too. Usage::
+
+    python bench.py                                # headline run
+    python bench.py q1_pricing_summary ext_bm25_search
+    python bench.py --explain /tmp/plans ext_split_leakage
+    SPARK_GRAFT_BENCH_PASSES=1 python bench.py --snapshot > audit.jsonl
+
+Named queries replace the headline set and never merge into
+``BENCH_LOCAL_r{N}.json``. ``--explain DIR`` writes ``DIR/<name>.txt``
+(``explain('formatted')``) after warm-up; with
+``SPARK_GRAFT_BENCH_PASSES=0`` nothing is timed. ``--snapshot`` prints
+one untimed JSON record per timed query (cached RDDs, memo entries,
+GC, heap) before the result line.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
@@ -35,6 +52,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from bigdata_spark_realtime_spark.plans import registry
 from bigdata_spark_realtime_spark.session import get_spark
+from bigdata_spark_realtime_spark.sources.tables import TABLE_NAMES, load_table
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -124,52 +142,52 @@ HEADLINE: tuple[str, ...] = (
 )
 
 
-def main() -> None:
-    spark = get_spark(app_name="bsr-bench")
+def main(argv: list[str] | None = None) -> int:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument(
+        "names", nargs="*", metavar="NAME",
+        help="registered queries to time instead of the headline set "
+        "(such a run prints the same line but never merges into "
+        "BENCH_LOCAL_r{N}.json)",
+    )
+    ap.add_argument(
+        "--explain", metavar="DIR",
+        help="write DIR/<name>.txt from explain('formatted') after warm-up",
+    )
+    ap.add_argument(
+        "--snapshot", action="store_true",
+        help="after each timed query, print one untimed JSON record of "
+        "cached RDDs, memo entries, JVM GC and heap (see snapshot())",
+    )
+    args = ap.parse_args(argv)
     specs = registry.load_all()
-    names = [n for n in HEADLINE if n in specs] or sorted(specs)
+    unknown = [n for n in args.names if n not in specs]
+    if unknown:
+        print(f"bench: unknown queries: {unknown}", file=sys.stderr)
+        return 2
+    spark = get_spark(app_name="bsr-bench")
+    try:
+        run(spark, specs, args.names, SF_DIR, args.explain, args.snapshot)
+    finally:
+        spark.stop()
+    return 0
 
-    timings: dict[str, float] = {}
-    # warm the JVM (codegen/JIT) and the parquet footer cache for every
-    # table, then one full query, so timings reflect steady state
-    from bigdata_spark_realtime_spark.sources.tables import TABLE_NAMES, load_table
 
-    # per-table try/except: a single table's schema drift must cost that
-    # table its warm-up (reported loudly on stderr), never the whole
-    # bench — round 4 lost all numbers to one loader exception here
-    skipped = []
-    for t in TABLE_NAMES:
-        try:
-            # full-column scan, not count(): count() prunes every column,
-            # so heavy columns (documents.text, embeddings.embedding)
-            # would stay cold and their decompression cost would be
-            # charged to whichever headline query touches them first
-            load_table(spark, SF_DIR, t).write.format("noop").mode("overwrite").save()
-        except Exception as e:  # noqa: BLE001 — warm-up is best-effort
-            skipped.append(t)
-            print(f"bench: warm-up skipped table {t}: {e!r}"[:500], file=sys.stderr)
-    if skipped:
-        print(f"bench: WARNING warm-up skipped tables: {skipped}", file=sys.stderr)
-    # spin up the Python worker pool too (reused across queries, same as
-    # a long-lived cluster): the vectorized Arrow-batch operators should
-    # measure steady-state kernel time, not one-time fork cost
-    spark.range(64).repartition(32).mapInPandas(
-        lambda it: it, "id long"
-    ).write.format("noop").mode("overwrite").save()
-    # JIT warm-up: run every headline query once at the smallest SF.
-    # First execution of a plan pays whole-stage-codegen compile + JVM C2
-    # (measured ~1.5 s flat for the md5/regex plans, independent of row
-    # count); a long-lived cluster pays that once per plan shape, so the
-    # timed sf0.1 pass below should measure steady-state kernels.
-    warm_dir = os.environ.get("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
-    if os.path.isdir(warm_dir):
-        for name in names:
-            try:
-                specs[name].fn(spark, warm_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-            except Exception as e:  # noqa: BLE001 — warm-up is best-effort
-                print(f"bench: warm-up skipped {name}: {e!r}"[:300], file=sys.stderr)
+def run(
+    spark,
+    specs: dict,
+    names: list[str],
+    sf_dir: str,
+    explain_dir: str | None = None,
+    snap: bool = False,
+) -> dict:
+    """Warm up, time, print the compact line; returns the payload. Only
+    the headline run (no ``names``) merges into the round artifact."""
+    headline = not names
+    names = list(names) or [n for n in HEADLINE if n in specs] or sorted(specs)
+    warm_up(spark, specs, names, sf_dir)
+    if explain_dir:
+        write_explains(spark, specs, names, sf_dir, explain_dir)
 
     # N timed passes, report the per-query MIN across passes. Min is the
     # steady-state time by definition and is immune to one-sided noise:
@@ -195,29 +213,11 @@ def main() -> None:
         time.sleep(5)
     load_before = os.getloadavg()[0]
     calib_before = md5_calibration_probe()
-    passes: list[dict[str, float]] = []
-    fail_counts: dict[str, int] = {}
-    last_error: dict[str, str] = {}
-    for _pass in range(n_passes):
-        pass_timings: dict[str, float] = {}
-        for name in names:
-            t0 = time.perf_counter()
-            try:
-                specs[name].fn(spark, SF_DIR).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-            except Exception as e:  # noqa: BLE001 — report partial numbers, loudly
-                fail_counts[name] = fail_counts.get(name, 0) + 1
-                last_error[name] = repr(e)[:300]
-                print(f"bench: query {name} FAILED: {e!r}"[:500], file=sys.stderr)
-                continue
-            pass_timings[name] = round(time.perf_counter() - t0, 3)
-        passes.append(pass_timings)
-    timings, errors, flaky = aggregate_passes(
-        names, passes, fail_counts, last_error, n_passes
+    timings, errors, flaky, passes = time_passes(
+        spark, specs, names, sf_dir, n_passes, snap
     )
 
-    payload = build_payload(timings, errors, SF_DIR)
+    payload = build_payload(timings, errors, sf_dir)
     payload["passes"] = passes
     payload["loadavg_1m"] = [round(load_before, 2), round(os.getloadavg()[0], 2)]
     payload["calib"] = {
@@ -225,8 +225,9 @@ def main() -> None:
     }
     if flaky:
         payload["flaky"] = flaky
-    print(build_compact_line(payload, timings))
-    repo = os.path.dirname(os.path.abspath(__file__))
+    print(build_compact_line(payload, timings), flush=True)
+    if not headline:
+        return payload
     # Clobber-proof per-round artifact (round-11 judge task #5): the
     # legacy latest-run-only BENCH_LOCAL.json overwrite is retired
     # (round-12 judge task #7 — a contended post-snapshot driver
@@ -238,11 +239,164 @@ def main() -> None:
     # argument as min-across-passes: contention can only inflate a run,
     # so the min is the clean evidence and a later noisy run can never
     # overwrite it).
+    repo = os.path.dirname(os.path.abspath(__file__))
     try:
         merge_round_artifact(repo, payload, timings, headline=names)
     except Exception as e:  # noqa: BLE001 — never die between bench and stop
         print(f"bench: could not merge round artifact: {e!r}", file=sys.stderr)
-    spark.stop()
+    return payload
+
+
+def timed_noop(fn, spark, sf_dir: str) -> float:
+    """Build ``fn(spark, sf_dir)`` and run it to completion through the
+    noop sink — every column of every row computed, nothing collected
+    (plan execution time, not result serialization). Returns wall
+    seconds, plan building and any eager jobs included."""
+    t0 = time.perf_counter()
+    fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    return round(time.perf_counter() - t0, 3)
+
+
+def warm_up(
+    spark, specs: dict, names: list[str], sf_dir: str, warm_dir: str | None = None
+) -> None:
+    """Warm the JVM (codegen/JIT), the parquet footer cache of every
+    table and the Python worker pool, then run each query once at
+    ``warm_dir`` (default ``$SPARK_GRAFT_WARM_DIR``, sf0.001), so the
+    timed passes reflect steady state. Best-effort: a failure costs
+    only that step its warm-up, reported loudly on stderr — round 4
+    lost all numbers to one loader exception here."""
+    skipped = []
+    for t in TABLE_NAMES:
+        try:
+            # full-column scan, not count(): count() prunes every column,
+            # so heavy columns (documents.text, embeddings.embedding)
+            # would stay cold and their decompression cost would be
+            # charged to whichever headline query touches them first
+            timed_noop(lambda s, d, t=t: load_table(s, d, t), spark, sf_dir)
+        except Exception as e:  # noqa: BLE001 — warm-up is best-effort
+            skipped.append(t)
+            print(f"bench: warm-up skipped table {t}: {e!r}"[:500], file=sys.stderr)
+    if skipped:
+        print(f"bench: WARNING warm-up skipped tables: {skipped}", file=sys.stderr)
+    # spin up the Python worker pool too (reused across queries, same as
+    # a long-lived cluster): the vectorized Arrow-batch operators should
+    # measure steady-state kernel time, not one-time fork cost
+    timed_noop(
+        lambda s, _: s.range(64).repartition(32).mapInPandas(
+            lambda it: it, "id long"
+        ),
+        spark,
+        sf_dir,
+    )
+    # JIT warm-up: run every query once at the smallest SF. First
+    # execution of a plan pays whole-stage-codegen compile + JVM C2
+    # (measured ~1.5 s flat for the md5/regex plans, independent of row
+    # count); a long-lived cluster pays that once per plan shape, so the
+    # timed passes should measure steady-state kernels.
+    if warm_dir is None:
+        warm_dir = os.environ.get("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
+    if os.path.isdir(warm_dir):
+        for name in names:
+            try:
+                timed_noop(specs[name].fn, spark, warm_dir)
+            except Exception as e:  # noqa: BLE001 — warm-up is best-effort
+                print(f"bench: warm-up skipped {name}: {e!r}"[:300], file=sys.stderr)
+
+
+def time_passes(
+    spark,
+    specs: dict,
+    names: list[str],
+    sf_dir: str,
+    n_passes: int,
+    snap: bool = False,
+) -> tuple[dict[str, float], dict[str, str], dict[str, str], list[dict[str, float]]]:
+    """The one timing policy: ``n_passes`` pass-major sweeps over
+    ``names`` (every query once per pass), per-query min across passes
+    (see :func:`aggregate_passes`). Returns ``(timings, errors, flaky,
+    passes)``. With ``snap``, prints a post-warm-up :func:`snapshot`
+    record and one after each successful query, outside its timing."""
+    passes: list[dict[str, float]] = []
+    fail_counts: dict[str, int] = {}
+    last_error: dict[str, str] = {}
+    if snap:
+        base = snapshot(spark)
+        print(json.dumps({"pos": -1, "query": "<post-warmup>", **base}))
+        prev_gc_ms = base["gc_ms"]
+    for _pass in range(n_passes):
+        pass_timings: dict[str, float] = {}
+        for pos, name in enumerate(names):
+            try:
+                pass_timings[name] = timed_noop(specs[name].fn, spark, sf_dir)
+            except Exception as e:  # noqa: BLE001 — report partial numbers, loudly
+                fail_counts[name] = fail_counts.get(name, 0) + 1
+                last_error[name] = repr(e)[:300]
+                print(f"bench: query {name} FAILED: {e!r}"[:500], file=sys.stderr)
+                continue
+            if snap:
+                st = snapshot(spark)
+                st["gc_ms_delta"] = st["gc_ms"] - prev_gc_ms
+                prev_gc_ms = st["gc_ms"]
+                print(
+                    json.dumps({"pos": pos, "query": name, "sec": pass_timings[name], **st}),
+                    flush=True,
+                )
+        passes.append(pass_timings)
+    return (
+        *aggregate_passes(names, passes, fail_counts, last_error, n_passes),
+        passes,
+    )
+
+
+def snapshot(spark) -> dict:
+    """Untimed engine-state record: cached-RDD count and bytes
+    (``getRDDStorageInfo``), the memo's live entries per artifact
+    (``cache.entries()``), cumulative JVM GC count/time over all
+    collector MX beans, and used heap — answers whether a full pass
+    accretes cache state or GC time query by query."""
+    from bigdata_spark_realtime_spark import cache
+
+    sc = spark.sparkContext
+    infos = sc._jsc.sc().getRDDStorageInfo()
+    beans = sc._jvm.java.lang.management.ManagementFactory.getGarbageCollectorMXBeans()
+    gc_count = gc_ms = 0
+    it = beans.iterator()
+    while it.hasNext():
+        b = it.next()
+        gc_count += max(b.getCollectionCount(), 0)
+        gc_ms += max(b.getCollectionTime(), 0)
+    rt = sc._jvm.java.lang.Runtime.getRuntime()
+    return {
+        "cached_rdds": len(infos),
+        "cached_mem_mb": round(sum(i.memSize() for i in infos) / 1e6, 1),
+        "cached_disk_mb": round(sum(i.diskSize() for i in infos) / 1e6, 1),
+        "memo_entries": cache.entries(),
+        "gc_count": gc_count,
+        "gc_ms": gc_ms,
+        "heap_used_mb": round((rt.totalMemory() - rt.freeMemory()) / 1e6),
+    }
+
+
+def write_explains(
+    spark, specs: dict, names: list[str], sf_dir: str, explain_dir: str
+) -> None:
+    """``explain('formatted')`` per query into ``explain_dir/<name>.txt``,
+    so a change's plan-shape effect (Exchange count, join strategy,
+    PushedFilters, EvalPython nodes) is reviewable as a file diff."""
+    import contextlib
+    import io
+
+    os.makedirs(explain_dir, exist_ok=True)
+    for name in names:
+        df = specs[name].fn(spark, sf_dir)
+        buf = io.StringIO()
+        with contextlib.redirect_stdout(buf):
+            df.explain("formatted")
+        path = os.path.join(explain_dir, f"{name}.txt")
+        with open(path, "w") as f:
+            f.write(buf.getvalue())
+        print(f"bench: explain -> {path}", file=sys.stderr)
 
 
 def md5_calibration_probe(seconds: float = 0.4) -> int:
@@ -447,4 +601,4 @@ def build_payload(
 
 
 if __name__ == "__main__":
-    main()
+    raise SystemExit(main())

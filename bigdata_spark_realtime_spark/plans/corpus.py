@@ -102,13 +102,9 @@ def scoped_persist(df: DataFrame, scope: str, keep: int = 2) -> DataFrame:
 #: pressure/overhead caching creates — measured at sf0.1 in round 16:
 #: persisting bm25's 0.6 MB-source projections cost +0.7 s/query).
 #: Deliberately keyed on INPUT SIZE, not core count or a local tune:
-#: any 100 TB table passes the gate on any cluster, every test SF stays
-#: on the recompute path, and the env override exists for odd hosts.
-PERSIST_MIN_INPUT_BYTES = int(
-    __import__("os").environ.get(
-        "SPARK_GRAFT_PERSIST_MIN_INPUT_BYTES", str(64 << 20)
-    )
-)
+#: any 100 TB table passes the gate on any cluster, and every test SF
+#: stays on the recompute path.
+PERSIST_MIN_INPUT_BYTES = 64 << 20
 
 
 def _input_bytes(sf_dir: str, table: str) -> int:

@@ -12,18 +12,22 @@ This sweep materializes a schema-faithful zero-row copy of all ten
 tables (schemas read from sf0.001 via pyarrow, no data dependency) and
 runs EVERY registered query against it — and, where the query is
 oracled, runs the DuckDB oracle on the same empty views and compares
-with the suite's driver-faithful comparator. One line per problem:
+with the suite's driver-faithful comparator (``oracle_sweep.sweep``,
+the one oracle loop). One line per problem. The boundary is one
+positional mode argument — ``rows=N`` (default ``rows=0``),
+``clones=K``, ``nulls``, ``text``, ``reverse``, ``unicode``, ``dupes``
+or ``wide``:
 
     python scripts/empty_input_sweep.py                       # 0 rows
-    SPARK_GRAFT_BOUNDARY_ROWS=1 python scripts/empty_input_sweep.py
+    python scripts/empty_input_sweep.py rows=1
+    python scripts/empty_input_sweep.py clones=100
 
-`SPARK_GRAFT_BOUNDARY_ROWS=N` keeps the first N rows of each table
-instead of zero — N=1 is the other classic boundary (single-row
-windows, lag with no predecessor, stddev of one sample, percentile
-interpolation with nothing to interpolate, LSH with one document).
-`SPARK_GRAFT_BOUNDARY_CLONES=K` (with ROWS=1) repeats that first row
-K times with UNIQUE primary keys (base + i — every other column
-constant): the constant-content table. One hot join/group key
+`rows=N` keeps the first N rows of each table instead of zero — N=1
+is the other classic boundary (single-row windows, lag with no
+predecessor, stddev of one sample, percentile interpolation with
+nothing to interpolate, LSH with one document). `clones=K` keeps the
+first row and repeats it K times with UNIQUE primary keys (base + i —
+every other column constant): the constant-content table. One hot join/group key
 everywhere (maximum skew), every document an exact duplicate of every
 other (LSH bands collapse into ONE bucket, driving the bucket-cap
 fallback), rank/row_number ties on every ordering key. Keys must stay
@@ -33,7 +37,7 @@ per-row kernels keep, a data artifact, not an engine divergence.
 Both engines read the SAME files, so every remaining divergence is an
 engine semantics difference, never a data artifact.
 
-`SPARK_GRAFT_BOUNDARY_NULLS=1` runs at FULL sf0.001 but NULLs every
+`nulls` runs at FULL sf0.001 but NULLs every
 3rd row of the optional attribute columns (measure/JSON/label columns
 — never keys, timestamps, or the document text the kernel contract
 declares NOT NULL): the generator writes zero NULLs anywhere, so
@@ -43,7 +47,7 @@ with NULLs (Spark ASC defaults NULLS FIRST, DuckDB NULLS LAST),
 `concat` (Spark propagates NULL, DuckDB treats it as ''), NaN-vs-NULL
 coercions.
 
-`SPARK_GRAFT_BOUNDARY_REVERSE=1` runs at FULL sf0.001 with every
+`reverse` runs at FULL sf0.001 with every
 table's physical row order REVERSED. Every query must be a
 deterministic function of the row SET: any kernel or plan taking a
 "first" row per group without a total order produces a different
@@ -51,14 +55,14 @@ answer on the reversed file than DuckDB does, surfacing hidden
 arrival-order dependence — the nondeterminism that shows up at
 cluster scale as flaky results across runs.
 
-`SPARK_GRAFT_BOUNDARY_TEXT=1` runs at FULL sf0.001 but rewrites the
+`text` runs at FULL sf0.001 but rewrites the
 document text by position: every 4th doc becomes the EMPTY string,
 the next a single non-ASCII char, the next whitespace-only — the
 tokenizer/shingle/quality-ratio edges (zero-length division, zero
 shingles, unicode length vs byte length) that generator prose can
 never produce.
 
-`SPARK_GRAFT_BOUNDARY_UNICODE=1` runs at FULL sf0.001 with adversarial
+`unicode` runs at FULL sf0.001 with adversarial
 unicode woven into the document text (and a rotating subset of `lang`
 values): NFC and NFD spellings of the same word on ADJACENT rows,
 combining-mark stacks, astral-plane (surrogate-pair) emoji and CJK,
@@ -69,7 +73,7 @@ tokenization over non-Latin scripts, group-key equality of
 canonically-equal-but-byte-different strings (both engines must treat
 NFC ≠ NFD — byte semantics — for the hash gate to hold).
 
-`SPARK_GRAFT_BOUNDARY_DUPES=1` runs at FULL sf0.001 with every 5th
+`dupes` runs at FULL sf0.001 with every 5th
 events row APPENDED AGAIN VERBATIM (same event_id — an at-least-once
 replay / CDC double-fire, the 100 TB ingestion norm). events is the
 one table whose contract does not guarantee key uniqueness
@@ -79,13 +83,13 @@ must be a deterministic function of the (multi)set both engines read:
 dedup operators must collapse the replays, count-based ones must count
 them, and neither may crash on the tie.
 
-`SPARK_GRAFT_BOUNDARY_WIDE=1` runs at FULL sf0.001 with adversarial
+`wide` runs at FULL sf0.001 with adversarial
 RECORD WIDTH — the ninth mode, the one axis the first eight
 (cardinality, skew, nulls, text edges, order, unicode, dupes) never
 stressed: every 25th document's text is replaced by deterministic
 multi-hundred-KiB prose (widths cycle 1 MiB / 256 KiB / 64 KiB; a
 distinct word stride per doc so the giants are NOT near-dups of each
-other — the all-duplicate shape is the CLONES mode's job), `n_chars`
+other — the all-duplicate shape is the clones mode's job), `n_chars`
 kept consistent, and every 100th events row carries a ~256 KiB JSON
 ``props`` payload. A single record much wider than the Arrow batch
 target is what a 100 TB web corpus actually contains (concatenated
@@ -106,19 +110,12 @@ import os
 import shutil
 import sys
 import tempfile
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bigdata_spark_realtime_spark.sources.tables import TABLE_NAMES as TABLES
+
 SCHEMA_SF_DIR = os.environ.get("SPARK_GRAFT_SCHEMA_SF", "/root/testdata/sf0.001")
-BOUNDARY_ROWS = int(os.environ.get("SPARK_GRAFT_BOUNDARY_ROWS", "0"))
-BOUNDARY_CLONES = int(os.environ.get("SPARK_GRAFT_BOUNDARY_CLONES", "1"))
-BOUNDARY_NULLS = os.environ.get("SPARK_GRAFT_BOUNDARY_NULLS", "") == "1"
-BOUNDARY_TEXT = os.environ.get("SPARK_GRAFT_BOUNDARY_TEXT", "") == "1"
-BOUNDARY_REVERSE = os.environ.get("SPARK_GRAFT_BOUNDARY_REVERSE", "") == "1"
-BOUNDARY_UNICODE = os.environ.get("SPARK_GRAFT_BOUNDARY_UNICODE", "") == "1"
-BOUNDARY_DUPES = os.environ.get("SPARK_GRAFT_BOUNDARY_DUPES", "") == "1"
-BOUNDARY_WIDE = os.environ.get("SPARK_GRAFT_BOUNDARY_WIDE", "") == "1"
 
 #: optional attribute columns NULLed (every 3rd row) under the nulls
 #: boundary. Deliberately excluded: primary/foreign keys (contract),
@@ -134,12 +131,6 @@ _NULLABLE = {
     "lineitem": ["l_discount"],
     "embeddings": ["embedding"],
 }
-
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
-
 
 #: per-table primary-key column re-sequenced under cloning (base + i);
 #: every other column repeats verbatim. lineitem's key is the
@@ -178,7 +169,7 @@ def materialize_empty_tables(dest: str, rows: int = 0, clones: int = 1) -> None:
                 # tables' FK columns still reference (round-13 advisor)
                 if rows != 1:
                     raise ValueError(
-                        "BOUNDARY_CLONES > 1 requires BOUNDARY_ROWS == 1: "
+                        "clones > 1 requires rows == 1: "
                         "re-sequencing would rewrite the original rows' "
                         "keys and break cross-table FK references"
                     )
@@ -378,101 +369,52 @@ def materialize_reversed_tables(dest: str) -> None:
         pq.write_table(table.take(idx), os.path.join(dest, f"{t}.parquet"))
 
 
-def main() -> int:
-    import duckdb
+#: the modes that rewrite a FULL schema-sf copy (see module doc)
+_FULL_SF_MODES = {
+    "nulls": materialize_nulled_tables,
+    "text": materialize_text_edge_tables,
+    "reverse": materialize_reversed_tables,
+    "unicode": materialize_unicode_tables,
+    "dupes": materialize_duped_tables,
+    "wide": materialize_wide_tables,
+}
 
-    import __spark_entry__ as entry
+
+def materializer(mode: str):
+    """The table writer ``dest -> None`` for one boundary mode; exits
+    with a usage error on an unknown mode (before Spark starts)."""
+    key, eq, n = mode.partition("=")
+    if eq and n.isdigit() and key == "rows":
+        return lambda dest: materialize_empty_tables(dest, rows=int(n))
+    if eq and n.isdigit() and key == "clones":
+        return lambda dest: materialize_empty_tables(dest, rows=1, clones=int(n))
+    if not eq and key in _FULL_SF_MODES:
+        return _FULL_SF_MODES[key]
+    raise SystemExit(
+        f"unknown boundary mode {mode!r}: expected rows=N, clones=K, "
+        + ", ".join(_FULL_SF_MODES)
+    )
+
+
+def main(argv: list[str] | None = None) -> int:
+    args = sys.argv[1:] if argv is None else argv
+    if len(args) > 1:
+        raise SystemExit(f"usage: empty_input_sweep.py [MODE], got {args}")
+    mode = args[0] if args else "rows=0"
+    write = materializer(mode)
+
+    from oracle_sweep import sweep
     from bigdata_spark_realtime_spark.session import get_spark
 
-    sys.path.insert(
-        0,
-        os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tests"
-        ),
-    )
-    from oracle_util import assert_matches_oracle
-
-    empty_dir = tempfile.mkdtemp(prefix="bsr_empty_sf_")
-    if BOUNDARY_WIDE:
-        materialize_wide_tables(empty_dir)
-    elif BOUNDARY_UNICODE:
-        materialize_unicode_tables(empty_dir)
-    elif BOUNDARY_DUPES:
-        materialize_duped_tables(empty_dir)
-    elif BOUNDARY_REVERSE:
-        materialize_reversed_tables(empty_dir)
-    elif BOUNDARY_TEXT:
-        materialize_text_edge_tables(empty_dir)
-    elif BOUNDARY_NULLS:
-        materialize_nulled_tables(empty_dir)
-    else:
-        materialize_empty_tables(empty_dir, BOUNDARY_ROWS, BOUNDARY_CLONES)
-
-    spark = get_spark(app_name="bsr-empty-sweep")
-    spark.sparkContext.setLogLevel("ERROR")
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{empty_dir}/{t}.parquet')"
-        )
-    oracles = entry.oracle_sql()
-
-    class _DF:  # minimal .toPandas() shim for the comparator
-        def __init__(self, pdf):
-            self._pdf = pdf
-
-        def toPandas(self):
-            return self._pdf
-
-    problems = []
-    t0 = time.time()
-    names = entry.queries()
-    for i, (name, fn) in enumerate(names.items(), 1):
-        # progress to stderr, flushed per query: if the sweep dies hard
-        # (the wide mode's first run was OOM-killed with no traceback),
-        # the last line names the culprit instead of leaving a silent
-        # exit for the harness to bisect.
-        print(f"[sweep {i}/{len(names)}] {name}", file=sys.stderr, flush=True)
-        try:
-            got = fn(spark, empty_dir).toPandas()
-        except Exception as ex:  # noqa: BLE001 — report and continue
-            problems.append((name, f"SPARK-ERROR {type(ex).__name__}: {ex}"))
-            continue
-        if name not in oracles:
-            continue
-        try:
-            assert_matches_oracle(_DF(got), con, oracles[name])
-        except AssertionError as ex:
-            problems.append((name, f"MISMATCH {ex}"))
-        except Exception as ex:  # noqa: BLE001
-            problems.append((name, f"ORACLE-ERROR {type(ex).__name__}: {ex}"))
-    print(
-        f"boundary swept {len(names)} queries "
-        f"({len(oracles)} oracled) at "
-        + ("FULL sf, wide records" if BOUNDARY_WIDE
-           else "FULL sf, adversarial unicode" if BOUNDARY_UNICODE
-           else "FULL sf, events replayed (dupe keys)" if BOUNDARY_DUPES
-           else "FULL sf, row order reversed" if BOUNDARY_REVERSE
-           else "FULL sf, text-edges" if BOUNDARY_TEXT
-           else "FULL sf, nulls-injected" if BOUNDARY_NULLS
-           else f"{BOUNDARY_ROWS} rows/table x{BOUNDARY_CLONES} clones")
-        + f" in {time.time() - t0:.0f}s"
-    )
-    for name, why in problems:
-        print(f"PROBLEM {name}: {why}")
-    if not problems:
-        print(
-            "ALL CLEAN WITH WIDE RECORDS" if BOUNDARY_WIDE
-            else "ALL CLEAN WITH ADVERSARIAL UNICODE" if BOUNDARY_UNICODE
-            else "ALL CLEAN WITH DUPLICATED EVENT KEYS" if BOUNDARY_DUPES
-            else "ALL CLEAN WITH ROW ORDER REVERSED" if BOUNDARY_REVERSE
-            else "ALL CLEAN WITH TEXT EDGES" if BOUNDARY_TEXT
-            else "ALL CLEAN WITH NULLS INJECTED" if BOUNDARY_NULLS
-            else f"ALL CLEAN AT {BOUNDARY_ROWS} ROWS/TABLE x{BOUNDARY_CLONES} CLONES"
-        )
-    spark.stop()
-    shutil.rmtree(empty_dir, ignore_errors=True)
+    boundary_dir = tempfile.mkdtemp(prefix="bsr_boundary_sf_")
+    try:
+        write(boundary_dir)
+        spark = get_spark(app_name="bsr-empty-sweep")
+        spark.sparkContext.setLogLevel("ERROR")
+        problems = sweep(spark, boundary_dir, label=f"boundary {mode}")
+        spark.stop()
+    finally:
+        shutil.rmtree(boundary_dir, ignore_errors=True)
     return 1 if problems else 0
 
 

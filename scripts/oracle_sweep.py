@@ -3,12 +3,18 @@
 The per-test mirrors run at sf0.001 (fast suite) and sf0.01 (the
 driver's gate sf). Some divergences need a bigger haystack: a
 half-way-adjacent double for a float round, an LSH cap or skew
-fallback actually triggering. This sweep runs EVERY oracled query
-against DuckDB at the given sf-dir (default the bench sf, 0.1) and
-prints one line per problem — run it once per round:
+fallback actually triggering. This sweep runs EVERY registered query
+against the given sf-dir (default the bench sf, 0.1), compares each
+oracled one with DuckDB on the same files, and prints one line per
+problem — run it once per round:
 
     python scripts/oracle_sweep.py                      # sf0.1
     SPARK_GRAFT_SWEEP_DIR=/root/testdata/sf0.01 python scripts/oracle_sweep.py
+    SPARK_GRAFT_SWEEP_ONLY=q2_min_cost_supplier,ext_lm_score \\
+        python scripts/oracle_sweep.py                  # a subset
+
+:func:`sweep` is the repo's one oracle-compare loop;
+``scripts/empty_input_sweep.py`` runs it over boundary tables.
 
 Round-8 catch: q2_min_cost_supplier's round(x, 4) flipped its last
 digit between engines on exactly one sf0.1 row (fixed by moving the
@@ -21,64 +27,63 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _REPO)
+
+from bigdata_spark_realtime_spark.sources.tables import TABLE_NAMES
 
 SWEEP_DIR = os.environ.get("SPARK_GRAFT_SWEEP_DIR", "/root/testdata/sf0.1")
-
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
+#: optional subset: comma-separated query names (lets a change's blast
+#: radius be re-verified in seconds; the per-round gate runs them all)
+ONLY = {n for n in os.environ.get("SPARK_GRAFT_SWEEP_ONLY", "").split(",") if n}
 
 
-def main() -> int:
+class _DF:
+    """Minimal ``.toPandas()`` shim: the comparator takes a frame, the
+    sweep hands it the already-collected result so a Spark failure and
+    an oracle failure stay distinguishable."""
+
+    def __init__(self, pdf):
+        self._pdf = pdf
+
+    def toPandas(self):
+        return self._pdf
+
+
+def sweep(spark, sf_dir: str, label: str | None = None) -> list[tuple[str, str]]:
+    """Run every registered query (or ``$SPARK_GRAFT_SWEEP_ONLY``) at
+    ``sf_dir`` and compare each oracled one with DuckDB over the same
+    parquet files. Prints a summary, one ``PROBLEM`` line per
+    SPARK-ERROR / MISMATCH / ORACLE-ERROR and ``ALL EXACT`` when there
+    are none; returns the problems."""
     import duckdb
 
     import __spark_entry__ as entry
-    from bigdata_spark_realtime_spark.session import get_spark
-
-    sys.path.insert(
-        0,
-        os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tests"),
-    )
-    from oracle_util import assert_matches_oracle
-
-    spark = get_spark(app_name="bsr-oracle-sweep")
-    spark.sparkContext.setLogLevel("ERROR")
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{SWEEP_DIR}/{t}.parquet')"
-        )
-    oracles = entry.oracle_sql()
 
     # reuse the suite's comparator (tests/oracle_util): it enforces the
     # driver-relevant dtype-KIND check (int-vs-float divergence raw
     # numpy equality would miss) and handles NULL/NaN columns that
     # would spuriously flag under element equality
-    class _DF:  # minimal .toPandas() shim for the helper
-        def __init__(self, pdf):
-            self._pdf = pdf
+    sys.path.insert(0, os.path.join(_REPO, "tests"))
+    from oracle_util import assert_matches_oracle
 
-        def toPandas(self):
-            return self._pdf
-
-    # optional subset: comma-separated query names (r15 tooling — lets a
-    # change's blast radius be re-verified in seconds instead of a full
-    # sweep; the per-round gate still runs the unfiltered sweep)
-    only = {
-        n for n in os.environ.get("SPARK_GRAFT_SWEEP_ONLY", "").split(",") if n
-    }
+    con = duckdb.connect()
+    for t in TABLE_NAMES:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM "
+            f"read_parquet('{sf_dir}/{t}.parquet')"
+        )
+    oracles = entry.oracle_sql()
+    names = {n: fn for n, fn in entry.queries().items() if not ONLY or n in ONLY}
     problems = []
     t0 = time.time()
-    checked = 0
-    for name, fn in entry.queries().items():
-        if only and name not in only:
-            continue
-        checked += 1
+    for i, (name, fn) in enumerate(names.items(), 1):
+        # progress to stderr, flushed per query: if the sweep dies hard
+        # (the wide boundary's first run was OOM-killed with no
+        # traceback), the last line names the culprit
+        print(f"[sweep {i}/{len(names)}] {name}", file=sys.stderr, flush=True)
         try:
-            got = fn(spark, SWEEP_DIR).toPandas()
+            got = fn(spark, sf_dir).toPandas()
         except Exception as ex:  # noqa: BLE001 — report and continue
             problems.append((name, f"SPARK-ERROR {type(ex).__name__}: {ex}"))
             continue
@@ -90,12 +95,25 @@ def main() -> int:
             problems.append((name, f"MISMATCH {ex}"))
         except Exception as ex:  # noqa: BLE001
             problems.append((name, f"ORACLE-ERROR {type(ex).__name__}: {ex}"))
-    print(f"swept {checked if only else len(oracles)} oracled queries "
-          f"at {SWEEP_DIR} in {time.time() - t0:.0f}s")
+    con.close()
+    n_oracled = sum(n in oracles for n in names)
+    print(
+        f"swept {len(names)} queries ({n_oracled} oracled) at "
+        f"{label or sf_dir} in {time.time() - t0:.0f}s"
+    )
     for name, why in problems:
         print(f"PROBLEM {name}: {why}")
     if not problems:
         print("ALL EXACT")
+    return problems
+
+
+def main() -> int:
+    from bigdata_spark_realtime_spark.session import get_spark
+
+    spark = get_spark(app_name="bsr-oracle-sweep")
+    spark.sparkContext.setLogLevel("ERROR")
+    problems = sweep(spark, SWEEP_DIR)
     spark.stop()
     return 1 if problems else 0
 

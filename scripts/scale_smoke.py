@@ -18,11 +18,12 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import pyspark.sql.functions as F
+
+import bench
 
 BASE = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 REPS = int(os.environ.get("SPARK_GRAFT_SMOKE_REPS", "10"))
@@ -413,38 +414,31 @@ def media_smoke(spark, specs) -> None:
     for base, tag in ((orig, "media_1x"), (big_media, "media_10x")):
         mm.MEDIA_BASE = base
         try:
-            timings = {}
-            for name in MEDIA_QUERIES:
-                fn = specs[name].fn
-                fn(spark, BASE).write.format("noop").mode("overwrite").save()
-                timings[name] = _timed_min(fn, spark, BASE)
-            print(json.dumps({"scale": tag, "queries": timings}))
+            timed = _timed(spark, specs, MEDIA_QUERIES, BASE)
+            print(json.dumps({"scale": tag, **timed}))
         finally:
             mm.MEDIA_BASE = orig
 
 
-def _timed_min(fn, spark, sf_dir: str, passes: int = 2) -> float:
-    """Min of ``passes`` timed executions (after the caller's warm run).
-
-    Same one-sided-noise argument as bench.py's min-across-passes: a
-    single-shot timing inside a long sequential sweep picks up GC /
-    cache-pressure spikes from the preceding heavy queries — round 12's
-    first 30x sweep read ext_rollup_cascade at 11x and ext_bigram_pmi
-    at 9x, while isolated re-timing showed 1.2x and 2.3x. A spike can
-    only inflate one pass, never deflate another, so the min is the
-    steady-state number."""
-    ts = []
-    for _ in range(passes):
-        t0 = time.perf_counter()
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        ts.append(time.perf_counter() - t0)
-    return round(min(ts), 3)
+def _timed(spark, specs, names, sf_dir: str) -> dict:
+    """bench.py's timing policy at ``sf_dir``: warm-up (every query once
+    at the SAME sf, so replica-scale memos and plans are warm), then
+    min of 2 pass-major timed passes. A single-shot timing inside a
+    long sequential sweep picks up GC / cache-pressure spikes from the
+    preceding heavy queries — round 12's first 30x sweep read
+    ext_rollup_cascade at 11x and ext_bigram_pmi at 9x, while isolated
+    re-timing showed 1.2x and 2.3x. A spike can only inflate one pass,
+    never deflate another, so the min is the steady-state number."""
+    bench.warm_up(spark, specs, names, sf_dir, warm_dir=sf_dir)
+    timings, errors, _flaky, _passes = bench.time_passes(
+        spark, specs, names, sf_dir, 2
+    )
+    return {"queries": timings, **({"errors": errors} if errors else {})}
 
 
 def main() -> None:
     from bigdata_spark_realtime_spark.plans import registry
     from bigdata_spark_realtime_spark.session import get_spark
-    from bigdata_spark_realtime_spark.sources.tables import load_table
 
     spark = get_spark(app_name="bsr-scale-smoke")
     spark.sparkContext.setLogLevel("ERROR")
@@ -471,15 +465,8 @@ def main() -> None:
                 if sf_dir == BASE
                 else max(default_cells, round(default_cells * REPS**0.5))
             )
-            load_table(spark, sf_dir, "documents").write.format("noop").mode(
-                "overwrite"
-            ).save()
-            timings = {}
-            for name in SMOKE_QUERIES:
-                fn = specs[name].fn
-                fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-                timings[name] = _timed_min(fn, spark, sf_dir)
-            print(json.dumps({"scale": tag, "queries": timings}))
+            timed = _timed(spark, specs, SMOKE_QUERIES, sf_dir)
+            print(json.dumps({"scale": tag, **timed}))
     finally:
         sem.N_CELLS = default_cells
     media_smoke(spark, specs)

@@ -4,6 +4,8 @@ from __future__ import annotations
 
 import json
 
+import pytest
+
 from bench import HEADLINE, aggregate_passes, build_payload
 
 
@@ -62,14 +64,63 @@ def test_always_failing_query_nulls_value():
 
 
 def test_headline_names_are_registered():
+    """bench.py silently drops HEADLINE names missing from the registry
+    (`[n for n in HEADLINE if n in specs]`), so a renamed query would
+    shrink the benchmark and flatter the total without any error."""
     from bigdata_spark_realtime_spark.plans import registry
 
     specs = registry.load_all()
     missing = [n for n in HEADLINE if n not in specs]
     assert not missing, f"HEADLINE references unregistered queries: {missing}"
+    assert len(set(HEADLINE)) == len(HEADLINE), "duplicate headline"
     # the REST serving surface must keep a tracked latency (round-6 task)
     assert "serving_detail_by_item" in HEADLINE
     assert "a2_hourly_counts_topk" in HEADLINE
+
+
+def test_bench_compact_stdout_line_fits_driver_tail_window():
+    """The round driver's BENCH_r{N}.json parses only when bench.py's
+    stdout JSON line fits its 2000-char tail capture (r8-r10 landed
+    parsed=null after the line outgrew it). Pin the REAL builder
+    (bench.build_compact_line) against a worst-case regression run —
+    every HEADLINE query at 99.99 s, plus errors/flaky keys with
+    full-length 300-char reprs — exactly the run where the parsed
+    artifact matters most (round-12 advisor: the old 9.99 synthetic
+    missed this). The builder must degrade (clip reprs, drop loadavg,
+    coarsen/elide timings) rather than emit an unparseable line."""
+    import json
+
+    import bench
+
+    worst_timings = {n: 99.99 for n in bench.HEADLINE}
+    payload = {
+        "metric": "headline query wall-clock",
+        "unit": "sec",
+        "sf": 0.1,
+        "loadavg_1m": [99.99, 99.99],
+        "value": None,
+        "partial_sum_sec": 9999.999,
+        "errors": {n: "x" * 300 for n in list(bench.HEADLINE)[:3]},
+        "flaky": {n: "y" * 300 for n in list(bench.HEADLINE)[3:6]},
+    }
+    line = bench.build_compact_line(payload, worst_timings)
+    assert len(line) <= bench.COMPACT_LINE_LIMIT < 1990
+    parsed = json.loads(line)  # stays one parseable JSON object
+    assert parsed["value"] is None and parsed["sf"] == 0.1
+    assert set(parsed["errors"]) == set(list(bench.HEADLINE)[:3])
+
+    # the everyday clean run keeps full per-query detail un-degraded
+    clean = {
+        "metric": "headline query wall-clock",
+        "unit": "sec",
+        "sf": 0.1,
+        "loadavg_1m": [1.0, 1.2],
+        "value": 42.0,
+    }
+    timings = {n: 1.234 for n in bench.HEADLINE}
+    parsed = json.loads(bench.build_compact_line(clean, timings))
+    assert parsed["queries"] == {n: 1.23 for n in bench.HEADLINE}
+    assert "queries_elided" not in parsed and "loadavg_1m" in parsed
 
 
 # ---------------------------------------------------------------------------
@@ -131,3 +182,81 @@ def test_calibration_probe_recorded_in_run_records(tmp_path):
     }
     doc = bench.merge_round_artifact(str(tmp_path), payload, {"a": 1.0})
     assert doc["runs"][-1]["calib"]["md5_per_s_1core"] == [rate, rate]
+
+
+# ---------------------------------------------------------------------------
+# the CLI paths (bench.run on the suite's shared session — bench.main
+# would stop it): named queries, --explain, --snapshot
+# ---------------------------------------------------------------------------
+
+#: two cheap registered queries: a scan-filter-agg and a top-K REST page
+_NAMES = ["q1_pricing_summary", "a2_hourly_counts_topk"]
+
+
+@pytest.fixture
+def quick_bench(monkeypatch):
+    """bench.run with no settle wait and one timed pass; records the
+    round-artifact merges instead of writing BENCH_LOCAL_r{N}.json."""
+    import bench
+    from bigdata_spark_realtime_spark.plans import registry
+
+    monkeypatch.setenv("SPARK_GRAFT_BENCH_SETTLE_S", "0")
+    monkeypatch.setenv("SPARK_GRAFT_BENCH_PASSES", "1")
+    merges = []
+    monkeypatch.setattr(
+        bench, "merge_round_artifact", lambda *a, **k: merges.append(a)
+    )
+    return bench, registry.load_all(), merges
+
+
+def test_named_run_never_merges_round_artifact(
+    spark, sf_dir, quick_bench, monkeypatch
+):
+    bench, specs, merges = quick_bench
+    payload = bench.run(spark, specs, _NAMES, sf_dir)
+    assert set(payload["queries"]) == set(_NAMES)
+    assert payload["value"] is not None and not merges
+    # the headline run (no names) is the one that merges
+    monkeypatch.setattr(bench, "HEADLINE", (_NAMES[0],))
+    bench.run(spark, specs, [], sf_dir)
+    assert len(merges) == 1
+
+
+def test_explain_writes_one_formatted_plan_per_name(
+    spark, sf_dir, quick_bench, monkeypatch, tmp_path
+):
+    bench, specs, _ = quick_bench
+    monkeypatch.setenv("SPARK_GRAFT_BENCH_PASSES", "0")  # explain only
+    bench.run(spark, specs, _NAMES, sf_dir, explain_dir=str(tmp_path))
+    assert sorted(p.name for p in tmp_path.iterdir()) == sorted(
+        f"{n}.txt" for n in _NAMES
+    )
+    for n in _NAMES:
+        text = (tmp_path / f"{n}.txt").read_text()
+        assert text.startswith("== Physical Plan ==")
+        # formatted mode: numbered operator list plus per-node details
+        assert "(1) " in text and "Output [" in text
+
+
+#: the per-query engine-state record's pinned key set
+SNAPSHOT_KEYS = {
+    "cached_rdds", "cached_mem_mb", "cached_disk_mb", "memo_entries",
+    "gc_count", "gc_ms", "heap_used_mb",
+}
+
+
+def test_snapshot_records_keep_their_key_set(
+    spark, sf_dir, quick_bench, capsys
+):
+    bench, specs, _ = quick_bench
+    bench.run(spark, specs, _NAMES, sf_dir, snap=True)
+    lines = [json.loads(x) for x in capsys.readouterr().out.splitlines()]
+    records, result = lines[:-1], lines[-1]
+    assert result["metric"] == "headline query wall-clock"
+    assert [(r["pos"], r["query"]) for r in records] == [
+        (-1, "<post-warmup>"), (0, _NAMES[0]), (1, _NAMES[1])
+    ]
+    assert set(records[0]) == {"pos", "query"} | SNAPSHOT_KEYS
+    for r in records[1:]:
+        assert set(r) == {"pos", "query", "sec", "gc_ms_delta"} | SNAPSHOT_KEYS
+        assert round(r["sec"], 2) == result["queries"][r["query"]]

@@ -91,7 +91,7 @@ def test_runs_and_matches_oracle_on_empty_input(spark, empty_env, name):
     assert_matches_oracle(fn(spark, empty_dir), con, sql)
 
 
-# single-row boundary (SPARK_GRAFT_BOUNDARY_ROWS=1): the r13 sweep's
+# single-row boundary (sweep mode rows=1): the r13 sweep's
 # one catch plus representatives of the n=1 edges it exercises (lag
 # with no predecessor, percentile with nothing to interpolate, LSH
 # with one document)
@@ -178,7 +178,7 @@ def test_runs_and_matches_oracle_on_constant_content_input(
     assert_matches_oracle(fn(spark, d), con, sql)
 
 
-# nulls-injected boundary (BOUNDARY_NULLS=1): full sf0.001 with every
+# nulls-injected boundary (sweep mode nulls): full sf0.001 with every
 # 3rd row of the optional attribute columns NULLed (measures, props,
 # lang/source labels, embeddings — never keys/timestamps/text). The
 # round-13 sweep caught the whole embedding-kernel family crashing on
@@ -228,7 +228,7 @@ def test_runs_and_matches_oracle_on_nulled_input(spark, nulled_env, name):
     assert_matches_oracle(fn(spark, d), con, sql)
 
 
-# text-edge boundary (BOUNDARY_TEXT=1): document text rewritten by
+# text-edge boundary (sweep mode text): document text rewritten by
 # position to empty / single non-ASCII char / whitespace-only — the
 # tokenizer/shingle/quality-ratio edges. The full round-13 sweep was
 # ALL CLEAN with zero engine changes; these pins keep the zero-token
@@ -269,7 +269,7 @@ def test_runs_and_matches_oracle_on_text_edges(spark, text_edge_env, name):
     assert_matches_oracle(fn(spark, d), con, sql)
 
 
-# reversed-row-order boundary (BOUNDARY_REVERSE=1): every query must
+# reversed-row-order boundary (sweep mode reverse): every query must
 # be a deterministic function of the row SET — the full round-13 sweep
 # was ALL CLEAN. These pins keep the most order-tempted shapes (keeper
 # election, rank windows, sequence analytics) exercised in-suite.
@@ -321,7 +321,7 @@ def test_constant_content_dedup_forms_one_cluster_of_k(spark, cloned_env):
     assert row["n_removed"] == 49
 
 
-# adversarial-unicode boundary (BOUNDARY_UNICODE=1): NFC-vs-NFD twins
+# adversarial-unicode boundary (sweep mode unicode): NFC-vs-NFD twins
 # on adjacent rows, combining stacks, astral-plane chars, CJK,
 # bidi/zero-width controls — the cross-engine collation/length traps.
 # Pins keep the most exposed families (tokenization, shingling,
@@ -363,7 +363,7 @@ def test_runs_and_matches_oracle_on_adversarial_unicode(
     assert_matches_oracle(fn(spark, d), con, sql)
 
 
-# duplicate-key boundary (BOUNDARY_DUPES=1): every 5th events row
+# duplicate-key boundary (sweep mode dupes): every 5th events row
 # replayed verbatim — at-least-once ingestion. Pins keep the dedup
 # state machines and a counting aggregate exercised in-suite.
 DUPES_PINNED = [
@@ -399,3 +399,24 @@ def test_runs_and_matches_oracle_on_replayed_events(spark, duped_env, name):
     fn = registry.all_queries()[name]
     sql = registry.all_oracles()[name]
     assert_matches_oracle(fn(spark, d), con, sql)
+
+
+# the sweep's boundary is one positional mode; a typo must fail fast,
+# before any table is written or a Spark JVM starts
+def test_unknown_sweep_mode_exits_before_spark_starts(monkeypatch):
+    import empty_input_sweep as sweep
+    from bigdata_spark_realtime_spark import session
+
+    def no_spark(*a, **k):
+        raise AssertionError("Spark started for an unknown mode")
+
+    monkeypatch.setattr(session, "get_spark", no_spark)
+    monkeypatch.setattr(sweep.tempfile, "mkdtemp", no_spark)
+    for bad in ("bogus", "rows", "rows=x", "clones=", "nulls=1"):
+        with pytest.raises(SystemExit) as exc:
+            sweep.main([bad])
+        assert exc.value.code not in (0, None), bad
+    # and every documented mode resolves to a table writer
+    for good in ("rows=0", "rows=1", "clones=100", "nulls", "text",
+                 "reverse", "unicode", "dupes", "wide"):
+        assert callable(sweep.materializer(good)), good

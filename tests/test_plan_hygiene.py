@@ -765,6 +765,33 @@ def test_cache_py_is_the_only_memo():
     assert not offenders, offenders
 
 
+def test_bench_owns_the_timing_loop():
+    """bench.py is the one place that warms up and times a registered
+    query (``timed_noop``/``time_passes``), and scripts/oracle_sweep.py
+    the one oracle-compare loop: no script may run its own noop-sink
+    execution or ``perf_counter`` timing, and only oracle_sweep.py may
+    define the ``_DF`` comparator shim (once)."""
+    import ast
+    import pathlib
+
+    scripts = pathlib.Path(__file__).resolve().parent.parent / "scripts"
+    noop = re.compile(r"""format\(\s*["']noop["']\s*\)""")
+    offenders = []
+    for path in sorted(scripts.rglob("*.py")):
+        text = path.read_text()
+        if noop.search(text):
+            offenders.append(f"{path.name}: noop-sink execution")
+        if "perf_counter" in text:
+            offenders.append(f"{path.name}: perf_counter timing")
+        n_df = sum(
+            isinstance(node, ast.ClassDef) and node.name == "_DF"
+            for node in ast.walk(ast.parse(text, str(path)))
+        )
+        if n_df > (path.name == "oracle_sweep.py"):
+            offenders.append(f"{path.name}: oracle-compare loop (_DF)")
+    assert not offenders, offenders
+
+
 def test_queries_register_by_decorator_on_their_own_definition():
     """Every ``register(...)`` call in a plan module decorates the
     query's own ``def``: the call form ``register(name)(fn)`` would let

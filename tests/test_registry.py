@@ -198,60 +198,3 @@ def test_never_driver_verified_queries_are_inside_gate_window():
         f"queries with no gate row are OUTSIDE registry.GATE_WINDOW — "
         f"rotate them in: {sorted(stragglers)}"
     )
-
-
-def test_bench_headline_names_are_all_registered():
-    """bench.py silently drops HEADLINE names missing from the registry
-    (`[n for n in HEADLINE if n in specs]`), so a renamed query would
-    shrink the benchmark and flatter the total without any error."""
-    import bench
-
-    specs = registry.load_all()
-    missing = [n for n in bench.HEADLINE if n not in specs]
-    assert not missing, missing
-    assert len(set(bench.HEADLINE)) == len(bench.HEADLINE), "duplicate headline"
-
-
-def test_bench_compact_stdout_line_fits_driver_tail_window():
-    """The round driver's BENCH_r{N}.json parses only when bench.py's
-    stdout JSON line fits its 2000-char tail capture (r8-r10 landed
-    parsed=null after the line outgrew it). Pin the REAL builder
-    (bench.build_compact_line) against a worst-case regression run —
-    every HEADLINE query at 99.99 s, plus errors/flaky keys with
-    full-length 300-char reprs — exactly the run where the parsed
-    artifact matters most (round-12 advisor: the old 9.99 synthetic
-    missed this). The builder must degrade (clip reprs, drop loadavg,
-    coarsen/elide timings) rather than emit an unparseable line."""
-    import json
-
-    import bench
-
-    worst_timings = {n: 99.99 for n in bench.HEADLINE}
-    payload = {
-        "metric": "headline query wall-clock",
-        "unit": "sec",
-        "sf": 0.1,
-        "loadavg_1m": [99.99, 99.99],
-        "value": None,
-        "partial_sum_sec": 9999.999,
-        "errors": {n: "x" * 300 for n in list(bench.HEADLINE)[:3]},
-        "flaky": {n: "y" * 300 for n in list(bench.HEADLINE)[3:6]},
-    }
-    line = bench.build_compact_line(payload, worst_timings)
-    assert len(line) <= bench.COMPACT_LINE_LIMIT < 1990
-    parsed = json.loads(line)  # stays one parseable JSON object
-    assert parsed["value"] is None and parsed["sf"] == 0.1
-    assert set(parsed["errors"]) == set(list(bench.HEADLINE)[:3])
-
-    # the everyday clean run keeps full per-query detail un-degraded
-    clean = {
-        "metric": "headline query wall-clock",
-        "unit": "sec",
-        "sf": 0.1,
-        "loadavg_1m": [1.0, 1.2],
-        "value": 42.0,
-    }
-    timings = {n: 1.234 for n in bench.HEADLINE}
-    parsed = json.loads(bench.build_compact_line(clean, timings))
-    assert parsed["queries"] == {n: 1.23 for n in bench.HEADLINE}
-    assert "queries_elided" not in parsed and "loadavg_1m" in parsed

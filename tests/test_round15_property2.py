@@ -1,8 +1,8 @@
 """Round-15 wide-record regression pins.
 
 The first full run of the wide-record boundary mode
-(``SPARK_GRAFT_BOUNDARY_WIDE=1 scripts/empty_input_sweep.py``) caught
-two real width-quadratic defect classes on 1 MiB documents:
+(``scripts/empty_input_sweep.py wide``) caught two real
+width-quadratic defect classes on 1 MiB documents:
 
 1. **Oracle side** — the DuckDB lateral range-join pair/chunk shape
    (``FROM toks, unnest(range(len(t) - 1)) AS u(i)`` + ``t[i + 1]``
