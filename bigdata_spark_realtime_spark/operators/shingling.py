@@ -97,7 +97,15 @@ def _factorize(strings: list[str]) -> tuple[np.ndarray, list[str]]:
     md5 count by the duplication factor — the per-task kernel analogue
     of map-side pre-aggregation (guide §4.2: vectorize the batch, r15
     optimization round). Worst case (all unique) it degrades to one
-    extra O(n) pass, not a new asymptotic term."""
+    extra O(n) pass, not a new asymptotic term.
+
+    pandas' string hash table compares strings only up to the first NUL
+    (``'a\\0b'`` and ``'a\\0c'`` get one code), so a list holding a NUL
+    is factorized with a dict instead."""
+    if "\0" in "".join(strings):
+        seen: dict[str, int] = {}
+        codes = [seen.setdefault(s, len(seen)) for s in strings]
+        return np.array(codes, dtype=np.intp), list(seen)
     codes, uniques = pd.factorize(np.asarray(strings, dtype=object))
     return codes, list(uniques)
 

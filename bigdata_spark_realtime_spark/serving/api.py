@@ -9,6 +9,18 @@ This class serves the same three shapes from the engine's tables
 (`dau`, `order_wide` — any DataFrames with those columns, e.g. the
 outputs of the streaming pipelines or the parquet serving store).
 
+Each call runs one Spark job, as the reference answers each call with
+one Elasticsearch query (`ia/PublisherMapperImpl.java`):
+- Size rule: at each call the stored frame is coalesced to one
+  partition when Catalyst's size estimate fits Spark's own target
+  partition size (``spark.sql.adaptive.advisoryPartitionSizeInBytes``).
+  A single-partition child satisfies every group-by's distribution, so
+  no Exchange is planned (under AQE each shuffle stage would be a job of
+  its own). A larger store, or one of unknown size, keeps its
+  partitioning and its shuffles.
+- ``detail_by_item`` collects its page and its total in one action: the
+  total rides along as one extra row.
+
 Response shapes mirror the Java DTOs 1:1; results are small by
 construction (aggregates / one page), so the final collect is the
 serving boundary, not a data move.
@@ -16,10 +28,29 @@ serving boundary, not a data move.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from bigdata_spark_realtime_spark.functions import scalar as fns
+from bigdata_spark_realtime_spark.plans import hints
+
+
+def one_partition_if_small(frame: DataFrame) -> DataFrame:
+    """``frame`` coalesced to one partition when Catalyst's size estimate
+    fits Spark's own target partition size
+    (``spark.sql.adaptive.advisoryPartitionSizeInBytes``), else ``frame``.
+
+    Sized per call on the coalesced frame's new plan (the stored frame's
+    own plan is memoized with the stats of its first planning), so a
+    store that grows past the target fans back out by itself; the
+    estimate runs no job. A frame of unknown size (e.g. a ``LogicalRDD``)
+    reports ``Long.MaxValue`` and is left as it is.
+    """
+    one = frame.coalesce(1)
+    target = hints.parse_size_bytes(
+        frame.sparkSession.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+    )
+    return one if hints.estimated_size_bytes(one) <= target else frame
 
 
 class ServingAPI:
@@ -37,7 +68,7 @@ class ServingAPI:
         import datetime
 
         yd = (datetime.date.fromisoformat(td) - datetime.timedelta(days=1)).isoformat()
-        day = self.dau.where(F.col("dt").isin(td, yd))
+        day = one_partition_if_small(self.dau).where(F.col("dt").isin(td, yd))
         rows = (
             day.groupBy("dt", "hr").agg(F.count(F.lit(1)).alias("ct")).collect()
         )
@@ -64,7 +95,8 @@ class ServingAPI:
         # (plans/aggregations.py) does the same — keep the REST layer
         # bit-faithful to both, not amount-desc
         base = (
-            self.order_wide.where(F.col("create_date") == date)
+            one_partition_if_small(self.order_wide)
+            .where(F.col("create_date") == date)
             .where(fns.match_all_tokens(F.col("sku_name"), item_name))
             .groupBy(field.alias("k"))
             .agg(
@@ -96,10 +128,9 @@ class ServingAPI:
     def detail_by_item(
         self, date: str, item_name: str, page_no: int = 1, page_size: int = 20
     ) -> dict:
-        filtered = self.order_wide.where(F.col("create_date") == date).where(
-            fns.match_all_tokens(F.col("sku_name"), item_name)
-        )
-        total = filtered.count()
+        filtered = one_partition_if_small(self.order_wide).where(
+            F.col("create_date") == date
+        ).where(fns.match_all_tokens(F.col("sku_name"), item_name))
         page = (
             filtered.select(
                 *[c for c in self.DETAIL_COLS if c != "sku_name"],
@@ -109,4 +140,14 @@ class ServingAPI:
             .offset((page_no - 1) * page_size)
             .limit(page_size)
         )
-        return {"total": total, "detail": [r.asDict() for r in page.collect()]}
+        # one action: the total rides along as one extra row whose detail
+        # columns are null; the page rows carry a null __total. The
+        # coalesce runs both union sides in one task, not one each.
+        total_row = filtered.agg(F.count(F.lit(1)).alias("__total"))
+        rows = page.unionByName(total_row, allowMissingColumns=True).coalesce(1).collect()
+        return {
+            "total": next(r["__total"] for r in rows if r["__total"] is not None),
+            "detail": [
+                {c: r[c] for c in page.columns} for r in rows if r["__total"] is None
+            ],
+        }

@@ -10,7 +10,11 @@ Built on the stdlib ``http.server`` (no web framework in the container):
 a ``ThreadingHTTPServer`` whose handler dispatches to a ``ServingAPI``.
 This is the serving *boundary*, not a data path — every response is an
 aggregate or one page (≤ pageSize rows), so the Spark collect behind it
-is bounded regardless of table size.
+is bounded regardless of table size. Each request runs one Spark job
+while the store fits Spark's target partition size (the size rule in
+``serving/api.py``). ``main`` caches the store frames; the next
+``upsert_parquet`` commit into a day-partitioned store refreshes that
+cache in the same session.
 
 Divergence from the reference, by design: a bad or missing parameter
 (e.g. ``t=bogus``, which NPEs the reference into a 500) returns a 400

@@ -186,43 +186,51 @@ def materialize_empty_tables(dest: str, rows: int = 0, clones: int = 1) -> None:
         pq.write_table(table, os.path.join(dest, f"{t}.parquet"))
 
 
-def materialize_nulled_tables(dest: str) -> None:
-    """Full sf copy with every 3rd row of the optional attribute
-    columns NULLed — deterministic, both engines read the result."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
+def _full_copy(dest: str, rewrites: dict) -> None:
+    """Full sf copy of every table: the ones named in ``rewrites`` go
+    through their ``table -> table`` function, the rest copy through
+    untouched."""
     import pyarrow.parquet as pq
 
     for t in TABLES:
         table = pq.read_table(os.path.join(SCHEMA_SF_DIR, f"{t}.parquet"))
-        keep = pa.array([i % 3 != 0 for i in range(len(table))])
-        for col in _NULLABLE.get(t, []):
-            i = table.schema.get_field_index(col)
-            field = table.schema.field(col)
-            nulled = pc.if_else(keep, table.column(col).combine_chunks(), None)
-            table = table.set_column(i, pa.field(field.name, field.type), nulled)
+        if t in rewrites:
+            table = rewrites[t](table)
         pq.write_table(table, os.path.join(dest, f"{t}.parquet"))
+
+
+def _map_column(table, col: str, fn):
+    """``table`` with column ``col`` rewritten as ``fn(row, value)``."""
+    import pyarrow as pa
+
+    field = table.schema.field(col)
+    vals = [fn(r, v) for r, v in enumerate(table.column(col).to_pylist())]
+    i = table.schema.get_field_index(col)
+    return table.set_column(i, field, pa.array(vals, field.type))
+
+
+def _null_every_third(table, cols):
+    for col in cols:
+        table = _map_column(table, col, lambda r, v: None if r % 3 == 0 else v)
+    return table
+
+
+def materialize_nulled_tables(dest: str) -> None:
+    """Full sf copy with every 3rd row of the optional attribute
+    columns NULLed — deterministic, both engines read the result."""
+    _full_copy(dest, {
+        t: lambda table, cols=cols: _null_every_third(table, cols)
+        for t, cols in _NULLABLE.items()
+    })
 
 
 def materialize_text_edge_tables(dest: str) -> None:
     """Full sf copy with document text rewritten by position: empty
     string / single non-ASCII char / whitespace-only / unchanged, in
     rotation. Other tables copy through untouched."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
     edges = ["", "é", "   "]  # empty, one 2-byte char, whitespace
-    for t in TABLES:
-        table = pq.read_table(os.path.join(SCHEMA_SF_DIR, f"{t}.parquet"))
-        if t == "documents":
-            i = table.schema.get_field_index("text")
-            field = table.schema.field("text")
-            vals = table.column("text").to_pylist()
-            vals = [
-                edges[r % 4] if r % 4 < 3 else v for r, v in enumerate(vals)
-            ]
-            table = table.set_column(i, field, pa.array(vals, field.type))
-        pq.write_table(table, os.path.join(dest, f"{t}.parquet"))
+    _full_copy(dest, {"documents": lambda table: _map_column(
+        table, "text", lambda r, v: edges[r % 4] if r % 4 < 3 else v)})
 
 
 #: adversarial unicode payloads, cycled by row position. Pairs of
@@ -242,37 +250,21 @@ _UNICODE_EDGES = [
 ]
 
 
+def _unicode_docs(table):
+    table = _map_column(table, "text", lambda r, v: (
+        (v or "") + " " + _UNICODE_EDGES[(r // 3) % len(_UNICODE_EDGES)]
+        if r % 3 == 0 else v))
+    return _map_column(table, "lang", lambda r, v: (
+        v + "\u200b" if v is not None and r % 11 == 0 else v))
+
+
 def materialize_unicode_tables(dest: str) -> None:
     """Full sf copy with adversarial unicode woven into documents.text
     (every 3rd row gets an edge payload APPENDED to its prose, keeping
     real tokens present) and, on every 11th row, a zero-width-suffixed
     `lang` value (same visible text, different bytes — a group key that
     must NOT merge with its clean twin under byte semantics)."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    for t in TABLES:
-        table = pq.read_table(os.path.join(SCHEMA_SF_DIR, f"{t}.parquet"))
-        if t == "documents":
-            i = table.schema.get_field_index("text")
-            field = table.schema.field("text")
-            vals = table.column("text").to_pylist()
-            vals = [
-                (v or "") + " " + _UNICODE_EDGES[(r // 3) % len(_UNICODE_EDGES)]
-                if r % 3 == 0
-                else v
-                for r, v in enumerate(vals)
-            ]
-            table = table.set_column(i, field, pa.array(vals, field.type))
-            li = table.schema.get_field_index("lang")
-            lf = table.schema.field("lang")
-            langs = table.column("lang").to_pylist()
-            langs = [
-                (v + "\u200b") if (v is not None and r % 11 == 0) else v
-                for r, v in enumerate(langs)
-            ]
-            table = table.set_column(li, lf, pa.array(langs, lf.type))
-        pq.write_table(table, os.path.join(dest, f"{t}.parquet"))
+    _full_copy(dest, {"documents": _unicode_docs})
 
 
 def materialize_duped_tables(dest: str) -> None:
@@ -281,14 +273,9 @@ def materialize_duped_tables(dest: str) -> None:
     All other tables keep their unique-key contracts and copy through
     untouched."""
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
-    for t in TABLES:
-        table = pq.read_table(os.path.join(SCHEMA_SF_DIR, f"{t}.parquet"))
-        if t == "events":
-            replay = table.take(list(range(0, len(table), 5)))
-            table = pa.concat_tables([table, replay])
-        pq.write_table(table, os.path.join(dest, f"{t}.parquet"))
+    _full_copy(dest, {"events": lambda table: pa.concat_tables(
+        [table, table.take(list(range(0, len(table), 5)))])})
 
 
 #: wide-record widths, cycled over the widened docs — one true 1 MiB
@@ -318,55 +305,34 @@ def _wide_text(pos: int, width: int) -> str:
     return " ".join(words)
 
 
+def _wide_docs(table):
+    table = _map_column(table, "text", lambda r, v: (
+        _wide_text(r, _WIDE_WIDTHS[(r // _WIDE_DOC_EVERY) % 3])
+        if r % _WIDE_DOC_EVERY == 0 else v))
+    texts = table.column("text").to_pylist()
+    return _map_column(table, "n_chars", lambda r, v: len(texts[r]))
+
+
+def _wide_events(table):
+    pad = "x" * _WIDE_PROPS_BYTES
+    return _map_column(table, "props", lambda r, v: (
+        f'{{"pad":"{pad}","wide":{r}}}' if r % _WIDE_EVENT_EVERY == 0 else v))
+
+
 def materialize_wide_tables(dest: str) -> None:
     """Full sf copy with adversarial record width (see module doc):
     multi-hundred-KiB document texts (n_chars kept consistent) and
     ~256 KiB events.props JSON payloads."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    for t in TABLES:
-        table = pq.read_table(os.path.join(SCHEMA_SF_DIR, f"{t}.parquet"))
-        if t == "documents":
-            ti = table.schema.get_field_index("text")
-            tf = table.schema.field("text")
-            vals = table.column("text").to_pylist()
-            vals = [
-                _wide_text(r, _WIDE_WIDTHS[(r // _WIDE_DOC_EVERY) % 3])
-                if r % _WIDE_DOC_EVERY == 0
-                else v
-                for r, v in enumerate(vals)
-            ]
-            table = table.set_column(ti, tf, pa.array(vals, tf.type))
-            ni = table.schema.get_field_index("n_chars")
-            nf = table.schema.field("n_chars")
-            table = table.set_column(
-                ni, nf, pa.array([len(v) for v in vals], nf.type)
-            )
-        elif t == "events":
-            pi = table.schema.get_field_index("props")
-            pf = table.schema.field("props")
-            pad = "x" * _WIDE_PROPS_BYTES
-            vals = table.column("props").to_pylist()
-            vals = [
-                f'{{"pad":"{pad}","wide":{r}}}'
-                if r % _WIDE_EVENT_EVERY == 0
-                else v
-                for r, v in enumerate(vals)
-            ]
-            table = table.set_column(pi, pf, pa.array(vals, pf.type))
-        pq.write_table(table, os.path.join(dest, f"{t}.parquet"))
+    _full_copy(dest, {"documents": _wide_docs, "events": _wide_events})
 
 
 def materialize_reversed_tables(dest: str) -> None:
     """Full sf copy with the physical row order reversed — a query
     whose answer changes is arrival-order-dependent, i.e. broken."""
-    import pyarrow.parquet as pq
-
-    for t in TABLES:
-        table = pq.read_table(os.path.join(SCHEMA_SF_DIR, f"{t}.parquet"))
-        idx = list(range(len(table) - 1, -1, -1))
-        pq.write_table(table.take(idx), os.path.join(dest, f"{t}.parquet"))
+    _full_copy(dest, {
+        t: lambda table: table.take(list(range(len(table) - 1, -1, -1)))
+        for t in TABLES
+    })
 
 
 #: the modes that rewrite a FULL schema-sf copy (see module doc)

@@ -3,13 +3,16 @@
 from __future__ import annotations
 
 import json
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from bigdata_spark_realtime_spark import schemas as S
+from bigdata_spark_realtime_spark.functions import scalar as fns
 from bigdata_spark_realtime_spark.serving import ServingAPI
+from bigdata_spark_realtime_spark.serving.api import one_partition_if_small
 from bigdata_spark_realtime_spark.sources import fixtures as FX
 from bigdata_spark_realtime_spark.streaming.base_log import split_base_log
 from bigdata_spark_realtime_spark.streaming.dau import build_dau
@@ -17,6 +20,7 @@ from bigdata_spark_realtime_spark.streaming.order import (
     enrich_order_info,
     order_wide_join,
 )
+from bigdata_spark_realtime_spark.streaming.sinks import upsert_parquet
 
 TD = "2024-03-02"
 
@@ -105,3 +109,112 @@ def test_stats_by_item_terms_order_is_count_desc(spark):
         "terms agg must order by doc count desc, not amount desc"
     )
     assert out[0]["value"] == 30.0 and out[1]["value"] == 9999.0
+
+
+#: one call per endpoint shape, with the paging edges: page 1, a page past
+#: the last, and an item with no match
+CALLS = (
+    ("dau_realtime", (TD,), {}),
+    ("stats_by_item", ("Apple iPhone", "2024-03-01", "age"), {}),
+    ("stats_by_item", ("Apple iPhone", "2024-03-01", "gender"), {}),
+    ("detail_by_item", ("2024-03-01", "iPhone"), {"page_no": 1, "page_size": 5}),
+    ("detail_by_item", ("2024-03-01", "iPhone"), {"page_no": 500, "page_size": 5}),
+    ("detail_by_item", ("2024-03-01", "Apple Nonexistent"), {}),
+)
+
+
+def _call(api, name, args, kwargs):
+    return getattr(api, name)(*args, **kwargs)
+
+
+def _jobs_of(spark, fn):
+    """``fn()``'s result and the number of Spark jobs it ran, counted
+    through a job group of its own."""
+    sc = spark.sparkContext
+    group = f"one-job-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _true_total(api, date, item):
+    return api.order_wide.where(F.col("create_date") == date).where(
+        fns.match_all_tokens(F.col("sku_name"), item)
+    ).count()
+
+
+def test_each_endpoint_call_runs_one_spark_job(spark, api):
+    """A small store is read as one partition, so no group-by plans an
+    Exchange (under AQE each shuffle stage is a job of its own), and the
+    detail total rides in the page's job."""
+    for call in CALLS:  # materialize the cached frames first
+        _call(api, *call)
+    for call in CALLS:
+        _, jobs = _jobs_of(spark, lambda: _call(api, *call))
+        assert jobs == 1, (call, jobs)
+
+
+def test_detail_by_item_paging_edges(api):
+    total = _true_total(api, "2024-03-01", "iPhone")
+    assert total > 5
+    past = api.detail_by_item("2024-03-01", "iPhone", page_no=total + 1, page_size=1)
+    assert past == {"total": total, "detail": []}
+    everything = api.detail_by_item("2024-03-01", "iPhone", page_size=total + 10)
+    assert everything["total"] == total
+    ids = [(r["order_id"], r["detail_id"]) for r in everything["detail"]]
+    assert len(ids) == len(set(ids)) == total
+    assert ids == sorted(ids)
+    assert api.detail_by_item("2024-03-01", "Apple Nonexistent") == {
+        "total": 0, "detail": []}
+
+
+def test_large_store_path_returns_the_small_store_bodies(spark, api):
+    """Above the target partition size the frames keep their partitioning
+    (the Exchange plans); the bodies must not change."""
+    small = [_call(api, *call) for call in CALLS]
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    old = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "1b")
+        assert one_partition_if_small(api.order_wide) is api.order_wide
+        assert one_partition_if_small(api.dau) is api.dau
+        large = [_call(api, *call) for call in CALLS]
+    finally:
+        spark.conf.set(key, old)
+    assert one_partition_if_small(api.order_wide) is not api.order_wide
+    assert large == small
+
+
+def test_store_frames_see_the_next_upsert_commit(spark, api, tmp_path):
+    """Frames cached the way ``http_server.main`` caches them are read as
+    one partition and still see the next sink commit in the same session."""
+    dau_path, wide_path = str(tmp_path / "dau"), str(tmp_path / "order_wide")
+    dau = api.dau
+    wide = api.order_wide.withColumn("event_seq", F.col("detail_id"))
+    first = F.crc32(F.col("mid")) % 2 == 0
+    upsert_parquet(spark, dau.where(first), dau_path, ["dt", "mid"], "ts", "dt")
+    upsert_parquet(spark, wide.where(F.col("detail_id") % 2 == 0), wide_path,
+                   ["detail_id"], "event_seq", "create_date")
+    store = ServingAPI(spark.read.parquet(dau_path).cache(),
+                       spark.read.parquet(wide_path).cache())
+    detail = ("2024-03-01", "iPhone")
+    want_dau = api.dau_realtime(TD)
+    want_detail = api.detail_by_item(*detail, page_size=1000)
+    try:
+        assert one_partition_if_small(store.dau) is not store.dau
+        assert one_partition_if_small(store.order_wide) is not store.order_wide
+        assert store.dau_realtime(TD)["dauTotal"] < want_dau["dauTotal"]
+        assert store.detail_by_item(*detail)["total"] < want_detail["total"]
+        upsert_parquet(spark, dau.where(~first), dau_path, ["dt", "mid"], "ts", "dt")
+        upsert_parquet(spark, wide.where(F.col("detail_id") % 2 == 1), wide_path,
+                       ["detail_id"], "event_seq", "create_date")
+        assert store.dau_realtime(TD) == want_dau
+        assert store.detail_by_item(*detail, page_size=1000) == want_detail
+    finally:
+        store.dau.unpersist()
+        store.order_wide.unpersist()

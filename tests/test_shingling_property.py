@@ -12,7 +12,7 @@ bounded (max_examples below).
 from __future__ import annotations
 
 import duckdb
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from bigdata_spark_realtime_spark.functions import hashing as H
@@ -60,6 +60,9 @@ FROM hs
     suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
 )
 @given(texts=st.lists(_doc, min_size=1, max_size=12))
+# a NUL inside a token: pandas' string factorizer compares only up to
+# the first NUL, which merged shingles that differ after it
+@example(texts=["", "", "", "", "", "", "0  \x00 0  "])
 def test_minhash_kernel_matches_sql_on_random_docs(spark, texts):
     from bigdata_spark_realtime_spark.operators.shingling import (
         minhash_signatures,
