@@ -108,10 +108,6 @@ def shingles_sql(tokens_expr: str, w: int = SHINGLE_W) -> str:
 # ---------------------------------------------------------------------------
 
 
-def hashed_shingles(shingles_col: Column) -> Column:
-    return F.transform(shingles_col, lambda s: h32(s) % P)
-
-
 def hashed_shingles_sql(shingles_expr: str) -> str:
     return f"list_transform({shingles_expr}, s -> {h32_sql('s')} % {P})"
 

@@ -141,7 +141,7 @@ def topk_neighbors_blocked(
 
 
 def topk_neighbors_broadcast(
-    emb: DataFrame, queries_pdf: pd.DataFrame, k: int, digits: int = 4
+    emb: DataFrame, queries_pdf: pd.DataFrame, k: int
 ) -> DataFrame:
     """Exact brute-force top-k with a BOUNDED query set shipped to every
     task as a closure (the rerank shape at 100 TB: the corpus streams
@@ -155,8 +155,9 @@ def topk_neighbors_broadcast(
     mirroring the broadcast the fold-based plan did JVM-side.
 
     Per-batch partial top-k is safe because the selection key
-    (rounded -cos_sim, neighbor_id) is total: the global top-k is a
-    subset of the union of batch top-ks."""
+    (-cos_sim rounded to 4 digits as the oracles round it, then
+    neighbor_id) is total: the global top-k is a subset of the union
+    of batch top-ks."""
     qids = queries_pdf["vec_id"].to_numpy()
 
     import numpy as np
@@ -176,18 +177,18 @@ def topk_neighbors_broadcast(
             cm = np.stack(pdf["embedding"].to_numpy()).astype("float64")
             cm /= np.linalg.norm(cm, axis=1, keepdims=True)
             sims = qm @ cm.T
-            yield _topk_rows(qids, pdf["vec_id"].to_numpy(), sims, k, digits)
+            yield _topk_rows(qids, pdf["vec_id"].to_numpy(), sims, k, digits=4)
 
     return emb.select("vec_id", "embedding").mapInPandas(score, schema)
 
 
 def neardup_topk_blocked(
-    emb: DataFrame, k: int, block_col: str = "label", digits: int = 4
+    emb: DataFrame, k: int, block_col: str = "label"
 ) -> DataFrame:
     """Global top-k most-similar within-block pairs, vectorized: each
-    block emits only its own top-k (ranked by rounded -cos_sim, vec_a,
-    vec_b — the oracle's ORDER BY), so the global sort sees
-    k × n_blocks rows instead of every pair."""
+    block emits only its own top-k (ranked by -cos_sim rounded to 4
+    digits, vec_a, vec_b — the oracle's ORDER BY), so the global sort
+    sees k × n_blocks rows instead of every pair."""
     schema = "vec_a long, vec_b long, cos_sim double"
 
     def per_cell(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -200,7 +201,7 @@ def neardup_topk_blocked(
         pdf = pdf.sort_values("vec_id")
         m = np.stack(pdf["embedding"].to_numpy()).astype("float64")
         m /= np.linalg.norm(m, axis=1, keepdims=True)
-        sims = np.round(m @ m.T, digits)
+        sims = np.round(m @ m.T, 4)
         ids = pdf["vec_id"].to_numpy()
         iu, ju = np.triu_indices(len(ids), k=1)
         sim_u = sims[iu, ju]

@@ -12,6 +12,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from bigdata_spark_realtime_spark.plans.hints import estimated_size_bytes
+from bigdata_spark_realtime_spark.sources.tables import load_table
+
 #: DuckDB-side twin of :func:`norm_text` — keep the two in lockstep.
 NORM_SQL = "lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))"
 
@@ -107,39 +110,21 @@ def scoped_persist(df: DataFrame, scope: str, keep: int = 2) -> DataFrame:
 PERSIST_MIN_INPUT_BYTES = 64 << 20
 
 
-def _input_bytes(sf_dir: str, table: str) -> int:
-    """Best-effort on-disk size of a table under ``sf_dir``; unknown
-    layouts (directories of parts, object stores) count as LARGE so the
-    scale path — persist — is the default when we cannot prove small."""
-    import os
-
-    path = os.path.join(sf_dir, f"{table}.parquet")
-    try:
-        if os.path.isdir(path):
-            return sum(
-                os.path.getsize(os.path.join(dp, f))
-                for dp, _, fs in os.walk(path)
-                for f in fs
-            )
-        return os.path.getsize(path)
-    except OSError:
-        return 1 << 62
-
-
 def scoped_persist_if_large(
-    df: DataFrame,
-    scope: str,
-    sf_dir: str,
-    table: str = "documents",
-    keep: int = 2,
+    df: DataFrame, scope: str, sf_dir: str, keep: int = 2
 ) -> DataFrame:
-    """:func:`scoped_persist` gated on the SOURCE table's size: persist
-    shared subtrees when the input is big enough that a re-scan costs
-    more than the materialization (the 100 TB case — one decode of the
-    heavy column instead of one per consumer), skip the persist when
-    the whole table is page-cache small and recompute is free. The
+    """:func:`scoped_persist` gated on the size of the SOURCE table
+    (``documents``): persist shared subtrees when the input is big
+    enough that a re-scan costs more than the materialization (the
+    100 TB case — one decode of the heavy column instead of one per
+    consumer), skip the persist when the whole table is page-cache
+    small and recompute is free. The size is Catalyst's plan-time
+    estimate (:func:`estimated_size_bytes`) of the table the query
+    reads: for a parquet scan the file index's byte total, so a single
+    file and a directory of part files are sized the same way. The
     caller's plan SHAPE is identical either way; only the number of
     physical source scans differs."""
-    if _input_bytes(sf_dir, table) >= PERSIST_MIN_INPUT_BYTES:
+    source = load_table(df.sparkSession, sf_dir, "documents")
+    if estimated_size_bytes(source) >= PERSIST_MIN_INPUT_BYTES:
         return scoped_persist(df, scope, keep=keep)
     return df

@@ -137,10 +137,11 @@ def bm25_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     # - dl RIDES THROUGH the tf aggregation as a grouping column
     #   (functionally determined by doc_id — identical groups), so the
     #   dl join is gone at any scale;
-    # - base and tf are persisted IF the source is big (size-gated:
-    #   at 100 TB one decode of the heavy column + a 16-byte/doc proxy
+    # - base and tf are persisted IF Catalyst's size estimate of the
+    #   documents table reaches corpus.PERSIST_MIN_INPUT_BYTES: at
+    #   100 TB one decode of the heavy column + a 16-byte/doc proxy
     #   frame; at page-cache test SFs recompute is cheaper than the
-    #   materialization, measured +0.7 s at sf0.1).
+    #   materialization, measured +0.7 s at sf0.1.
     # `split` is evaluated once per row: CollapseProject refuses to
     # inline a projection whose output feeds two expensive consumers.
     terms = sorted({term for q in QUERIES.values() for term in q.split(" ")})

@@ -65,19 +65,19 @@ def ext_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     return decontaminate(docs)
 
 
-def decontaminate(docs: DataFrame, w: int = CONTAM_W) -> DataFrame:
+def decontaminate(docs: DataFrame) -> DataFrame:
     """Core operator over any (doc_id, source, text) frame — split out so
     tests can feed planted contamination directly."""
     ev = docs.where(F.col("source") == EVAL_SOURCE)
     corpus = docs.where(F.col("source") != EVAL_SOURCE)
     # eval shingle set: small by contract -> explicit broadcast, the
     # corpus side stays un-shuffled (map-side semi of the 100 TB side)
-    ev_shingles = shingle_rows(ev, w).select("shingle").distinct()
+    ev_shingles = shingle_rows(ev, CONTAM_W).select("shingle").distinct()
     # join BEFORE any aggregation: the broadcast semi-filter runs
     # map-side over the corpus shingle rows (already per-doc-distinct
     # from the kernel); only the surviving hit rows — rare by
     # construction — reach the per-doc count shuffle
-    hits = shingle_rows(corpus, w).join(F.broadcast(ev_shingles), "shingle")
+    hits = shingle_rows(corpus, CONTAM_W).join(F.broadcast(ev_shingles), "shingle")
     # plain count, NOT count_distinct: the kernel emits each (doc,
     # shingle) at most once, and count_distinct would compile to a
     # second aggregation exchange for nothing

@@ -140,10 +140,6 @@ def _signatures_docs(docs: DataFrame) -> DataFrame:
     )
 
 
-def _signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _signatures_docs(load_table(spark, sf_dir, "documents"))
-
-
 def _bands(sig: DataFrame) -> DataFrame:
     """One row per (doc, band): band key packed into two int64s
     (4 rows/band, each minhash < P ≈ 2^30, so k = m·P + m' < 2^60). A

@@ -82,7 +82,8 @@ def ext_text_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     tok = docs.select(
         "doc_id", F.explode(F.split("text", " ", -1)).alias("token")
     )
-    # tf is persisted when the source is big (size-gated, r16): the df
+    # tf is persisted when Catalyst's size estimate of the documents
+    # table reaches corpus.PERSIST_MIN_INPUT_BYTES (r16): the df
     # branch below re-plans the tf subtree and Catalyst does not reuse
     # the exchange across the agg and the join, so without the persist
     # the full token-stream scan + (doc, token) shuffle runs TWICE per

@@ -9,21 +9,20 @@ tables that grow with the scale factor (`customer`, `supplier`, `part`,
 sf-proportional table forces a multi-GB driver-side broadcast build (or
 an OOM) where an unhinted plan would fall back to a shuffled join.
 
-Policy (round-1 judge finding):
+Two policies:
 
 - ``broadcast_bounded(df)`` — the explicit hint, restricted by
   convention to bounded-cardinality inputs. It is a plain
   ``F.broadcast`` plus a grep-able name: the plan-hygiene tests pin
   which call sites may use it.
-- sf-proportional inputs get NO hint. AQE (on in ``session.py``)
-  promotes the join to broadcast at runtime when the *measured*
-  post-filter size is under ``spark.sql.autoBroadcastJoinThreshold``,
-  and keeps the shuffled join when it is not — the same fast plan at
-  test scale, no OOM at 100 TB.
-- ``broadcast_if_small(df)`` — a plan-time stats gate for static sides
-  of stream-static joins, which are re-planned per micro-batch without
-  AQE's runtime promotion: hint only when Catalyst's size estimate for
-  the dim is under the session broadcast threshold.
+- Everything else gets NO hint; Spark's own size rule decides. In a
+  stream-static join the static side is re-planned with every
+  micro-batch, and ``JoinSelection`` broadcasts it when Catalyst's
+  estimate (:func:`estimated_size_bytes`) is at or under
+  ``spark.sql.autoBroadcastJoinThreshold``. In a batch query AQE (on in
+  ``session.py``) promotes the join to broadcast at runtime from the
+  *measured* post-filter size. Either way: the broadcast plan at test
+  scale, a shuffled join and no OOM at 100 TB.
 """
 
 from __future__ import annotations
@@ -66,18 +65,3 @@ def estimated_size_bytes(df: DataFrame) -> int:
     """
     return int(str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
 
-
-def broadcast_if_small(df: DataFrame, threshold_bytes: int | None = None) -> DataFrame:
-    """Hint broadcast only when the plan-time size estimate is under the
-    session's ``spark.sql.autoBroadcastJoinThreshold`` (or an explicit
-    threshold). For static dims in stream-static joins, where each
-    micro-batch is planned without AQE runtime promotion.
-    """
-    if threshold_bytes is None:
-        raw = df.sparkSession.conf.get(
-            "spark.sql.autoBroadcastJoinThreshold", "10485760"
-        )
-        threshold_bytes = parse_size_bytes(raw)
-    if threshold_bytes <= 0:  # -1 = auto-broadcast disabled
-        return df
-    return F.broadcast(df) if estimated_size_bytes(df) <= threshold_bytes else df

@@ -74,16 +74,6 @@ CDC_SCHEMA = _s(("type", STR), ("table", STR), ("data", STR))
 # DWD beans (projection targets)
 # ---------------------------------------------------------------------------
 
-#: PageLog — 16 fields (`bean/PageLog.scala:3-19`)
-PAGE_LOG_SCHEMA = _s(
-    ("mid", STR), ("user_id", STR), ("province_id", STR), ("channel", STR),
-    ("is_new", STR), ("model", STR), ("operate_system", STR),
-    ("version_code", STR), ("brand", STR),
-    ("page_id", STR), ("last_page_id", STR), ("page_item", STR),
-    ("page_item_type", STR), ("during_time", LONG), ("sourceType", STR),
-    ("ts", LONG),
-)
-
 #: OrderInfo — 14 source fields (`bean/OrderInfo.scala:3-17`); derived
 #: fields (create_date/hour, province_*, user_age/gender) added by joins
 ORDER_INFO_SCHEMA = _s(

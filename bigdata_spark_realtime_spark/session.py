@@ -22,10 +22,6 @@ import os
 
 from pyspark.sql import SparkSession
 
-#: trigger interval matching the reference's 5 s micro-batches
-#: (`app/ods_BaseLogApp.scala:31` et al.)
-DEFAULT_TRIGGER = "5 seconds"
-
 
 def default_parallelism() -> int:
     cpus = os.environ.get("SPARK_GRAFT_CPUS")

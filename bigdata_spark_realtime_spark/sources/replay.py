@@ -82,11 +82,7 @@ def link_data_files(src: str, dest_dir: str, prefix: str = "") -> None:
             os.symlink(src, link)
 
 
-def file_replay_stream(
-    spark: SparkSession,
-    table_path: str,
-    schema=None,
-) -> DataFrame:
+def file_replay_stream(spark: SparkSession, table_path: str) -> DataFrame:
     """Replay ``table_path`` (a parquet file OR a Spark-written parquet
     directory) as a file-source stream. The link dir is keyed by the
     absolute source path AND a content stamp of the data-file set
@@ -97,8 +93,7 @@ def file_replay_stream(
     version (silently mix old rows into the replay) after an in-place
     rewrite. Links are idempotent across sessions."""
     path = os.path.abspath(table_path)
-    if schema is None:
-        schema = spark.read.parquet(path).schema
+    schema = spark.read.parquet(path).schema
     stream_dir = os.path.join(
         tempfile.gettempdir(), f"bsr_replay_{table_stamp(path)}"
     )

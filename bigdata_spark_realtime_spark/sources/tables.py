@@ -30,8 +30,6 @@ TABLE_NAMES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 def ensure_session_confs(spark: SparkSession) -> None:
     """Pin the runtime-settable confs every query depends on, so results
@@ -136,11 +134,3 @@ def load_tables(spark: SparkSession, sf_dir: str, *names: str):
     if names:
         return tuple(load_table(spark, sf_dir, n) for n in names)
     return LazyTables(spark, sf_dir)
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Register every table as a temp view so plans can use spark.sql."""
-    dfs = load_tables(spark, sf_dir)
-    for name in TABLE_NAMES:
-        dfs[name].createOrReplaceTempView(name)
-    return dfs

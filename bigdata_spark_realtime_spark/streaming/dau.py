@@ -15,10 +15,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from bigdata_spark_realtime_spark.functions import scalar as fns
-from bigdata_spark_realtime_spark.plans.hints import (
-    broadcast_bounded,
-    broadcast_if_small,
-)
+from bigdata_spark_realtime_spark.plans.hints import broadcast_bounded
 
 #: watermark covering a full event day plus slack, so every same-day
 #: duplicate is in-state while the day is live (W3: the reference kept
@@ -83,9 +80,11 @@ def enrich_dau(
         F.col("area_code").alias("province_area_code"),
     )
     return (
-        # user dim grows with sf → size-gated hint (see plans/hints.py);
-        # province dim is bounded by the data model → explicit broadcast
-        deduped.join(broadcast_if_small(user), deduped.user_id == user.uid, "left")
+        # user dim grows with sf → no hint: Spark's JoinSelection
+        # broadcasts it per micro-batch while it fits the session's
+        # threshold (see plans/hints.py); province dim is bounded by the
+        # data model → explicit broadcast
+        deduped.join(user, deduped.user_id == user.uid, "left")
         .join(broadcast_bounded(prov), deduped.province_id == prov.pid, "left")
         .select(
             "mid", "user_id", "province_id", "channel", "is_new", "model",

@@ -19,10 +19,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from bigdata_spark_realtime_spark.functions import scalar as fns
-from bigdata_spark_realtime_spark.plans.hints import (
-    broadcast_bounded,
-    broadcast_if_small,
-)
+from bigdata_spark_realtime_spark.plans.hints import broadcast_bounded
 
 JOIN_TTL_HOURS = 24
 
@@ -50,11 +47,12 @@ def enrich_order_info(
     create_date = F.split(F.col("create_time"), " ").getItem(0)
     create_hour = F.split(F.split(F.col("create_time"), " ").getItem(1), ":").getItem(0)
     return (
-        # stream-static joins are re-planned per micro-batch without AQE
-        # runtime promotion: the sf-proportional user dim only gets a hint
-        # when its plan-time size estimate clears the broadcast threshold;
-        # the province dim is bounded by the data model (34 provinces)
-        info.join(broadcast_if_small(user), info.user_id == user.u_id, "left")
+        # stream-static joins are re-planned per micro-batch: the
+        # sf-proportional user dim gets no hint, so Spark's JoinSelection
+        # broadcasts it while its plan-time size estimate fits the
+        # session's threshold (see plans/hints.py); the province dim is
+        # bounded by the data model (34 provinces)
+        info.join(user, info.user_id == user.u_id, "left")
         .join(broadcast_bounded(prov), info.province_id == prov.p_id, "left")
         .withColumn("create_date", create_date)
         .withColumn("create_hour", create_hour)

@@ -14,7 +14,7 @@ exactly what ``applyInPandasWithState`` adds over built-in operators.
 
 Semantics (mirrors the batch ``sessionize_events`` plan):
 - events for a user belong to one session while consecutive gaps are
-  <= ``gap_min`` minutes; a larger gap closes the session and starts the
+  <= ``SESSION_GAP_MIN`` minutes; a larger gap closes the session and starts the
   next (ordinal + 1).
 - a closed session is emitted as (user_id, session_id, n_events,
   duration_ms) the moment the closing event arrives (append mode).
@@ -107,13 +107,7 @@ def _make_sessionizer(gap_ms: int):
     return sessionize_fn
 
 
-def sessionize_stream(
-    events: DataFrame,
-    event_time_col: str = "event_time",
-    user_col: str = "user_id",
-    gap_min: int = SESSION_GAP_MIN,
-    watermark: str = "1 hour",
-) -> DataFrame:
+def sessionize_stream(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
     """events (streaming, with an ``event_time`` timestamp column) →
     closed sessions (user_id, session_id, n_events, duration_ms).
 
@@ -121,12 +115,12 @@ def sessionize_stream(
     open session lingers before its timeout flush.
     """
     keyed = (
-        events.withWatermark(event_time_col, watermark)
-        .withColumn("event_ms", F.unix_millis(F.col(event_time_col)))
-        .select(user_col, "event_ms", event_time_col)
+        events.withWatermark("event_time", watermark)
+        .withColumn("event_ms", F.unix_millis(F.col("event_time")))
+        .select("user_id", "event_ms", "event_time")
     )
-    return keyed.groupBy(user_col).applyInPandasWithState(
-        _make_sessionizer(gap_min * 60 * 1000),
+    return keyed.groupBy("user_id").applyInPandasWithState(
+        _make_sessionizer(SESSION_GAP_MIN * 60 * 1000),
         _OUT_SCHEMA,
         _STATE_SCHEMA,
         "append",

@@ -1,29 +1,29 @@
-"""Broadcast-hint policy gate (plans/hints.py).
+"""Broadcast-hint policy (plans/hints.py) and the size parser.
 
-Pins the round-2/3 policy: sf-proportional dims in stream-static joins
-get a *size-gated* hint (`broadcast_if_small`) — present while the dim's
-plan-time estimate clears the session broadcast threshold, absent (plain
-shuffled join) when it does not — while bounded dims keep the explicit
-`broadcast_bounded` hint regardless.
+Pins the policy on the two stream-static pipelines: the sf-proportional
+user dim carries no hint, so Spark's own ``JoinSelection`` broadcasts it
+per micro-batch while its plan-time estimate fits the session's
+``spark.sql.autoBroadcastJoinThreshold`` and shuffles it otherwise; the
+bounded province dim keeps the explicit ``broadcast_bounded`` hint under
+every threshold.
 """
 
 from __future__ import annotations
 
+import re
+
 import pytest
+from pyspark.sql import types as T
 
-from bigdata_spark_realtime_spark.plans.hints import (
-    broadcast_if_small,
-    estimated_size_bytes,
-    parse_size_bytes,
+from bigdata_spark_realtime_spark import schemas as S
+from bigdata_spark_realtime_spark.plans.hints import parse_size_bytes
+from bigdata_spark_realtime_spark.sources import fixtures as FX
+from bigdata_spark_realtime_spark.streaming.base_log import split_base_log
+from bigdata_spark_realtime_spark.streaming.dau import build_dau
+from bigdata_spark_realtime_spark.streaming.order import (
+    enrich_order_info,
+    order_wide_join,
 )
-
-
-def _analyzed(df) -> str:
-    return str(df._jdf.queryExecution().analyzed())
-
-
-def _dim(spark, n=1000):
-    return spark.range(n).selectExpr("id", "concat('name-', id) AS name")
 
 
 def test_parse_size_bytes():
@@ -44,51 +44,92 @@ def test_parse_size_bytes_rejects_bare_i_suffix():
     assert parse_size_bytes("10b") == 10
 
 
-def test_hint_present_when_under_threshold(spark):
-    dim = _dim(spark)
-    hinted = broadcast_if_small(dim, threshold_bytes=estimated_size_bytes(dim) + 1)
-    assert "strategy=broadcast" in _analyzed(hinted.join(spark.range(10), "id"))
+# a physical join line: `<Strategy> [left keys], [right keys], ...`
+_JOIN = re.compile(r"(\w+Join) \[([^\]]*)\], \[([^\]]*)\]")
 
 
-def test_hint_absent_when_over_threshold(spark):
-    dim = _dim(spark)
-    gated = broadcast_if_small(dim, threshold_bytes=1)  # dim estimate >> 1 byte
-    assert "strategy=broadcast" not in _analyzed(gated.join(spark.range(10), "id"))
+@pytest.fixture(scope="module")
+def streams_dir(tmp_path_factory):
+    d = tmp_path_factory.mktemp("hint_streams")
+    FX.gen_raw_log(str(d / "raw_log"), n_rows=300, n_files=1)
+    FX.gen_dims(str(d / "dims"))
+    FX.gen_order_streams(str(d / "orders"), n_orders=50, n_files=1)
+    return d
 
 
-def test_hint_absent_when_auto_broadcast_disabled(spark):
-    gated = broadcast_if_small(_dim(spark), threshold_bytes=-1)
-    assert "strategy=broadcast" not in _analyzed(gated.join(spark.range(10), "id"))
+def _joins_by_dim_key(plan: str) -> dict[str, str]:
+    """{right-side join key without its expression id: strategy}."""
+    return {
+        re.sub(r"#\d+L?", "", right): strategy
+        for strategy, _, right in _JOIN.findall(plan)
+    }
 
 
-def test_session_threshold_drives_the_gate(spark):
-    """Same dim expression the dau enrich builds: hint follows the session
-    ``spark.sql.autoBroadcastJoinThreshold`` when no explicit threshold is
-    passed — tiny threshold → no hint, generous threshold → hint."""
-    # range-based so Catalyst has a real size estimate (a createDataFrame
-    # LocalRelation reports the unknown-size sentinel, and the gate then
-    # correctly refuses to hint — covered below)
-    u = spark.range(500).selectExpr("cast(id as string) uid", "'M' AS gender")
-    probe = spark.range(10).selectExpr("cast(id as string) uid")
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1")
-        assert "strategy=broadcast" not in _analyzed(
-            broadcast_if_small(u).join(probe, "uid")
-        )
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "100MB")
-        assert "strategy=broadcast" in _analyzed(
-            broadcast_if_small(u).join(probe, "uid")
-        )
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-
-
-def test_unknown_size_estimate_means_no_hint(spark):
-    """A LocalRelation has no size statistic (sentinel ~2^63): the gate
-    must treat unknown as too-big and leave the join unhinted."""
-    local = spark.createDataFrame([(i, "M") for i in range(50)], "uid string, g string")
-    probe = spark.range(10).selectExpr("cast(id as string) uid")
-    assert "strategy=broadcast" not in _analyzed(
-        broadcast_if_small(local, threshold_bytes=100 * 1024 * 1024).join(probe, "uid")
+def _run_once(df, name: str):
+    """Drain the stream in one trigger; the micro-batch's physical plan
+    and its rows."""
+    spark = df.sparkSession
+    q = (
+        df.writeStream.format("memory")
+        .queryName(name)
+        .trigger(availableNow=True)
+        .start()
     )
+    q.awaitTermination()
+    plan = q._jsq.explainInternal(False)
+    return plan, sorted(map(tuple, spark.table(name).collect()), key=repr)
+
+
+def _dau_and_order_wide(spark, d):
+    dim_user = spark.read.schema(S.DIM_USER_SCHEMA).json(str(d / "dims" / "user_info"))
+    dim_prov = spark.read.schema(S.DIM_PROVINCE_SCHEMA).json(
+        str(d / "dims" / "base_province")
+    )
+    raw = spark.readStream.format("text").load(str(d / "raw_log"))
+    dau = build_dau(
+        split_base_log(raw)["page"], dim_user, dim_prov, "2024-03-01", streaming=True
+    )
+
+    def with_ts(schema):
+        return T.StructType(schema.fields + [T.StructField("event_ts", T.LongType())])
+
+    info = spark.readStream.schema(with_ts(S.ORDER_INFO_SCHEMA)).json(
+        str(d / "orders" / "order_info")
+    )
+    det = spark.readStream.schema(with_ts(S.ORDER_DETAIL_SCHEMA)).json(
+        str(d / "orders" / "order_detail")
+    )
+    info = enrich_order_info(info, dim_user, dim_prov)
+    return dau, order_wide_join(info, det, streaming=True)
+
+
+def test_stream_dim_joins_follow_the_session_threshold(spark, streams_dir):
+    """DAU joins the user dim on ``uid`` and the province dim on ``pid``;
+    order-wide on ``u_id`` / ``p_id``, plus its stream-stream join on the
+    order ``id``. Under the default threshold the user dim broadcasts;
+    under ``1b`` and ``-1`` (auto-broadcast off) it is shuffled. The
+    province dim broadcasts every time, and the rows never change."""
+    bhj, smj = "BroadcastHashJoin", "SortMergeJoin"
+    ssj = "StreamingSymmetricHashJoin"
+    expected = {
+        None: ({"uid": bhj, "pid": bhj}, {"id": ssj, "u_id": bhj, "p_id": bhj}),
+        "1b": ({"uid": smj, "pid": bhj}, {"id": ssj, "u_id": smj, "p_id": bhj}),
+        "-1": ({"uid": smj, "pid": bhj}, {"id": ssj, "u_id": smj, "p_id": bhj}),
+    }
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    rows = []
+    for i, (threshold, (want_dau, want_wide)) in enumerate(expected.items()):
+        old = spark.conf.get(key)
+        try:
+            if threshold is not None:
+                spark.conf.set(key, threshold)
+            dau, wide = _dau_and_order_wide(spark, streams_dir)
+            dau_plan, dau_rows = _run_once(dau, f"hint_dau_{i}")
+            wide_plan, wide_rows = _run_once(wide, f"hint_wide_{i}")
+        finally:
+            spark.conf.set(key, old)
+        assert _joins_by_dim_key(dau_plan) == want_dau, (threshold, dau_plan)
+        assert _joins_by_dim_key(wide_plan) == want_wide, (threshold, wide_plan)
+        rows.append((dau_rows, wide_rows))
+    assert rows[0][0] and rows[0][1]
+    assert rows[1] == rows[0] and rows[2] == rows[0]

@@ -825,3 +825,59 @@ def test_queries_register_by_decorator_on_their_own_definition():
             and id(node) not in decorators
         ]
     assert not offenders, offenders
+
+
+def test_no_dead_top_level_names():
+    """Every top-level function, class and constant of the package is
+    named somewhere besides its own definition: in the package, the
+    scripts, the perfbench harness, bench.py, the entry module or the
+    tests. A name counts when it appears as code or inside a string
+    (``monkeypatch.setattr(mod, "NAME", ...)``, docstrings); comments do
+    not count. ``@register`` queries are reached through the registry
+    and ``__version__`` is read by tools, so both are exempt."""
+    import ast
+    import collections
+    import pathlib
+    import tokenize
+
+    from bigdata_spark_realtime_spark import __file__ as pkg_init
+
+    pkg = pathlib.Path(pkg_init).parent
+    root = pkg.parent
+    sources = [
+        p
+        for d in (pkg, root / "scripts", root / "perfbench", root / "tests")
+        for p in d.rglob("*.py")
+    ] + [root / "bench.py", root / "__spark_entry__.py"]
+    ident = re.compile(r"[A-Za-z_]\w*")
+    uses = collections.Counter()
+    for path in sources:
+        with open(path, "rb") as f:
+            for tok in tokenize.tokenize(f.readline):
+                if tok.type == tokenize.NAME:
+                    uses[tok.string] += 1
+                elif tok.type == tokenize.STRING:
+                    uses.update(ident.findall(tok.string))
+
+    def is_register(d):
+        return isinstance(d, ast.Call) and getattr(d.func, "id", None) == "register"
+
+    dead = []
+    for path in sorted(pkg.rglob("*.py")):
+        for node in ast.parse(path.read_text(), str(path)).body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                if any(is_register(d) for d in node.decorator_list):
+                    continue
+                names = [node.name]
+            elif isinstance(node, ast.Assign):
+                names = [t.id for t in node.targets if isinstance(t, ast.Name)]
+            elif isinstance(node, ast.AnnAssign) and isinstance(node.target, ast.Name):
+                names = [node.target.id]
+            else:
+                continue
+            dead += [
+                f"{path.relative_to(root)}:{node.lineno} {n}"
+                for n in names
+                if n != "__version__" and uses[n] <= 1
+            ]
+    assert not dead, dead

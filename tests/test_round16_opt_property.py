@@ -9,8 +9,9 @@ size-gated ``scoped_persist_if_large`` helper (plans/corpus.py) used by
 the bm25/tfidf single-scan rewrites. Each rewrite must be BIT-IDENTICAL
 to the shape it replaced — these tests pin the kernels against direct
 re-implementations of the old per-row arithmetic and pin the persist
-gate's both branches, so a future refactor cannot silently change
-semantics while the oracle sweep stays green by fixture luck.
+gate's both branches (its persist branch also under the oracle), so a
+future refactor cannot silently change semantics while the oracle sweep
+stays green by fixture luck.
 """
 
 from __future__ import annotations
@@ -96,6 +97,60 @@ def test_persist_gate_persists_large_inputs(spark, sf_dir, monkeypatch):
         out.unpersist()
 
 
-def test_persist_gate_unknown_layout_counts_as_large(tmp_path):
-    # a missing table must take the PERSIST branch (scale-safe default)
-    assert C._input_bytes(str(tmp_path), "nonexistent") >= (1 << 60)
+def test_persist_gate_sizes_a_multipart_directory_by_its_parts(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """A Spark-written ``documents`` directory is sized as the sum of its
+    part files — the same file-index total the planner sees — and the
+    gate compares exactly that total against the threshold."""
+    import os
+
+    from bigdata_spark_realtime_spark.plans.hints import estimated_size_bytes
+    from bigdata_spark_realtime_spark.sources.tables import load_table
+
+    out_dir = tmp_path / "documents.parquet"
+    spark.read.parquet(f"{sf_dir}/documents.parquet").repartition(3).write.parquet(
+        str(out_dir)
+    )
+    parts = [f for f in os.listdir(out_dir) if f.startswith("part-")]
+    assert len(parts) >= 2
+    total = sum(os.path.getsize(out_dir / f) for f in parts)
+    assert estimated_size_bytes(load_table(spark, str(tmp_path), "documents")) == total
+
+    df = spark.range(4)
+    monkeypatch.setattr(C, "PERSIST_MIN_INPUT_BYTES", total + 1)
+    assert C.scoped_persist_if_large(df, "r16_gate_parts", str(tmp_path)) is df
+    assert df.storageLevel.useMemory is False
+    monkeypatch.setattr(C, "PERSIST_MIN_INPUT_BYTES", total)
+    out = C.scoped_persist_if_large(df, "r16_gate_parts", str(tmp_path))
+    try:
+        assert out.storageLevel.useMemory is True
+    finally:
+        out.unpersist()
+
+
+@pytest.mark.parametrize(
+    "name", ["ext_bm25_search", "ext_text_tfidf", "ext_hybrid_search"]
+)
+def test_persist_gate_scale_path_matches_oracle(
+    spark, sf_dir, duck, monkeypatch, name
+):
+    """The gate forced on (threshold 0) takes the persist path that every
+    test SF otherwise skips; the three queries that reach it must still
+    match their registered oracles."""
+    from bigdata_spark_realtime_spark.plans import registry
+    from tests.oracle_util import assert_matches_oracle
+
+    monkeypatch.setattr(C, "PERSIST_MIN_INPUT_BYTES", 0)
+    spec = registry.load_all()[name]
+    try:
+        assert_matches_oracle(spec.fn(spark, sf_dir), duck, spec.oracle)
+        persisted = [
+            f for scope in ("ext_bm25_agg", "ext_text_tfidf")
+            for f in C._SCOPED_PERSISTS.get(scope, [])
+        ]
+        assert persisted and all(f.storageLevel.useMemory for f in persisted)
+    finally:
+        for scope in ("ext_bm25_agg", "ext_text_tfidf"):
+            for f in C._SCOPED_PERSISTS.pop(scope, []):
+                f.unpersist()
