@@ -12,6 +12,9 @@ memo per caller.
 - Staleness: the key carries the file's storage signature, so an
   in-place regeneration of the table misses and rebuilds instead of
   serving a value whose footer or contents are stale.
+- Location: ``sf_dir`` is a local path or a ``file:`` URI. Under any
+  other scheme (an object store) there is no file to stat, so nothing
+  is memoized and every call builds.
 - Lifetime: entries live in a ``WeakKeyDictionary`` keyed by the
   session, so they die with it, and a restarted session can never
   collide with a dead one's entries the way ``id()`` reuse could.
@@ -28,6 +31,7 @@ import threading
 import weakref
 from collections import Counter, OrderedDict
 from typing import Callable, TypeVar
+from urllib.parse import unquote, urlparse
 
 T = TypeVar("T")
 
@@ -39,6 +43,17 @@ _sessions: "weakref.WeakKeyDictionary[object, OrderedDict]" = (
     weakref.WeakKeyDictionary()
 )
 _lock = threading.Lock()
+
+
+def local_dir(sf_dir: str) -> str | None:
+    """``sf_dir`` as an absolute local path: a plain path, or a ``file:``
+    URI with its scheme stripped. None under any other scheme."""
+    uri = urlparse(sf_dir)
+    if uri.scheme == "file":
+        return os.path.abspath(unquote(uri.path))
+    if uri.scheme:
+        return None
+    return os.path.abspath(sf_dir)
 
 
 def file_sig(path: str) -> tuple:
@@ -66,8 +81,11 @@ def memo(
     ``build`` runs outside the lock (it may call :func:`memo` itself, and
     may run Spark jobs); two threads that miss together both build and
     the last one stored wins, which is harmless for deterministic
-    artifacts."""
-    path = os.path.join(os.path.abspath(sf_dir), f"{table}.parquet")
+    artifacts. A non-local ``sf_dir`` is never memoized."""
+    root = local_dir(sf_dir)
+    if root is None:
+        return build()
+    path = os.path.join(root, f"{table}.parquet")
     key = (artifact, path, file_sig(path))
     with _lock:
         entries = _sessions.setdefault(spark, OrderedDict())

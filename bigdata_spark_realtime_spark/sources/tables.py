@@ -45,13 +45,15 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """The table's DataFrame, memoized per session by ``cache.memo``.
     A DataFrame is an immutable lazy plan, so reuse is safe and saves
     the 0.1-0.25 s of py4j footer-read round-trips every
-    ``spark.read.parquet`` costs — ~5 s across one bench pass."""
+    ``spark.read.parquet`` costs — ~5 s across one bench pass.
+    ``sf_dir`` is a local path or a URI; only a local or ``file:`` one
+    is memoized (``cache.local_dir``)."""
 
     def build() -> DataFrame:
         ensure_session_confs(spark)
+        path = os.path.join(cache.local_dir(sf_dir) or sf_dir, f"{name}.parquet")
         if name == "events":
-            return _load_events(spark, sf_dir)
-        path = os.path.join(os.path.abspath(sf_dir), f"{name}.parquet")
+            return _load_events(spark, path)
         return spark.read.parquet(path)
 
     return cache.memo(spark, sf_dir, name, "table", build)
@@ -97,11 +99,10 @@ def ts_to_timestamp_expr(kind: str):
     return F.expr("timestamp_micros(ts div 1000)")
 
 
-def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _load_events(spark: SparkSession, path: str) -> DataFrame:
     """Dtype-adaptive events load: branch on the footer's physical type
     instead of hard-coding one generator vintage. Either way the loaded
     frame presents ``ts`` as TimestampType (µs precision, UTC)."""
-    path = os.path.join(sf_dir, "events.parquet")
     kind = events_ts_kind(path)
     if kind == "nanos":
         # runtime-settable legacy conf: nanos columns surface as long

@@ -361,3 +361,162 @@ def test_order_stream_left_outer_emits_orphans_once(spark, fixture_dir, tmp_path
     for r in null_rows[:10]:
         assert r.sku_name is not None and r.total_amount is None
         assert r.user_gender is None and r.province_name is None
+
+
+# ---------------------------------------------------------------------------
+# state partitions: streams start at 1, batch shuffles at shuffle_partitions
+# ---------------------------------------------------------------------------
+
+#: ``shuffle_partitions`` the ``spark`` fixture passes to ``get_spark``
+BATCH_WIDTH = 8
+
+
+def _state_partitions(query) -> set[tuple[str, int, int]]:
+    """(operator, numShufflePartitions, numStateStoreInstances) over every
+    stateful operator of every progress report of ``query``."""
+    return {
+        (op["operatorName"], op["numShufflePartitions"], op["numStateStoreInstances"])
+        for p in query.recentProgress
+        for op in p["stateOperators"]
+    }
+
+
+def _upsert_streams(session, fixture_dir, out):
+    """The DAU and order-wide streams over the fixture files, each through
+    ``foreach_batch_upsert`` into a dt-partitioned store under ``out``
+    (the realtime pipeline's sinks). Returns the DAU store's (dt, mid)
+    rows, the order-wide store's row multiset, and the state operators
+    both queries reported."""
+    from collections import Counter
+
+    from bigdata_spark_realtime_spark.streaming.sinks import foreach_batch_upsert
+
+    dim_user, dim_prov = _dims(session, fixture_dir)
+    info_schema = T.StructType(S.ORDER_INFO_SCHEMA.fields + [T.StructField("event_ts", T.LongType())])
+    det_schema = T.StructType(S.ORDER_DETAIL_SCHEMA.fields + [T.StructField("event_ts", T.LongType())])
+    raw = (
+        session.readStream.format("text")
+        .option("maxFilesPerTrigger", 1)
+        .load(str(fixture_dir / "raw_log"))
+    )
+    dau = build_dau(split_base_log(raw)["page"], dim_user, dim_prov, AGE_REF, streaming=True)
+    info = (
+        session.readStream.schema(info_schema)
+        .option("maxFilesPerTrigger", 1)
+        .json(str(fixture_dir / "orders" / "order_info"))
+    )
+    det = (
+        session.readStream.schema(det_schema)
+        .option("maxFilesPerTrigger", 1)
+        .json(str(fixture_dir / "orders" / "order_detail"))
+    )
+    wide = order_wide_join(
+        enrich_order_info(info, dim_user, dim_prov), det, streaming=True
+    ).withColumn("event_seq", F.col("detail_id"))
+    started = [
+        dau.writeStream.foreachBatch(
+            foreach_batch_upsert(session, str(out / "dau"), ["dt", "mid"], "ts", "dt")
+        )
+        .option("checkpointLocation", str(out / "ckpt_dau"))
+        .start(),
+        wide.writeStream.foreachBatch(
+            foreach_batch_upsert(
+                session, str(out / "order_wide"), ["detail_id"], "event_seq", "create_date"
+            )
+        )
+        .option("checkpointLocation", str(out / "ckpt_wide"))
+        .start(),
+    ]
+    try:
+        for q in started:
+            q.processAllAvailable()
+    finally:
+        for q in started:
+            q.stop()
+    dau_rows = [(r.dt, r.mid) for r in session.read.parquet(str(out / "dau")).collect()]
+    wide_rows = Counter(
+        map(tuple, session.read.parquet(str(out / "order_wide")).select(*wide.columns).collect())
+    )
+    return dau_rows, wide_rows, set().union(*map(_state_partitions, started))
+
+
+def test_fresh_stream_runs_one_state_partition(spark, fixture_dir, tmp_path):
+    _, _, ops = _upsert_streams(spark, fixture_dir, tmp_path)
+    by_name = {name: (parts, stores) for name, parts, stores in ops}
+    assert len(by_name) == len(ops), "one partition count per operator"
+    assert {parts for parts, _ in by_name.values()} == {1}
+    # the watermarked dedup keeps one store per partition
+    assert by_name["dedupeWithinWatermark"] == (1, 1)
+
+
+def test_checkpoint_keeps_its_state_partition_count(spark, tmp_path):
+    """A checkpoint started at N state partitions restarts at N from a
+    session whose default is 1: Spark reads the count from the offset
+    log, not from the session."""
+    src = tmp_path / "src"
+    src.mkdir()
+    ckpt = str(tmp_path / "ckpt")
+
+    def run(session, epoch):
+        rows = [{"k": f"k{epoch}-{i}", "ts": i} for i in range(20)]
+        (src / f"f{epoch}.json").write_text("\n".join(map(json.dumps, rows)))
+        q = (
+            session.readStream.schema("k string, ts long").json(str(src))
+            .dropDuplicates(["k"])
+            .writeStream.format("noop")
+            .option("checkpointLocation", ckpt)
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+        return _state_partitions(q)
+
+    four = spark.newSession()
+    four.conf.set("spark.sql.shuffle.partitions", "4")
+    assert {parts for _, parts, _ in run(four, 0)} == {4}
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "1"
+    assert {parts for _, parts, _ in run(spark, 1)} == {4}
+
+
+def test_batch_shuffle_starts_at_shuffle_partitions(spark, sf_dir):
+    """AQE's initial plan (before execution) shuffles at the batch width,
+    not at the streams' 1."""
+    import re
+
+    from bigdata_spark_realtime_spark.sources.tables import load_table
+
+    df = load_table(spark, sf_dir, "orders").groupBy("o_custkey").count()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=false" in plan
+    widths = re.findall(r"hashpartitioning\(.*?, (\d+)\)", plan)
+    assert widths and set(widths) == {str(BATCH_WIDTH)}
+
+
+def test_get_spark_keeps_aqe_coalescing_on(spark):
+    """With coalescing off a batch shuffle falls back to
+    ``spark.sql.shuffle.partitions`` and would silently run at 1."""
+    conf = spark.conf
+    assert conf.get("spark.sql.adaptive.enabled") == "true"
+    assert conf.get("spark.sql.adaptive.coalescePartitions.enabled") == "true"
+    assert conf.get("spark.sql.adaptive.coalescePartitions.initialPartitionNum") == str(
+        BATCH_WIDTH
+    )
+    assert conf.get("spark.sql.shuffle.partitions") == "1"
+
+
+def test_streams_agree_at_one_and_five_state_partitions(spark, fixture_dir, tmp_path):
+    """The override path (a session at N state partitions) under the
+    same correctness check as the default: equal DAU key sets and
+    order-wide row multisets over the same files."""
+    dau_one, wide_one, ops_one = _upsert_streams(spark, fixture_dir, tmp_path / "one")
+    five = spark.newSession()
+    five.conf.set("spark.sql.shuffle.partitions", "5")
+    dau_five, wide_five, ops_five = _upsert_streams(five, fixture_dir, tmp_path / "five")
+
+    assert {parts for _, parts, _ in ops_one} == {1}
+    assert {parts for _, parts, _ in ops_five} == {5}
+    assert dau_one and len(dau_one) == len(set(dau_one))
+    assert sorted(dau_five) == sorted(dau_one)
+    assert wide_one and wide_five == wide_one
