@@ -73,13 +73,29 @@ _TTL_MS = 24 * 3600_000
 def _drain_to_memory(
     df: DataFrame, spark: SparkSession, output_mode: str = "append"
 ) -> DataFrame:
+    """Run ``df`` to the end of its input into a memory table and return
+    that table. A drain replays whole tables, mostly in one micro-batch,
+    so its work is batch-sized: its fresh checkpoint starts at the batch
+    shuffle width (``initialPartitionNum``), not at the small-stream
+    default of 1 that ``session.get_spark`` sets. A stream reads the
+    setting once, when ``start()`` clones the session, so it is set
+    around that call only."""
     name = f"q_{uuid.uuid4().hex[:10]}"
-    q = (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .start()
+    conf, key = df.sparkSession.conf, "spark.sql.shuffle.partitions"
+    stream_width = conf.get(key)
+    batch_width = conf.get(
+        "spark.sql.adaptive.coalescePartitions.initialPartitionNum", stream_width
     )
+    conf.set(key, batch_width)
+    try:
+        q = (
+            df.writeStream.format("memory")
+            .queryName(name)
+            .outputMode(output_mode)
+            .start()
+        )
+    finally:
+        conf.set(key, stream_width)
     q.processAllAvailable()
     q.stop()
     return spark.table(name)

@@ -14,16 +14,20 @@ Scale notes (100 TB / 1000 executors):
   core by default) and AQE merges them down. Spark turns AQE off inside
   a streaming query, so every shuffle a stream runs (its stateful
   operators' — dedup, stream-stream join — and any on the frame a
-  `foreachBatch` callback gets) takes `spark.sql.shuffle.partitions`,
-  which is 1. The state rule is state bytes ÷ a target partition size,
-  floor 1; a checkpoint fixes its count at its first start, when there
-  is no state yet, so the rule gives its floor. Every state partition
-  costs a state-store load and commit task per operator per micro-batch
-  whether it holds state or not: on a 4-core host the realtime
-  workload's latency fell 25 % going from 4 partitions to 1. A stream
-  that outgrows one task starts its new checkpoint from a session with
-  `extra_conf={"spark.sql.shuffle.partitions": N}`; an existing
-  checkpoint keeps the count it was started with.
+  `foreachBatch` callback gets) takes `spark.sql.shuffle.partitions`.
+  Its default here is 1, a default for small streams: every state
+  partition costs a state-store load and commit task per operator per
+  micro-batch whether it holds state or not, and on a 4-core host the
+  realtime workload's latency fell 25 % going from 4 partitions to 1.
+  A checkpoint fixes its count at its first start and keeps it for its
+  whole life; it cannot be raised later without a new checkpoint. So a
+  production stream whose state will outgrow one task must set
+  `spark.sql.shuffle.partitions` (`extra_conf={...: N}`) before its
+  first start. The registered stream twins drain whole tables, which is
+  batch-sized work, so `plans/streaming_queries._drain_to_memory`
+  starts each of them at the batch width instead (at 1, the
+  `applyInPandasWithState` sessionizer ran 1.7x slower at sf0.1 on a
+  4-core host).
 - `spark.sql.session.timeZone=UTC` is pinned so date/hour derivations
   (SURVEY.md §2.4 F1-F3) are deterministic and oracle-comparable; the
   reference used JVM-default TZ via SimpleDateFormat
@@ -61,12 +65,14 @@ def get_spark(
     ``shuffle_partitions`` (default: one per core) is the start width of
     batch shuffles, set as AQE's ``initialPartitionNum``; AQE and its
     coalescing stay on, since with coalescing off Spark would fall back
-    to ``spark.sql.shuffle.partitions``. That setting is 1 and is read
-    only by streaming queries, which run with AQE off: a new checkpoint
-    starts with one state partition per stateful operator, and a
-    restarted one keeps the count it started with. Pass
-    ``extra_conf={"spark.sql.shuffle.partitions": N}`` to start new
-    checkpoints at N (module docstring).
+    to ``spark.sql.shuffle.partitions``. That setting defaults to 1, for
+    small streams, and is read only by streaming queries, which run with
+    AQE off: a new checkpoint starts with one state partition per
+    stateful operator, and keeps that count for its life. A stream that
+    will hold more state passes
+    ``extra_conf={"spark.sql.shuffle.partitions": N}`` before its first
+    start; the registered stream twins' whole-table drains start at the
+    batch width (module docstring).
     """
     par = default_parallelism()
     if master is None:
@@ -98,7 +104,8 @@ def get_spark(
             "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
             str(shuffle_partitions),
         )
-        # streams (AQE off): one state partition per stateful operator
+        # new streams (AQE off): one state partition per stateful
+        # operator, a default for small streams
         .config("spark.sql.shuffle.partitions", "1")
         # adaptive execution: coalesce + skew-join + dynamic broadcast
         .config("spark.sql.adaptive.enabled", "true")

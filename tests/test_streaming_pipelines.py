@@ -367,9 +367,6 @@ def test_order_stream_left_outer_emits_orphans_once(spark, fixture_dir, tmp_path
 # state partitions: streams start at 1, batch shuffles at shuffle_partitions
 # ---------------------------------------------------------------------------
 
-#: ``shuffle_partitions`` the ``spark`` fixture passes to ``get_spark``
-BATCH_WIDTH = 8
-
 
 def _state_partitions(query) -> set[tuple[str, int, int]]:
     """(operator, numShufflePartitions, numStateStoreInstances) over every
@@ -440,15 +437,6 @@ def _upsert_streams(session, fixture_dir, out):
     return dau_rows, wide_rows, set().union(*map(_state_partitions, started))
 
 
-def test_fresh_stream_runs_one_state_partition(spark, fixture_dir, tmp_path):
-    _, _, ops = _upsert_streams(spark, fixture_dir, tmp_path)
-    by_name = {name: (parts, stores) for name, parts, stores in ops}
-    assert len(by_name) == len(ops), "one partition count per operator"
-    assert {parts for parts, _ in by_name.values()} == {1}
-    # the watermarked dedup keeps one store per partition
-    assert by_name["dedupeWithinWatermark"] == (1, 1)
-
-
 def test_checkpoint_keeps_its_state_partition_count(spark, tmp_path):
     """A checkpoint started at N state partitions restarts at N from a
     session whose default is 1: Spark reads the count from the offset
@@ -480,30 +468,45 @@ def test_checkpoint_keeps_its_state_partition_count(spark, tmp_path):
     assert {parts for _, parts, _ in run(spark, 1)} == {4}
 
 
+def test_drain_starts_at_the_batch_width(spark, sf_dir, monkeypatch):
+    """A registered stream twin drains a whole table, batch-sized work:
+    ``_drain_to_memory`` starts its stateful operator at the batch width
+    and leaves the session's stream default at 1."""
+    from pyspark.sql.streaming.readwriter import DataStreamWriter
+
+    from bigdata_spark_realtime_spark.plans.streaming_queries import stream_sessionize_gap
+
+    started = []
+    real_start = DataStreamWriter.start
+
+    def start(self, *args, **kwargs):
+        query = real_start(self, *args, **kwargs)
+        started.append(query)
+        return query
+
+    monkeypatch.setattr(DataStreamWriter, "start", start)
+    assert stream_sessionize_gap(spark, sf_dir).count() > 0
+    width = int(spark.conf.get("spark.sql.adaptive.coalescePartitions.initialPartitionNum"))
+    assert [{parts for _, parts, _ in _state_partitions(q)} for q in started] == [{width}]
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "1"
+
+
 def test_batch_shuffle_starts_at_shuffle_partitions(spark, sf_dir):
     """AQE's initial plan (before execution) shuffles at the batch width,
-    not at the streams' 1."""
+    not at the streams' 1. With AQE or its coalescing off, a batch
+    shuffle would fall back to ``spark.sql.shuffle.partitions`` and
+    this plan would show 1."""
     import re
 
     from bigdata_spark_realtime_spark.sources.tables import load_table
 
+    width = spark.conf.get("spark.sql.adaptive.coalescePartitions.initialPartitionNum")
+    assert int(width) > 1
     df = load_table(spark, sf_dir, "orders").groupBy("o_custkey").count()
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "isFinalPlan=false" in plan
     widths = re.findall(r"hashpartitioning\(.*?, (\d+)\)", plan)
-    assert widths and set(widths) == {str(BATCH_WIDTH)}
-
-
-def test_get_spark_keeps_aqe_coalescing_on(spark):
-    """With coalescing off a batch shuffle falls back to
-    ``spark.sql.shuffle.partitions`` and would silently run at 1."""
-    conf = spark.conf
-    assert conf.get("spark.sql.adaptive.enabled") == "true"
-    assert conf.get("spark.sql.adaptive.coalescePartitions.enabled") == "true"
-    assert conf.get("spark.sql.adaptive.coalescePartitions.initialPartitionNum") == str(
-        BATCH_WIDTH
-    )
-    assert conf.get("spark.sql.shuffle.partitions") == "1"
+    assert widths and set(widths) == {width}
 
 
 def test_streams_agree_at_one_and_five_state_partitions(spark, fixture_dir, tmp_path):
@@ -515,7 +518,12 @@ def test_streams_agree_at_one_and_five_state_partitions(spark, fixture_dir, tmp_
     five.conf.set("spark.sql.shuffle.partitions", "5")
     dau_five, wide_five, ops_five = _upsert_streams(five, fixture_dir, tmp_path / "five")
 
-    assert {parts for _, parts, _ in ops_one} == {1}
+    # a fresh stream from the default session: one partition per
+    # stateful operator, and the watermarked dedup keeps one store in it
+    by_name = {name: (parts, stores) for name, parts, stores in ops_one}
+    assert len(by_name) == len(ops_one), "one partition count per operator"
+    assert {parts for parts, _ in by_name.values()} == {1}
+    assert by_name["dedupeWithinWatermark"] == (1, 1)
     assert {parts for _, parts, _ in ops_five} == {5}
     assert dau_one and len(dau_one) == len(set(dau_one))
     assert sorted(dau_five) == sorted(dau_one)
