@@ -40,6 +40,7 @@ from bigdata_spark_realtime_spark.plans.ext_ivf import (
     _sq_dist_sql,
 )
 from bigdata_spark_realtime_spark.plans.registry import register
+from bigdata_spark_realtime_spark.sources.replay import drain_to_memory, replay_table
 from bigdata_spark_realtime_spark.sources.tables import load_table
 
 _SQD_E = _sq_dist_sql("e.embedding::DOUBLE[]", "c.centroid")
@@ -115,13 +116,9 @@ def stream_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
         _centroid_artifact,
         assign_best_label,
     )
-    from bigdata_spark_realtime_spark.plans.streaming_queries import (
-        _drain_to_memory,
-        _embeddings_stream,
-    )
 
     by_label = _centroid_artifact(spark, sf_dir)
-    emb = _embeddings_stream(spark, sf_dir).where(
+    emb = replay_table(spark, sf_dir, "embeddings").where(
         F.col("embedding").isNotNull()
     )
     confusion = (
@@ -132,4 +129,4 @@ def stream_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(F.count(F.lit(1)).alias("n_vectors"))
     )
-    return _drain_to_memory(confusion, spark, output_mode="complete")
+    return drain_to_memory(confusion, output_mode="complete")

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from bigdata_spark_realtime_spark.plans.registry import register
+from bigdata_spark_realtime_spark.sources.replay import drain_to_memory, replay_table
 from bigdata_spark_realtime_spark.sources.tables import load_table
 
 PPM = 1_000_000
@@ -223,12 +224,7 @@ def stream_cohort_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     side renamed: both derive from memory-sink relations), re-aggregate
     into the (cohort, offset) grid, and run the same cumulative
     projection. Oracle = the batch SQL."""
-    from bigdata_spark_realtime_spark.plans.streaming_queries import (
-        _drain_to_memory,
-        _events_stream,
-    )
-
-    ev = _events_stream(spark, sf_dir)
+    ev = replay_table(spark, sf_dir, "events")
     firsts_state = ev.groupBy("user_id").agg(
         F.min(F.expr("unix_micros(event_time) div 86400000000")).alias(
             "cohort_day"
@@ -244,11 +240,11 @@ def stream_cohort_value(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("user_id", "day")
         .agg(F.count(F.lit(1)).alias("n"), F.sum("v100").alias("cents"))
     )
-    firsts = _drain_to_memory(firsts_state, spark, output_mode="complete").select(
+    firsts = drain_to_memory(firsts_state, output_mode="complete").select(
         F.col("user_id").alias("uid_f"),
         F.col("cohort_day").cast("bigint").alias("cohort_day"),
     )
-    spend = _drain_to_memory(spend_state, spark, output_mode="complete").select(
+    spend = drain_to_memory(spend_state, output_mode="complete").select(
         "user_id",
         F.col("day").cast("bigint").alias("day"),
         F.col("n").cast("bigint").alias("n"),

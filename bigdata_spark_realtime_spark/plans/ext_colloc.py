@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bigdata_spark_realtime_spark.plans.registry import register
+from bigdata_spark_realtime_spark.sources.replay import drain_to_memory, replay_table
 from bigdata_spark_realtime_spark.sources.tables import load_table
 
 #: lift quantization scale
@@ -141,12 +142,7 @@ def stream_bigram_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch count materializes), then the lift scoring and top-K run on
     the drained count frames exactly like the batch operator
     (`plans/ext_colloc.ext_bigram_pmi`). Oracle = the batch SQL."""
-    from bigdata_spark_realtime_spark.plans.streaming_queries import (
-        _docs_stream,
-        _drain_to_memory,
-    )
-
-    toks = _docs_stream(spark, sf_dir).select(
+    toks = replay_table(spark, sf_dir, "documents").select(
         F.split("text", " ", -1).alias("t")
     )
     uni_state = (
@@ -168,11 +164,11 @@ def stream_bigram_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("w1", "w2")
         .agg(F.count(F.lit(1)).alias("cab"))
     )
-    uni = _drain_to_memory(uni_state, spark, output_mode="complete").select(
+    uni = drain_to_memory(uni_state, output_mode="complete").select(
         "w", F.col("cw").cast("bigint").alias("cw")
     )
     bc = (
-        _drain_to_memory(big_state, spark, output_mode="complete")
+        drain_to_memory(big_state, output_mode="complete")
         .select("w1", "w2", F.col("cab").cast("bigint").alias("cab"))
         .where(F.col("cab") >= PMI_MIN_COUNT)
     )

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bigdata_spark_realtime_spark.plans.registry import register
+from bigdata_spark_realtime_spark.sources.replay import drain_to_memory, replay_table
 from bigdata_spark_realtime_spark.sources.tables import load_table
 
 #: rule name → (Spark predicate SQL, DuckDB predicate SQL). Kept as
@@ -162,11 +163,6 @@ def stream_contract_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     report equals the batch audit exactly (the oracle is the batch
     SQL). This is live data-quality monitoring: the violation counters
     are readable after every micro-batch, not at end of day."""
-    from bigdata_spark_realtime_spark.plans.streaming_queries import (
-        _drain_to_memory,
-        _events_stream,
-    )
-
-    ev = _events_stream(spark, sf_dir)
+    ev = replay_table(spark, sf_dir, "events")
     one = ev.groupBy().agg(*audit_aggs(EVENT_RULES, "event_id"))
-    return audit_report(_drain_to_memory(one, spark, output_mode="complete"), EVENT_RULES)
+    return audit_report(drain_to_memory(one, output_mode="complete"), EVENT_RULES)

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from bigdata_spark_realtime_spark.functions import hashing as H
 from bigdata_spark_realtime_spark.plans.ext_windows2 import _item_expr
 from bigdata_spark_realtime_spark.plans.registry import register
+from bigdata_spark_realtime_spark.sources.replay import drain_to_memory, replay_table
 from bigdata_spark_realtime_spark.sources.tables import load_table
 
 LEADERBOARD_TOP_K = 20
@@ -154,12 +155,7 @@ def stream_decayed_leaderboard(spark: SparkSession, sf_dir: str) -> DataFrame:
     items × days state), then the integer decay shift against the
     drained max-day anchor and the top-K run exactly like the batch
     operator. Oracle = the batch SQL."""
-    from bigdata_spark_realtime_spark.plans.streaming_queries import (
-        _drain_to_memory,
-        _events_stream,
-    )
-
-    ev = _events_stream(spark, sf_dir)
+    ev = replay_table(spark, sf_dir, "events")
     state = (
         ev.where(
             F.col("event_type").isin("click", "view", "purchase")
@@ -174,7 +170,7 @@ def stream_decayed_leaderboard(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("item", "day")
         .agg(F.sum("v100").alias("v100"))
     )
-    id_day = _drain_to_memory(state, spark, output_mode="complete").select(
+    id_day = drain_to_memory(state, output_mode="complete").select(
         "item", "day", F.col("v100").cast("bigint").alias("v100")
     )
     return _leaderboard_from_partials(id_day)

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from bigdata_spark_realtime_spark.plans.registry import register
+from bigdata_spark_realtime_spark.sources.replay import drain_to_memory, replay_table
 from bigdata_spark_realtime_spark.sources.tables import load_table
 
 PPM = 1_000_000
@@ -235,19 +236,14 @@ def stream_event_mix_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation (calendar-bounded state), then the permille-quantized
     Gini projection runs on the drained partials exactly like the
     batch operator. Oracle = the batch SQL."""
-    from bigdata_spark_realtime_spark.plans.streaming_queries import (
-        _drain_to_memory,
-        _events_stream,
-    )
-
-    ev = _events_stream(spark, sf_dir)
+    ev = replay_table(spark, sf_dir, "events")
     state = ev.groupBy(
         F.date_format(F.date_trunc("day", "event_time"), "yyyy-MM-dd").alias(
             "day"
         ),
         "event_type",
     ).agg(F.count(F.lit(1)).alias("c"))
-    d = _drain_to_memory(state, spark, output_mode="complete").select(
+    d = drain_to_memory(state, output_mode="complete").select(
         "day", "event_type", F.col("c").cast("bigint").alias("c")
     )
     return _gini_from_counts(d)
@@ -260,12 +256,7 @@ def stream_distribution_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     complete-mode aggregation (bounded by days × types × ~60 buckets),
     then the midpoint split and cross-multiplied KS run on the drained
     partials exactly like the batch operator. Oracle = the batch SQL."""
-    from bigdata_spark_realtime_spark.plans.streaming_queries import (
-        _drain_to_memory,
-        _events_stream,
-    )
-
-    ev = _events_stream(spark, sf_dir)
+    ev = replay_table(spark, sf_dir, "events")
     state = (
         ev.where(F.col("value") > 0)
         .select(
@@ -277,7 +268,7 @@ def stream_distribution_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type", "day", "bkt")
         .agg(F.count(F.lit(1)).alias("c"))
     )
-    d = _drain_to_memory(state, spark, output_mode="complete").select(
+    d = drain_to_memory(state, output_mode="complete").select(
         "event_type", "day", "bkt", F.col("c").cast("bigint").alias("c")
     )
     return _drift_from_day_buckets(d)

@@ -60,6 +60,7 @@ from pyspark.sql import functions as F
 from bigdata_spark_realtime_spark import cache
 from bigdata_spark_realtime_spark.functions import hashing as H
 from bigdata_spark_realtime_spark.plans.registry import register
+from bigdata_spark_realtime_spark.sources.replay import drain_to_memory, replay_table
 from bigdata_spark_realtime_spark.sources.tables import load_table
 
 #: hashed-feature buckets — the fixed model size (the paper uses 10k;
@@ -313,16 +314,11 @@ def stream_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch-side, exactly like the model. Oracle = the batch operator's
     SQL: scoring is per-row and the mean is computed over the same
     complete corpus, so streamed and batched answers are identical."""
-    from bigdata_spark_realtime_spark.plans.streaming_queries import (
-        _docs_stream,
-        _drain_to_memory,
-    )
-
     ratio = train_dsir(spark, sf_dir)
     bc = spark.sparkContext.broadcast(ratio)
     scored = (
-        _docs_stream(spark, sf_dir)
+        replay_table(spark, sf_dir, "documents")
         .select("doc_id", "text")
         .mapInPandas(make_score_kernel(bc), SCORE_SCHEMA)
     )
-    return keep_by_corpus_mean(_drain_to_memory(scored, spark))
+    return keep_by_corpus_mean(drain_to_memory(scored))

@@ -44,6 +44,7 @@ from pyspark.sql import functions as F
 
 from bigdata_spark_realtime_spark import cache
 from bigdata_spark_realtime_spark.plans.registry import register
+from bigdata_spark_realtime_spark.sources.replay import drain_to_memory, replay_table
 from bigdata_spark_realtime_spark.sources.tables import load_table
 
 #: fixed-point scale for centroid arithmetic (20 fractional bits:
@@ -387,18 +388,13 @@ def stream_embed_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     would let the quantization of old vectors drift. Oracle = the
     batch operator's SQL: the quantize is per-row and the scales come
     from the same complete corpus, so streamed == batched exactly."""
-    from bigdata_spark_realtime_spark.plans.streaming_queries import (
-        _drain_to_memory,
-        _embeddings_stream,
-    )
-
     scales = fit_scales(spark, sf_dir)
     dims = (
-        _embeddings_stream(spark, sf_dir)
+        replay_table(spark, sf_dir, "embeddings")
         .where(F.col("embedding").isNotNull())
         .select("vec_id", F.posexplode("embedding").alias("dim", "v"))
     )
-    return _drain_to_memory(quantize_components(dims, scales), spark)
+    return drain_to_memory(quantize_components(dims, scales))
 
 
 @register("stream_embed_centroids", oracle=CENTROIDS_ORACLE)
@@ -415,13 +411,8 @@ def stream_embed_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     the batch operator's oracle exactly. State is L x 64 rows
     (dimension-bounded), never corpus-sized; the truncating-DIV mean
     is taken on the drained frame, outside the incremental state."""
-    from bigdata_spark_realtime_spark.plans.streaming_queries import (
-        _drain_to_memory,
-        _embeddings_stream,
-    )
-
     vq = (
-        _embeddings_stream(spark, sf_dir)
+        replay_table(spark, sf_dir, "embeddings")
         .where(F.col("embedding").isNotNull())
         .select("label", F.posexplode("embedding").alias("dim", "v"))
         .select(
@@ -438,7 +429,7 @@ def stream_embed_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("vq").alias("sum_q"),
         F.count(F.lit(1)).alias("n_vectors"),
     )
-    drained = _drain_to_memory(state, spark, output_mode="complete")
+    drained = drain_to_memory(state, output_mode="complete")
     return drained.select(
         "label",
         F.col("dim").cast("int").alias("dim"),

@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 
 from bigdata_spark_realtime_spark.functions import hashing as H
 from bigdata_spark_realtime_spark.plans.registry import register
+from bigdata_spark_realtime_spark.sources.replay import drain_to_memory, replay_table
 from bigdata_spark_realtime_spark.sources.tables import load_table
 
 #: funnel completion window (microseconds): 7 days
@@ -441,16 +442,11 @@ def stream_funnel_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ordered 3-step funnel (7-day completion window) as continuous
     intake: stateless in-stream filter+projection, staged
     conditional-min aggregation on the drained step events."""
-    from bigdata_spark_realtime_spark.plans.streaming_queries import (
-        _drain_to_memory,
-        _events_stream,
-    )
-
-    ev_stream = _events_stream(spark, sf_dir)
+    ev_stream = replay_table(spark, sf_dir, "events")
     proj = ev_stream.where(
         F.col("event_type").isin("signup", "click", "purchase")
     ).select("user_id", "event_type", F.unix_micros("event_time").alias("us"))
-    ev = _drain_to_memory(proj, spark)
+    ev = drain_to_memory(proj)
 
     # Join-free staging (the batch plan's per-stage joins would self-join
     # the memory-sink View, which defeats Spark's self-join attribute

@@ -27,7 +27,7 @@ from bigdata_spark_realtime_spark.operators.multimodal import (
     extract_media_meta,
 )
 from bigdata_spark_realtime_spark.plans.registry import register
-from bigdata_spark_realtime_spark.sources.replay import file_replay_stream
+from bigdata_spark_realtime_spark.sources.replay import drain_to_memory, replay_table
 from bigdata_spark_realtime_spark.sources.tables import load_table
 
 #: versioned fixture root shared by the decode query and its oracle;
@@ -435,15 +435,6 @@ def ext_multimodal_scene_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("media_id", F.col("frame_idx").cast("int").alias("cut_frame"))
 
 
-def _media_video_stream(spark: SparkSession) -> DataFrame:
-    """Replay the MJV clip table as a file-source stream
-    (layout-robust: sources/replay.py handles both the single-file
-    fixture layout and a Spark-written directory table)."""
-    return file_replay_stream(
-        spark, os.path.join(ensure_media_fixtures(), "media_video.parquet")
-    )
-
-
 @register("stream_scene_cuts", oracle=SCENE_CUTS_ORACLE)
 def stream_scene_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scene-cut detection as continuous intake — the live video
@@ -466,12 +457,9 @@ def stream_scene_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bigdata_spark_realtime_spark.operators.multimodal import (
         video_frame_stats,
     )
-    from bigdata_spark_realtime_spark.plans.streaming_queries import (
-        _drain_to_memory,
-    )
 
-    media = _media_video_stream(spark)
-    st = _drain_to_memory(video_frame_stats(media), spark)
+    media = replay_table(spark, ensure_media_fixtures(), "media_video")
+    st = drain_to_memory(video_frame_stats(media))
     w = Window.partitionBy("media_id").orderBy("frame_idx")
     lagd = st.select(
         "media_id",

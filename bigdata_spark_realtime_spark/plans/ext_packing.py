@@ -21,14 +21,12 @@ the order key and the arithmetic are exact integers.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from bigdata_spark_realtime_spark.functions import hashing as H
 from bigdata_spark_realtime_spark.plans.registry import register
-from bigdata_spark_realtime_spark.sources.replay import file_replay_stream
+from bigdata_spark_realtime_spark.sources.replay import drain_to_memory, replay_table
 from bigdata_spark_realtime_spark.sources.tables import load_table
 
 #: shards = independent packing streams (1024+ at corpus scale; 16 keeps
@@ -102,19 +100,12 @@ def stream_pack_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     independent window partition — the same one-shuffle plan as the
     batch operator, with arrival-time shard assignment amortized into
     ingest."""
-    from bigdata_spark_realtime_spark.plans.streaming_queries import (
-        _drain_to_memory,
-    )
-
-    docs = file_replay_stream(
-        spark, os.path.join(sf_dir, "documents.parquet")
-    )
+    docs = replay_table(spark, sf_dir, "documents")
     h = H.h32(F.col("doc_id").cast("string"))
-    sharded = _drain_to_memory(
+    sharded = drain_to_memory(
         docs.select(
             "doc_id", "n_chars", h.alias("h"), (h % N_SHARDS).alias("shard")
-        ),
-        spark,
+        )
     )
     win = (
         Window.partitionBy("shard")

@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 from bigdata_spark_realtime_spark.functions import hashing as H
 from bigdata_spark_realtime_spark.plans.registry import register
 from bigdata_spark_realtime_spark.plans.sessionize import SESSION_GAP_MIN
+from bigdata_spark_realtime_spark.sources.replay import drain_to_memory, replay_table
 from bigdata_spark_realtime_spark.sources.tables import load_table
 
 _GAP_MS = SESSION_GAP_MIN * 60 * 1000
@@ -259,18 +260,13 @@ def stream_ab_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch per-user aggregate materializes); arm assignment and the
     per-arm counts run on the drained frame exactly like the batch
     operator. Oracle = the batch SQL."""
-    from bigdata_spark_realtime_spark.plans.streaming_queries import (
-        _drain_to_memory,
-        _events_stream,
-    )
-
-    ev = _events_stream(spark, sf_dir)
+    ev = replay_table(spark, sf_dir, "events")
     state = ev.groupBy("user_id").agg(
         F.max(
             F.when(F.col("event_type") == "purchase", 1).otherwise(0)
         ).alias("converted")
     )
-    per_user = _drain_to_memory(state, spark, output_mode="complete").select(
+    per_user = drain_to_memory(state, output_mode="complete").select(
         (H.h32(F.concat(F.col("user_id").cast("string"), F.lit("|ab"))) % 2)
         .alias("arm"),
         F.col("converted").cast("bigint").alias("converted"),

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bigdata_spark_realtime_spark.plans.registry import register
+from bigdata_spark_realtime_spark.sources.replay import drain_to_memory, replay_table
 from bigdata_spark_realtime_spark.sources.tables import load_table
 
 ROLLUP_ORACLE = """
@@ -71,14 +72,9 @@ def stream_rollup_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     touching raw events again. Hour-count-bounded state forever;
     oracle = the batch operator's SQL (which itself goes straight to
     raw — the stream must reproduce the lossless cascade)."""
-    from bigdata_spark_realtime_spark.plans.streaming_queries import (
-        _drain_to_memory,
-        _events_stream,
-    )
-
-    # event_time is the helper's vintage-normalized TimestampType
+    # event_time is replay_table's vintage-normalized TimestampType
     # column (raw `ts` may be int64 nanos in some testdata vintages)
-    ev = _events_stream(spark, sf_dir).select(
+    ev = replay_table(spark, sf_dir, "events").select(
         F.date_format(
             F.date_trunc("hour", "event_time"), "yyyy-MM-dd HH"
         ).alias("hour"),
@@ -92,7 +88,7 @@ def stream_rollup_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("ct"),
         F.sum("cents").alias("value_cents"),
     )
-    drained = _drain_to_memory(hourly, spark, output_mode="complete")
+    drained = drain_to_memory(hourly, output_mode="complete")
     return drained.groupBy("day", "event_type").agg(
         F.sum("ct").alias("ct"),
         F.sum("value_cents").alias("value_cents"),

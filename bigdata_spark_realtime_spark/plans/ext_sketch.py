@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 
 from bigdata_spark_realtime_spark.functions import hashing as H
 from bigdata_spark_realtime_spark.plans.registry import register
+from bigdata_spark_realtime_spark.sources.replay import drain_to_memory, replay_table
 from bigdata_spark_realtime_spark.sources.tables import load_table
 
 #: registers (m); 8-bit bucket index
@@ -543,12 +544,7 @@ def stream_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     (~hundreds of rows per group), never value-count-bounded; the
     p50/p95/p99 read stays a driver-side walk over the drained frame
     (`qsketch_quantile`)."""
-    from bigdata_spark_realtime_spark.plans.streaming_queries import (
-        _drain_to_memory,
-        _events_stream,
-    )
-
-    ev = _events_stream(spark, sf_dir).where(F.col("value") > 0)
+    ev = replay_table(spark, sf_dir, "events").where(F.col("value") > 0)
     cents = ev.select(
         "event_type",
         F.floor(F.col("value") * 100).cast("bigint").alias("v100"),
@@ -567,4 +563,4 @@ def stream_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     state = keyed.groupBy("event_type", "bkt").agg(
         F.count(F.lit(1)).alias("ct")
     )
-    return _drain_to_memory(state, spark, output_mode="complete")
+    return drain_to_memory(state, output_mode="complete")

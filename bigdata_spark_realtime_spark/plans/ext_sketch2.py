@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 
 from bigdata_spark_realtime_spark.functions import hashing as H
 from bigdata_spark_realtime_spark.plans.registry import register
+from bigdata_spark_realtime_spark.sources.replay import drain_to_memory, replay_table
 from bigdata_spark_realtime_spark.sources.tables import load_table
 
 #: CMS geometry (independent of ext_sketch's token CMS)
@@ -131,22 +132,17 @@ def stream_selfjoin_size(spark: SparkSession, sf_dir: str) -> DataFrame:
     complete-mode counts (associative; register-/user-bounded state),
     then the estimate and exact projections run on the drained frames
     exactly like the batch operator. Oracle = the batch SQL."""
-    from bigdata_spark_realtime_spark.plans.streaming_queries import (
-        _drain_to_memory,
-        _events_stream,
-    )
-
-    ev = _events_stream(spark, sf_dir)
+    ev = replay_table(spark, sf_dir, "events")
     cms_state = _f2_rows(ev).groupBy("event_type", "d", "w").agg(
         F.count(F.lit(1)).alias("c")
     )
     freq_state = ev.groupBy("event_type", "user_id").agg(
         F.count(F.lit(1)).alias("f")
     )
-    cms = _drain_to_memory(cms_state, spark, output_mode="complete").select(
+    cms = drain_to_memory(cms_state, output_mode="complete").select(
         "event_type", "d", "w", F.col("c").cast("bigint").alias("c")
     )
-    freq = _drain_to_memory(freq_state, spark, output_mode="complete").select(
+    freq = drain_to_memory(freq_state, output_mode="complete").select(
         "event_type", F.col("f").cast("bigint").alias("f")
     )
     est = _f2_estimate(cms)

@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from bigdata_spark_realtime_spark.plans.registry import register
+from bigdata_spark_realtime_spark.sources.replay import drain_to_memory, replay_table
 from bigdata_spark_realtime_spark.sources.tables import load_table
 
 #: slope quantization: basis points of avg-cents-per-day
@@ -284,13 +285,8 @@ def stream_trend_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     — #types × #days rows), then the x-rebase and regression sums run
     on the drained partials exactly like the batch operator. Oracle =
     the batch SQL."""
-    from bigdata_spark_realtime_spark.plans.streaming_queries import (
-        _drain_to_memory,
-        _events_stream,
-    )
-
     daily_state = (
-        _events_stream(spark, sf_dir)
+        replay_table(spark, sf_dir, "events")
         .groupBy(
             "event_type", F.date_trunc("day", "event_time").alias("day")
         )
@@ -299,7 +295,7 @@ def stream_trend_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.floor(F.col("value") * 100).cast("bigint")).alias("v"),
         )
     )
-    daily = _drain_to_memory(daily_state, spark, output_mode="complete").select(
+    daily = drain_to_memory(daily_state, output_mode="complete").select(
         "event_type",
         "day",
         F.col("c").cast("bigint").alias("c"),
@@ -383,19 +379,14 @@ def stream_timeseries_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     calendar-bounded state), then the sequence-explode grid and the
     LOCF window run on the drained partials exactly like the batch
     operator. Oracle = the batch SQL."""
-    from bigdata_spark_realtime_spark.plans.streaming_queries import (
-        _drain_to_memory,
-        _events_stream,
-    )
-
-    ev = _events_stream(spark, sf_dir)
+    ev = replay_table(spark, sf_dir, "events")
     state = ev.groupBy(
         "event_type", F.date_trunc("hour", "event_time").alias("h")
     ).agg(
         F.count(F.lit(1)).alias("cnt"),
         F.sum(F.floor(F.col("value") * 100).cast("bigint")).alias("v100"),
     )
-    hourly = _drain_to_memory(state, spark, output_mode="complete").select(
+    hourly = drain_to_memory(state, output_mode="complete").select(
         "event_type",
         "h",
         F.col("cnt").cast("bigint").alias("cnt"),

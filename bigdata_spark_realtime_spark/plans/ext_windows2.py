@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from bigdata_spark_realtime_spark.plans.registry import register
 from bigdata_spark_realtime_spark.plans.sessionize import SESSION_GAP_MIN
+from bigdata_spark_realtime_spark.sources.replay import drain_to_memory, replay_table
 from bigdata_spark_realtime_spark.sources.tables import load_table
 
 PPM = 1_000_000
@@ -285,12 +286,7 @@ def stream_trending_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     (associative; state bounded by items × hours), then the lag + rank
     projection runs on the drained partials exactly like the batch
     operator. Oracle = the batch SQL."""
-    from bigdata_spark_realtime_spark.plans.streaming_queries import (
-        _drain_to_memory,
-        _events_stream,
-    )
-
-    ev = _events_stream(spark, sf_dir)
+    ev = replay_table(spark, sf_dir, "events")
     state = (
         ev.where(
             F.col("event_type").isin("click", "view", "purchase")
@@ -301,7 +297,7 @@ def stream_trending_items(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("item", "h")
         .agg(F.count(F.lit(1)).alias("c"))
     )
-    ih = _drain_to_memory(state, spark, output_mode="complete").select(
+    ih = drain_to_memory(state, output_mode="complete").select(
         "item", "h", F.col("c").cast("bigint").alias("c")
     )
     return _trending_from_partials(ih)

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bigdata_spark_realtime_spark.plans.registry import register
+from bigdata_spark_realtime_spark.sources.replay import drain_to_memory, replay_table
 from bigdata_spark_realtime_spark.sources.tables import load_table
 
 #: bits per coordinate (zkey is 2×ZBITS wide)
@@ -92,12 +93,7 @@ def stream_zorder_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the stream, and count/min/max per bucket are associative, so
     the census accumulates as one complete-mode aggregation with
     1024-row state. Oracle = the batch SQL."""
-    from bigdata_spark_realtime_spark.plans.streaming_queries import (
-        _drain_to_memory,
-        _events_stream,
-    )
-
-    ev = _events_stream(spark, sf_dir)
+    ev = replay_table(spark, sf_dir, "events")
     keyed = ev.select(
         F.expr(f"user_id % {1 << ZBITS}").alias("x"),
         F.expr(
@@ -111,7 +107,7 @@ def stream_zorder_census(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("zkey").alias("z_min"),
         F.max("zkey").alias("z_max"),
     )
-    return _drain_to_memory(state, spark, output_mode="complete").select(
+    return drain_to_memory(state, output_mode="complete").select(
         "zbucket",
         F.col("n_events").cast("bigint").alias("n_events"),
         F.col("z_min").cast("bigint").alias("z_min"),

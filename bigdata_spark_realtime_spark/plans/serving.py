@@ -11,7 +11,6 @@ star schema: `events` plays the page-log/dau stream (user_id = mid),
 from __future__ import annotations
 
 import datetime
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -26,6 +25,7 @@ from bigdata_spark_realtime_spark.plans.corpus import (
 )
 from bigdata_spark_realtime_spark.plans.hints import broadcast_bounded
 from bigdata_spark_realtime_spark.plans.registry import register
+from bigdata_spark_realtime_spark.sources.replay import drain_to_memory, replay_table
 from bigdata_spark_realtime_spark.sources.tables import load_table
 
 TD = "2024-01-06"
@@ -264,11 +264,9 @@ def _wide_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """lineitem replayed as a file-source stream, enriched in-stream
     with the three static dims (same join graph as ``_wide``,
     stream-static instead of batch-batch)."""
-    from bigdata_spark_realtime_spark.sources.replay import file_replay_stream
-
-    li = file_replay_stream(
-        spark, os.path.join(sf_dir, "lineitem.parquet")
-    ).select("l_orderkey", "l_partkey", "l_extendedprice", "l_discount")
+    li = replay_table(spark, sf_dir, "lineitem").select(
+        "l_orderkey", "l_partkey", "l_extendedprice", "l_discount"
+    )
     p = (
         load_table(spark, sf_dir, "part")
         .where(fns.match_all_tokens(F.col("p_name"), ITEM))
@@ -301,14 +299,10 @@ def stream_stats_by_item_age(spark: SparkSession, sf_dir: str) -> DataFrame:
     """statsByItem?t=age as continuous intake: stream-static dim
     enrichment, running per-user_age sum in the state store, A5
     re-bucket on the drained frame."""
-    from bigdata_spark_realtime_spark.plans.streaming_queries import (
-        _drain_to_memory,
-    )
-
     inner = _wide_stream(spark, sf_dir).groupBy("user_age").agg(
         F.sum("split_total_amount").alias("amount")
     )
-    drained = _drain_to_memory(inner, spark, output_mode="complete")
+    drained = drain_to_memory(inner, output_mode="complete")
     return drained.groupBy(
         fns.age_bucket(F.col("user_age")).alias("name")
     ).agg(F.round(F.sum("amount"), 2).alias("value"))
@@ -320,14 +314,10 @@ def stream_stats_by_item_gender(
 ) -> DataFrame:
     """statsByItem?t=gender as continuous intake: same intake chain,
     running per-gender sum, A6 decode on the drained frame."""
-    from bigdata_spark_realtime_spark.plans.streaming_queries import (
-        _drain_to_memory,
-    )
-
     inner = _wide_stream(spark, sf_dir).groupBy("user_gender").agg(
         F.sum("split_total_amount").alias("amount")
     )
-    drained = _drain_to_memory(inner, spark, output_mode="complete")
+    drained = drain_to_memory(inner, output_mode="complete")
     return drained.groupBy(
         fns.gender_decode(F.col("user_gender")).alias("name")
     ).agg(F.round(F.sum("amount"), 2).alias("value"))

@@ -29,8 +29,7 @@ LIMIT 20 OFFSET 20
 
 @register("l1_pagination_page2", oracle=L1_SQL.format(lineitem="lineitem"))
 def l1_pagination_page2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("v_lineitem")
-    return spark.sql(L1_SQL.format(lineitem="v_lineitem"))
+    return spark.sql(L1_SQL, lineitem=load_table(spark, sf_dir, "lineitem"))
 
 
 # ---------------------------------------------------------------------------
@@ -55,8 +54,7 @@ LIMIT 20
 def l2_page_with_total(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Page + total over the same predicate; the count side is a 1-row
     broadcast cross join, not a second scan of the full table."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("v_orders")
-    return spark.sql(L2_SQL.format(orders="v_orders"))
+    return spark.sql(L2_SQL, orders=load_table(spark, sf_dir, "orders"))
 
 
 # ---------------------------------------------------------------------------
@@ -74,5 +72,4 @@ LIMIT 10000
 
 @register("l4_field_fetch_cap", oracle=L4_SQL.format(events="events"))
 def l4_field_fetch_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("v_events")
-    return spark.sql(L4_SQL.format(events="v_events"))
+    return spark.sql(L4_SQL, events=load_table(spark, sf_dir, "events"))

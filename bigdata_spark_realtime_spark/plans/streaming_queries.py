@@ -2,25 +2,26 @@
 
 Each query here actually executes a Structured Streaming dataflow
 (readStream → stateful op → memory sink, drained synchronously) and
-returns the sink table. `stream_dedup_dau_keys` is oracle-checked: the
-deduped (dt, user) key set is deterministic regardless of intra-batch
-arrival order, so it hash-matches SELECT DISTINCT. The pipeline entries
-over generated Group-2 fixtures are rows-only (their full semantics are
-asserted in tests/test_streaming_pipelines.py with pure-python ground
-truths).
+returns the sink's rows. A table twin reads its input through
+`sources.replay.replay_table`, the stream side of `load_table`; the
+order, raw-log and CDC twins read generated JSON fixtures. Every twin
+drains through `sources.replay.drain_to_memory`, which leaves nothing
+in the session catalog. Each twin is oracle-checked: its result does
+not depend on micro-batch arrival order, so it hash-matches the batch
+SQL (`stream_dedup_dau_keys`, for one, matches SELECT DISTINCT).
 """
 
 from __future__ import annotations
 
 import os
 import tempfile
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bigdata_spark_realtime_spark.functions import scalar as fns
 from bigdata_spark_realtime_spark.plans.registry import register
+from bigdata_spark_realtime_spark.sources.replay import drain_to_memory, replay_table
 from bigdata_spark_realtime_spark.streaming.dau import DEDUP_WATERMARK
 
 #: deterministic fixture root shared by the streaming gate queries AND
@@ -70,61 +71,6 @@ _ORDER_DETAIL_COLS = (
 _TTL_MS = 24 * 3600_000
 
 
-def _drain_to_memory(
-    df: DataFrame, spark: SparkSession, output_mode: str = "append"
-) -> DataFrame:
-    """Run ``df`` to the end of its input into a memory table and return
-    that table. A drain replays whole tables, mostly in one micro-batch,
-    so its work is batch-sized: its fresh checkpoint starts at the batch
-    shuffle width (``initialPartitionNum``), not at the small-stream
-    default of 1 that ``session.get_spark`` sets. A stream reads the
-    setting once, when ``start()`` clones the session, so it is set
-    around that call only."""
-    name = f"q_{uuid.uuid4().hex[:10]}"
-    conf, key = df.sparkSession.conf, "spark.sql.shuffle.partitions"
-    stream_width = conf.get(key)
-    batch_width = conf.get(
-        "spark.sql.adaptive.coalescePartitions.initialPartitionNum", stream_width
-    )
-    conf.set(key, batch_width)
-    try:
-        q = (
-            df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .start()
-        )
-    finally:
-        conf.set(key, stream_width)
-    q.processAllAvailable()
-    q.stop()
-    return spark.table(name)
-
-
-def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Replay the driver's events table as a file-source stream with an
-    added ``event_time`` TimestampType column normalized from whatever
-    physical ``ts`` type this testdata vintage has (timestamp[us],
-    TIMESTAMP(NANOS), or raw int64 nanos — see
-    :func:`sources.tables.events_ts_kind`). Replay goes through the
-    layout-robust :func:`sources.replay.file_replay_stream` — a
-    Spark-WRITTEN events table is a directory of part files, and the
-    old single-symlink device yielded a silently EMPTY stream on it."""
-    from bigdata_spark_realtime_spark.sources.replay import file_replay_stream
-    from bigdata_spark_realtime_spark.sources.tables import (
-        events_ts_kind,
-        ts_to_timestamp_expr,
-    )
-
-    path = os.path.abspath(os.path.join(sf_dir, "events.parquet"))
-    kind = events_ts_kind(path)
-    if kind == "nanos":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    return file_replay_stream(spark, path).withColumn(
-        "event_time", ts_to_timestamp_expr(kind)
-    )
-
-
 #: the streaming tumbling-window agg is batch-equivalent once every real
 #: window is past the watermark (the sentinel file guarantees that), so
 #: the batch time_bucket aggregation is a full oracle
@@ -138,117 +84,27 @@ GROUP BY 1, 2
 """
 
 
+#: the flush row's non-``ts`` values; ``event_type`` marks it for removal
+_FLUSH_EVENT = {
+    "event_id": -1,
+    "user_id": -1,
+    "event_type": "__flush",
+    "value": 0.0,
+    "props": "{}",
+}
+
+
 @register("stream_windowed_counts", oracle=STREAM_WINDOW_ORACLE)
 def stream_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W1/W6 as a real streaming op: the events replay aggregated into
     6-hour event-time tumbling windows behind a 1-hour watermark,
     append-mode — exactly the batch w6 expression running as a stream.
-    A far-future sentinel file (its own micro-batch, maxFilesPerTrigger)
-    pushes the watermark past every real window so append mode emits
-    them all; sentinel rows are excluded from the returned frame and
-    their own window never finalizes."""
-    from datetime import datetime, timedelta, timezone
-
-    import pyarrow as pa
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
-    from bigdata_spark_realtime_spark.sources.replay import (
-        first_data_file,
-        link_data_files,
-        table_stamp,
-    )
-    from bigdata_spark_realtime_spark.sources.tables import (
-        events_ts_kind,
-        ts_to_timestamp_expr,
-    )
-
-    src = os.path.abspath(os.path.join(sf_dir, "events.parquet"))
-    kind = events_ts_kind(src)
-    if kind == "nanos":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(src).schema
-    # key the fixture dir by source identity AND a content stamp of the
-    # WHOLE data-file set: the sentinel's ts depends on the data's max
-    # ts, so a regenerated OR appended dataset must get a fresh
-    # sentinel, not a stale one that would leave real windows below the
-    # watermark (an append to a directory table adds part files without
-    # touching the first one — stamping only the first file reused the
-    # old sentinel and the +10y watermark dropped every appended row)
-    stream_dir = os.path.join(
-        tempfile.gettempdir(), f"bsr_events_flush_{table_stamp(src)}"
-    )
-    os.makedirs(stream_dir, exist_ok=True)
-    # the a_ prefix keeps every data file lexicographically before the
-    # zz_ sentinel, so the sentinel's micro-batch arrives last
-    link_data_files(src, stream_dir, prefix="a_")
-    sentinel = os.path.join(stream_dir, "zz_flush.parquet")
-    if not os.path.exists(sentinel):
-        # the sentinel must carry the SAME physical schema as the source
-        # file (the file-stream source reads both under one schema), so
-        # build it from the source footer: max(ts)+10y in ts's own type
-        src_schema = pq.read_schema(first_data_file(src))
-        max_ts = pc.max(pq.read_table(src, columns=["ts"])["ts"]).as_py()
-        int_vintage = pa.types.is_integer(src_schema.field("ts").type)
-        if max_ts is None:
-            # ZERO-ROW source (empty-input sweep): no real window needs
-            # flushing — any valid sentinel ts works; pin a fixed one.
-            # A timestamp sentinel inherits the column's own tz (the
-            # non-empty path gets this for free from max(ts)); a naive
-            # constant would mis-zone against a tz-aware vintage.
-            if int_vintage:
-                max_ts = 0
-            else:
-                col_tz = getattr(src_schema.field("ts").type, "tz", None)
-                if not col_tz:
-                    tzinfo = None
-                elif col_tz[0] in "+-":  # pyarrow offset form "+05:30"
-                    hh, mm = col_tz[1:].split(":")
-                    sign = 1 if col_tz[0] == "+" else -1
-                    tzinfo = timezone(
-                        sign * timedelta(hours=int(hh), minutes=int(mm))
-                    )
-                elif col_tz.upper() == "UTC":
-                    tzinfo = timezone.utc
-                else:
-                    from zoneinfo import ZoneInfo
-
-                    tzinfo = ZoneInfo(col_tz)
-                max_ts = datetime(1970, 1, 1, tzinfo=tzinfo)
-        if isinstance(max_ts, int):  # raw int64 epoch-nanos vintage
-            flush = max_ts + 3650 * 86400 * 1_000_000_000
-        else:  # any timestamp unit — pyarrow hands back a datetime
-            flush = max_ts + timedelta(days=3650)
-        fill = {
-            "event_id": [-1],
-            "ts": [flush],
-            "user_id": [-1],
-            "event_type": ["__flush"],
-            "value": [0.0],
-            "props": ["{}"],
-        }
-        cols = [
-            pa.array(fill[f.name], f.type)
-            if f.name in fill
-            else pa.nulls(1, f.type)
-            for f in src_schema
-        ]
-        pq.write_table(
-            pa.Table.from_arrays(cols, schema=src_schema), sentinel
-        )
-    # Every data file must land in ONE micro-batch, with only the
-    # sentinel in the next: with maxFilesPerTrigger=1 and a multi-file
-    # (Spark-written) table, the watermark advances between data files
-    # and rows later than watermark-delay behind the max seen so far are
-    # silently DROPPED by the streaming agg (measured: 386/477 windows
-    # on a 3-part replica). The file source orders by modification time,
-    # so the freshly-written sentinel always sorts after the linked data.
-    n_data = sum(1 for f in os.listdir(stream_dir) if f.startswith("a_"))
+    The replay's far-future flush row arrives alone in the last
+    micro-batch and pushes the watermark past every real window so
+    append mode emits them all; its own window never finalizes, and it
+    is excluded from the returned frame."""
     stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max(n_data, 1))
-        .parquet(stream_dir)
-        .withColumn("event_time", ts_to_timestamp_expr(kind))
+        replay_table(spark, sf_dir, "events", flush=_FLUSH_EVENT)
         .withWatermark("event_time", "1 hour")
         .groupBy(F.window("event_time", "6 hours").alias("w"), "event_type")
         .agg(
@@ -262,7 +118,7 @@ def stream_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_value",
         )
     )
-    return _drain_to_memory(stream, spark).where(F.col("event_type") != "__flush")
+    return drain_to_memory(stream).where(F.col("event_type") != "__flush")
 
 
 STREAM_DEDUP_ORACLE = f"""
@@ -276,14 +132,14 @@ def stream_dedup_dau_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     dropDuplicatesWithinWatermark keyed by (event-date, user) — the
     DAU dedup state machine — then projected to its deterministic key
     set."""
-    stream = _events_stream(spark, sf_dir)
+    stream = replay_table(spark, sf_dir, "events")
     deduped = (
         stream.withColumn("dt", fns.dt_col("event_time"))
         .withWatermark("event_time", DEDUP_WATERMARK)
         .dropDuplicatesWithinWatermark(["dt", "user_id"])
         .select("dt", "user_id")
     )
-    return _drain_to_memory(deduped, spark)
+    return drain_to_memory(deduped)
 
 
 
@@ -334,11 +190,11 @@ def stream_sessionize_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
     sessions; the timeout-flush path is exercised in tests."""
     from bigdata_spark_realtime_spark.streaming.sessionize import sessionize_stream
 
-    stream = _events_stream(spark, sf_dir)
+    stream = replay_table(spark, sf_dir, "events")
     # watermark >> fixture span: timeout flushes suppressed for a
     # deterministic, oracle-checkable emitted set
     sessions = sessionize_stream(stream, watermark="3650 days")
-    return _drain_to_memory(sessions, spark)
+    return drain_to_memory(sessions)
 
 
 def _stream_sample_oracle() -> str:
@@ -375,35 +231,13 @@ def stream_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         _sample_bucket,
     )
 
-    stream = _docs_stream(spark, sf_dir)
+    stream = replay_table(spark, sf_dir, "documents")
     bucket = _sample_bucket(F.col("doc_id"), F.col("lang"))
     rate = F.lit(DEFAULT_RATE)
     for k, v in STRATA_RATES.items():
         rate = F.when(F.col("lang") == k, F.lit(v)).otherwise(rate)
     sampled = stream.where(bucket < rate).select("doc_id", "lang", "source")
-    return _drain_to_memory(sampled, spark)
-
-
-def _docs_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Replay the documents table as a file-source stream via the
-    layout-robust :func:`sources.replay.file_replay_stream` (handles
-    both the single-file driver testdata and Spark-written directory
-    tables)."""
-    from bigdata_spark_realtime_spark.sources.replay import file_replay_stream
-
-    return file_replay_stream(
-        spark, os.path.join(sf_dir, "documents.parquet")
-    )
-
-
-def _embeddings_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Replay the embeddings table as a file-source stream (same
-    layout-robust device as :func:`_docs_stream`)."""
-    from bigdata_spark_realtime_spark.sources.replay import file_replay_stream
-
-    return file_replay_stream(
-        spark, os.path.join(sf_dir, "embeddings.parquet")
-    )
+    return drain_to_memory(sampled)
 
 
 def _stream_decontam_oracle() -> str:
@@ -434,12 +268,14 @@ def stream_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("source") == EVAL_SOURCE
     )
     ev_shingles = shingle_rows(ev, CONTAM_W).select("shingle").distinct()
-    corpus = _docs_stream(spark, sf_dir).where(F.col("source") != EVAL_SOURCE)
+    corpus = replay_table(spark, sf_dir, "documents").where(
+        F.col("source") != EVAL_SOURCE
+    )
     hits = shingle_rows(corpus, CONTAM_W).join(
         F.broadcast(ev_shingles), "shingle"
     )
     counts = hits.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_hits"))
-    return _drain_to_memory(counts, spark, output_mode="complete")
+    return drain_to_memory(counts, output_mode="complete")
 
 
 def _stream_minhash_oracle() -> str:
@@ -477,7 +313,7 @@ def stream_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, "documents"),
         min_parallelism=spark.sparkContext.defaultParallelism,
     )
-    arriving = minhash_band_keys(_docs_stream(spark, sf_dir))
+    arriving = minhash_band_keys(replay_table(spark, sf_dir, "documents"))
     cand = (
         arriving.alias("a")
         .join(corpus.alias("b"), ["band", "k1", "k2"])
@@ -489,7 +325,7 @@ def stream_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # DISTINCT across bands and micro-batches: complete-mode aggregation
     pairs = cand.groupBy("doc_a", "doc_b").agg(F.count(F.lit(1)).alias("n"))
-    return _drain_to_memory(pairs, spark, output_mode="complete").select(
+    return drain_to_memory(pairs, output_mode="complete").select(
         "doc_a", "doc_b"
     )
 
@@ -532,7 +368,7 @@ def stream_lm_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     uni = big.groupBy("w1").agg(F.sum("c12").alias("c1"))
     n_vocab = uni.count()  # vocabulary size: a bounded model constant
 
-    pairs = token_pair_rows(_docs_stream(spark, sf_dir))
+    pairs = token_pair_rows(replay_table(spark, sf_dir, "documents"))
     surprise = F.expr(
         f"(COALESCE(c1, 0) + {n_vocab}) * {SCALE} DIV (COALESCE(c12, 0) + 1)"
     )
@@ -545,7 +381,7 @@ def stream_lm_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_bigrams"),
         F.sum("surprise").alias("total"),
     )
-    final = _drain_to_memory(agg, spark, output_mode="complete")
+    final = drain_to_memory(agg, output_mode="complete")
     bucket = (
         F.when(F.col("lm_score") < HEAD_MAX, "head")
         .when(F.col("lm_score") < MIDDLE_MAX, "middle")
@@ -581,7 +417,7 @@ def stream_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bigdata_spark_realtime_spark.plans.ext_sketch import M, S
     from bigdata_spark_realtime_spark.sources.tables import load_table
 
-    ev = _events_stream(spark, sf_dir)
+    ev = replay_table(spark, sf_dir, "events")
     hv = H.h32(F.col("user_id").cast("string"))
     w = F.expr(f"hv DIV {M}")
     rank = F.when(w == 0, 25).otherwise(25 - F.length(F.bin(w)))
@@ -591,7 +427,7 @@ def stream_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     regs_stream = ranked.groupBy("event_type", "bucket").agg(
         F.max("rank").alias("reg")
     )
-    regs = _drain_to_memory(regs_stream, spark, output_mode="complete")
+    regs = drain_to_memory(regs_stream, output_mode="complete")
     st = regs.groupBy("event_type").agg(
         F.sum(F.expr(f"shiftleft(CAST(1 AS BIGINT), {S} - reg)")).alias(
             "sum_present"
@@ -637,7 +473,7 @@ def stream_cms_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from bigdata_spark_realtime_spark.sources.tables import load_table
 
-    tok = _docs_stream(spark, sf_dir).select(
+    tok = replay_table(spark, sf_dir, "documents").select(
         F.explode(F.split("text", " ", -1)).alias("token")
     )
     rows = None
@@ -646,7 +482,7 @@ def stream_cms_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
         part = tok.select(F.lit(d).alias("d"), bucket.alias("w"))
         rows = part if rows is None else rows.unionByName(part)
     cells_stream = rows.groupBy("d", "w").agg(F.count(F.lit(1)).alias("c"))
-    cms = _drain_to_memory(cells_stream, spark, output_mode="complete")
+    cms = drain_to_memory(cells_stream, output_mode="complete")
 
     probes = spark.createDataFrame([(t,) for t in CMS_PROBES], "token string")
     probe_cells = None
@@ -703,7 +539,7 @@ def stream_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     matrix runs on user-cardinality rows. Any micro-batch arrival
     order yields the same distinct set, so the result hash-matches the
     batch oracle."""
-    ev = _events_stream(spark, sf_dir)
+    ev = replay_table(spark, sf_dir, "events")
     days = ev.select(
         "user_id",
         F.to_date(F.date_trunc("day", "event_time")).alias("day"),
@@ -711,8 +547,8 @@ def stream_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct_state = days.groupBy("user_id", "day").agg(
         F.count(F.lit(1)).alias("_seen")
     )
-    drained = _drain_to_memory(
-        distinct_state, spark, output_mode="complete"
+    drained = drain_to_memory(
+        distinct_state, output_mode="complete"
     ).select("user_id", "day")
     # rename the grouping key: both sides descend from the same drained
     # memory-sink frame, and Spark rejects the ambiguous self-join on a
@@ -756,7 +592,7 @@ def stream_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     state any last-write-wins view needs (same as the reference's
     Redis DAU state, SURVEY §2.5), merged not appended; the historical
     snapshot enters once as a batch side. Oracle = the batch SQL."""
-    ev = _events_stream(spark, sf_dir).select(
+    ev = replay_table(spark, sf_dir, "events").select(
         "user_id",
         F.struct(
             F.unix_micros("event_time").alias("us"),
@@ -766,7 +602,7 @@ def stream_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("st"),
     )
     latest = ev.groupBy("user_id").agg(F.max("st").alias("st"))
-    drained = _drain_to_memory(latest, spark, output_mode="complete")
+    drained = drain_to_memory(latest, output_mode="complete")
     s2 = drained.select(
         "user_id",
         F.col("st.event_type").alias("new_type"),
@@ -838,7 +674,7 @@ def stream_multitouch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame
     from bigdata_spark_realtime_spark.sources.tables import load_table
 
     clicks = (
-        _events_stream(spark, sf_dir)
+        replay_table(spark, sf_dir, "events")
         .where(F.col("event_type") == "click")
         .select(
             F.col("event_id").alias("click_id"),
@@ -848,7 +684,7 @@ def stream_multitouch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame
         .withWatermark("c_time", "1 hour")
     )
     purchases = (
-        _events_stream(spark, sf_dir)
+        replay_table(spark, sf_dir, "events")
         .where(F.col("event_type") == "purchase")
         .select(
             F.col("event_id").alias("purchase_id"),
@@ -863,7 +699,7 @@ def stream_multitouch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame
         & (F.col("p_time") > F.col("c_time"))
         & (F.col("p_time") <= F.col("c_time") + F.expr("INTERVAL 1 HOUR")),
     ).select("click_id", "purchase_id", F.unix_micros("c_time").alias("c_us"))
-    drained = _drain_to_memory(pairs, spark)
+    drained = drain_to_memory(pairs)
     # recency touch cap + linear split, shared with the batch operator
     credit = credit_from_pairs(drained)
     all_clicks = (
@@ -906,11 +742,11 @@ def stream_skew_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle = the batch skew audit SQL."""
     from bigdata_spark_realtime_spark.plans.ext_skewcheck import SKEW_TOP_K
 
-    ev = _events_stream(spark, sf_dir)
+    ev = replay_table(spark, sf_dir, "events")
     counts = ev.groupBy("user_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("cnt")
     )
-    kc = _drain_to_memory(counts, spark, output_mode="complete")
+    kc = drain_to_memory(counts, output_mode="complete")
     tot = kc.agg(F.sum("cnt").cast("bigint").alias("total"))
     return (
         kc.crossJoin(F.broadcast(tot))
@@ -1027,7 +863,7 @@ def stream_order_wide_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     wide = order_wide_join(
         enrich_order_info(info, dim_user, dim_prov), det, streaming=True
     )
-    return _drain_to_memory(wide, spark)
+    return drain_to_memory(wide)
 
 
 #: per-branch row counts of the 1→5 multiplex are a full oracle for the
@@ -1068,7 +904,7 @@ def stream_base_log_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw = spark.readStream.format("text").load(raw_dir)
     branches = split_base_log(raw)
     counts = [
-        _drain_to_memory(df, spark)
+        drain_to_memory(df)
         .agg(F.count(F.lit(1)).alias("n"))
         .select(F.lit(name).alias("branch"), "n")
         for name, df in branches.items()
@@ -1160,7 +996,7 @@ def stream_order_outer_orphans(spark: SparkSession, sf_dir: str) -> DataFrame:
         enrich_order_info(info, dim_user, dim_prov), det,
         streaming=True, how="left_outer",
     )
-    drained = _drain_to_memory(wide, spark)
+    drained = drain_to_memory(wide)
     return (
         drained.where(F.col("detail_id") > 0)
         .where(F.col("order_id").isNull())
@@ -1217,8 +1053,8 @@ def stream_cdc_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
         .load(cdc_dir)
     )
     cdc = parse_cdc(raw)
-    facts = _drain_to_memory(route_facts(cdc), spark)
-    dims = _drain_to_memory(route_dims(cdc), spark)
+    facts = drain_to_memory(route_facts(cdc))
+    dims = drain_to_memory(route_dims(cdc))
     fact_counts = facts.groupBy(F.col("topic").alias("route")).agg(
         F.count(F.lit(1)).alias("n")
     )

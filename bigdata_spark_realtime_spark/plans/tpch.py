@@ -309,22 +309,22 @@ def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     into one aggregate-then-join pass over lineitem — no per-row rescan
     (the naive plan is O(n²) at 100 TB). The brand filter shrinks the
     probe side before the join."""
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("q17_lineitem")
-    load_table(spark, sf_dir, "part").createOrReplaceTempView("q17_part")
     # the genuinely correlated form: Catalyst's DecorrelateInnerQuery
     # rewrites it to aggregate-then-join (verify with .explain — one
     # Aggregate over lineitem, no per-row subquery)
     return spark.sql(
         """
         SELECT round(sum(l.l_extendedprice) / 7.0, 2) AS avg_yearly
-        FROM q17_lineitem l
-        JOIN q17_part p ON p.p_partkey = l.l_partkey
+        FROM {lineitem} l
+        JOIN {part} p ON p.p_partkey = l.l_partkey
         WHERE p.p_brand = 'Brand#13'
           AND l.l_quantity < (
-            SELECT 0.5 * avg(l2.l_quantity) FROM q17_lineitem l2
+            SELECT 0.5 * avg(l2.l_quantity) FROM {lineitem} l2
             WHERE l2.l_partkey = l.l_partkey
           )
-        """
+        """,
+        lineitem=load_table(spark, sf_dir, "lineitem"),
+        part=load_table(spark, sf_dir, "part"),
     )
 
 

@@ -23,11 +23,11 @@ Scale notes (100 TB / 1000 executors):
   whole life; it cannot be raised later without a new checkpoint. So a
   production stream whose state will outgrow one task must set
   `spark.sql.shuffle.partitions` (`extra_conf={...: N}`) before its
-  first start. The registered stream twins drain whole tables, which is
-  batch-sized work, so `plans/streaming_queries._drain_to_memory`
-  starts each of them at the batch width instead (at 1, the
-  `applyInPandasWithState` sessionizer ran 1.7x slower at sf0.1 on a
-  4-core host).
+  first start. The registered stream twins replay whole tables
+  (`sources/replay.replay_table`), which is batch-sized work, so
+  `sources/replay.drain_to_memory` starts each of them at the batch
+  width instead (at 1, the `applyInPandasWithState` sessionizer ran
+  1.7x slower at sf0.1 on a 4-core host).
 - `spark.sql.session.timeZone=UTC` is pinned so date/hour derivations
   (SURVEY.md §2.4 F1-F3) are deterministic and oracle-comparable; the
   reference used JVM-default TZ via SimpleDateFormat

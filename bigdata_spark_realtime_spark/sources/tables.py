@@ -88,7 +88,7 @@ def events_ts_kind(path: str) -> str:
 def ts_to_timestamp_expr(kind: str):
     """The Column expression normalizing a ``ts`` of the given physical
     kind to a session-tz TimestampType — shared by the batch loader and
-    every streaming replay site so all paths agree on event time."""
+    ``sources.replay.replay_table`` so both paths agree on event time."""
     if kind == "timestamp":
         # timestamp[us] arrives as TIMESTAMP_NTZ; cast re-tags it in the
         # session zone (pinned UTC) without changing the wall-clock value

@@ -50,12 +50,20 @@ class _DF:
         return self._pdf
 
 
+def _temp_views(spark) -> set[str]:
+    """The session's temporary views. A persistent table a query
+    registers on purpose (``sources/bucketing``'s bucketed facts,
+    reused by name on the next call) is not one of them."""
+    return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+
 def sweep(spark, sf_dir: str, label: str | None = None) -> list[tuple[str, str]]:
     """Run every registered query (or ``$SPARK_GRAFT_SWEEP_ONLY``) at
     ``sf_dir`` and compare each oracled one with DuckDB over the same
     parquet files. Prints a summary, one ``PROBLEM`` line per
-    SPARK-ERROR / MISMATCH / ORACLE-ERROR and ``ALL EXACT`` when there
-    are none; returns the problems."""
+    SPARK-ERROR / MISMATCH / ORACLE-ERROR / LEAK (a temporary view the
+    query left in the session catalog) and ``ALL EXACT`` when there are
+    none; returns the problems."""
     import duckdb
 
     import __spark_entry__ as entry
@@ -82,12 +90,19 @@ def sweep(spark, sf_dir: str, label: str | None = None) -> list[tuple[str, str]]
         # (the wide boundary's first run was OOM-killed with no
         # traceback), the last line names the culprit
         print(f"[sweep {i}/{len(names)}] {name}", file=sys.stderr, flush=True)
+        before = _temp_views(spark)
+        got = None
         try:
             got = fn(spark, sf_dir).toPandas()
         except Exception as ex:  # noqa: BLE001 — report and continue
             problems.append((name, f"SPARK-ERROR {type(ex).__name__}: {ex}"))
-            continue
-        if name not in oracles:
+        # a view left in the session catalog outlives the query, with
+        # whatever it holds, in any long-lived session (a sweep, a bench
+        # run, the HTTP server)
+        leaked = _temp_views(spark) - before
+        if leaked:
+            problems.append((name, f"LEAK {', '.join(sorted(leaked))}"))
+        if got is None or name not in oracles:
             continue
         try:
             assert_matches_oracle(_DF(got), con, oracles[name])

@@ -122,10 +122,10 @@ SMOKE_QUERIES = (
     # calibrations join the candidate lists against token counts /
     # band keys — candidate growth is the scale axis; hll/quantile run
     # on sketch-cardinality rows and must stay flat), plus the two
-    # migrated events-replay twins — the documents/embeddings replicas
-    # are Spark-WRITTEN directory tables, so these exercise the
-    # layout-robust file_replay_stream and the all-data-files-in-one-
-    # micro-batch watermark fix at 10x
+    # events-replay twins — the documents/embeddings replicas are
+    # Spark-WRITTEN directory tables, so these exercise
+    # sources/replay.replay_table's layout handling and its
+    # all-data-files-in-one-micro-batch flush at 10x
     "ext_semantic_gap_audit",
     "ext_simhash_error_audit",
     "ext_srp_error_audit",

@@ -55,17 +55,15 @@ def test_file_replay_stream_handles_directory_tables(spark, tmp_path):
     recursed by the file-stream source — the old replay device came up
     EMPTY (fast and wrong) on exactly the 100 TB-shaped layout. The
     layout-robust helper must ingest every row of both layouts."""
-    from bigdata_spark_realtime_spark.plans.streaming_queries import (
-        _drain_to_memory,
-    )
     from bigdata_spark_realtime_spark.sources.replay import (
-        file_replay_stream,
+        drain_to_memory,
+        replay_table,
     )
 
     d = str(tmp_path / "dir_table.parquet")
     spark.range(0, 1000).selectExpr("id", "id * 2 AS v").repartition(
         4
     ).write.parquet(d)
-    drained = _drain_to_memory(file_replay_stream(spark, d), spark)
+    drained = drain_to_memory(replay_table(spark, str(tmp_path), "dir_table"))
     assert drained.count() == 1000
     assert drained.agg({"v": "sum"}).collect()[0][0] == 999 * 1000

@@ -61,7 +61,7 @@ def test_windowed_counts_no_late_drops_on_multipart_table(
 def test_events_and_docs_streams_read_directory_tables(
     spark, sf_dir, dir_tables
 ):
-    """The migrated builders (file_replay_stream) must see every part
+    """The table replay (replay_table) must see every part
     file; the pre-migration single-symlink device yielded an EMPTY
     stream here."""
     from bigdata_spark_realtime_spark.plans.streaming_queries import (

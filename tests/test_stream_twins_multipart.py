@@ -22,6 +22,7 @@ gets a fresh stream dir.
 from __future__ import annotations
 
 import os
+import pathlib
 
 import pytest
 
@@ -40,7 +41,8 @@ def test_twin_inventory_is_complete():
 @pytest.fixture(scope="module")
 def dir_tables(spark, sf_dir, tmp_path_factory):
     """sf0.001 replica where events/documents/embeddings are
-    Spark-written 3-part directory tables and dims are symlinks."""
+    Spark-written 3-part directory tables and dims are symlinks, spelled
+    as a ``file://`` URI so every twin also reads a URI ``sf_dir``."""
     work = str(tmp_path_factory.mktemp("twin_dir_tables"))
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     for t in (
@@ -53,7 +55,7 @@ def dir_tables(spark, sf_dir, tmp_path_factory):
             spark.read.parquet(src).repartition(3).write.parquet(dst)
         else:
             os.symlink(src, dst)
-    return work
+    return pathlib.Path(work).as_uri()
 
 
 @pytest.mark.parametrize("name", STREAM_TWINS)
@@ -63,6 +65,16 @@ def test_twin_oracle_exact_on_multipart_replica(name, spark, duck, dir_tables):
     the oracle frame is unchanged)."""
     spec = SPECS[name]
     assert_matches_oracle(spec.fn(spark, dir_tables), duck, spec.oracle)
+
+
+def test_replay_rejects_a_non_local_scheme():
+    """The replay symlinks data files, so only a local path or a
+    ``file:`` URI can be replayed; any other scheme fails by name
+    before a session is needed."""
+    from bigdata_spark_realtime_spark.sources.replay import replay_table
+
+    with pytest.raises(ValueError, match="s3a"):
+        replay_table(None, "s3a://bucket/sf", "events")
 
 
 def _drain(spark, df, view: str) -> int:
@@ -85,28 +97,32 @@ def test_replay_dir_is_content_stamped_across_append_and_rewrite(
     must not reuse a stale link dir, and an in-place rewrite must not
     leave dangling or stale-version links."""
     from bigdata_spark_realtime_spark.sources.replay import (
-        file_replay_stream,
+        replay_table,
         table_stamp,
     )
 
     tbl = str(tmp_path / "events.parquet")
+
+    def replay():
+        return replay_table(spark, str(tmp_path), "events")
+
     src = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
     src.limit(100).repartition(3).write.parquet(tbl)
     s1 = table_stamp(tbl)
-    assert _drain(spark, file_replay_stream(spark, tbl), "t_replay_a") == 100
+    assert _drain(spark, replay(), "t_replay_a") == 100
 
     # append: two NEW part files, existing ones untouched
     src.limit(150).subtract(src.limit(100)).repartition(2).write.mode(
         "append"
     ).parquet(tbl)
     assert table_stamp(tbl) != s1
-    assert _drain(spark, file_replay_stream(spark, tbl), "t_replay_b") == 150
+    assert _drain(spark, replay(), "t_replay_b") == 150
 
     # in-place rewrite: fewer rows, different part names — a path-keyed
     # dir would now hold dangling links (listing crash) or links to the
     # previous version (old rows mixed in)
     src.limit(40).repartition(2).write.mode("overwrite").parquet(tbl)
-    assert _drain(spark, file_replay_stream(spark, tbl), "t_replay_c") == 40
+    assert _drain(spark, replay(), "t_replay_c") == 40
 
 
 def test_flush_sentinel_refreshes_on_append(spark, sf_dir, tmp_path):
@@ -142,3 +158,58 @@ def test_flush_sentinel_refreshes_on_append(spark, sf_dir, tmp_path):
     got = sum(r["ct"] for r in stream_windowed_counts(spark, work).collect())
     assert got == n, f"appended rows lost: {got} != {n}"
     assert sum(r["ct"] for r in rows_half) == n // 2
+
+
+@pytest.mark.parametrize(
+    "vintage", ["timestamp_us", "timestamp_ns", "int64_nanos", "timestamp_us_tz"]
+)
+def test_flush_sentinel_for_each_ts_vintage(spark, tmp_path, vintage):
+    """The sentinel's ``ts`` is computed in the column's own storage
+    type, for every ``ts`` vintage the events table has been written
+    with: a zero-row table yields no windows, and a 3-row table's
+    windows all flush."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from bigdata_spark_realtime_spark.plans.streaming_queries import (
+        stream_windowed_counts,
+    )
+
+    ts_type, per_hour = {
+        "timestamp_us": (pa.timestamp("us"), 3600 * 10**6),
+        "timestamp_ns": (pa.timestamp("ns"), 3600 * 10**9),
+        "int64_nanos": (pa.int64(), 3600 * 10**9),
+        "timestamp_us_tz": (pa.timestamp("us", tz="+05:30"), 3600 * 10**6),
+    }[vintage]
+    start = 473_352 * per_hour  # 2024-01-01T00:00:00Z in hours
+    schema = pa.schema(
+        [
+            ("event_id", pa.int64()),
+            ("ts", ts_type),
+            ("user_id", pa.int64()),
+            ("event_type", pa.string()),
+            ("value", pa.float64()),
+            ("props", pa.string()),
+        ]
+    )
+    for n in (0, 3):
+        hours = [0, 1, 7][:n]
+        table = pa.table(
+            [
+                pa.array(range(n), pa.int64()),
+                pa.array([start + h * per_hour for h in hours], pa.int64()).cast(
+                    ts_type
+                ),
+                pa.array([1] * n, pa.int64()),
+                pa.array(["click"] * n),
+                pa.array([1.5] * n),
+                pa.array(["{}"] * n),
+            ],
+            schema=schema,
+        )
+        sf = tmp_path / f"rows{n}"
+        sf.mkdir()
+        pq.write_table(table, sf / "events.parquet")
+        rows = stream_windowed_counts(spark, str(sf)).collect()
+        assert sum(r["ct"] for r in rows) == n
+        assert len(rows) == (0 if n == 0 else 2)

@@ -470,7 +470,7 @@ def test_checkpoint_keeps_its_state_partition_count(spark, tmp_path):
 
 def test_drain_starts_at_the_batch_width(spark, sf_dir, monkeypatch):
     """A registered stream twin drains a whole table, batch-sized work:
-    ``_drain_to_memory`` starts its stateful operator at the batch width
+    ``drain_to_memory`` starts its stateful operator at the batch width
     and leaves the session's stream default at 1."""
     from pyspark.sql.streaming.readwriter import DataStreamWriter
 
@@ -528,3 +528,28 @@ def test_streams_agree_at_one_and_five_state_partitions(spark, fixture_dir, tmp_
     assert dau_one and len(dau_one) == len(set(dau_one))
     assert sorted(dau_five) == sorted(dau_one)
     assert wide_one and wide_five == wide_one
+
+
+def test_twins_leave_the_session_catalog_as_it_was(spark, sf_dir):
+    """A drain drops its memory sink's view, so a long-lived session (a
+    sweep, a bench run, the HTTP server) gains no table per twin call,
+    and each returned frame still reads the sink's rows."""
+    from bigdata_spark_realtime_spark.plans.streaming_queries import (
+        stream_base_log_split,
+        stream_cdc_routing,
+        stream_windowed_counts,
+    )
+    from bigdata_spark_realtime_spark.sources.tables import load_table
+
+    def tables():
+        return sorted(t.name for t in spark.catalog.listTables())
+
+    before = tables()
+    windows = stream_windowed_counts(spark, sf_dir)
+    branches = stream_base_log_split(spark, sf_dir)
+    routes = stream_cdc_routing(spark, sf_dir)
+    assert tables() == before
+    n_events = load_table(spark, sf_dir, "events").count()
+    assert sum(r["ct"] for r in windows.collect()) == n_events
+    assert len(branches.collect()) == 5
+    assert sum(r["n"] for r in routes.collect()) > 0
