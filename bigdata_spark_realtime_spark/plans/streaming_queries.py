@@ -839,8 +839,6 @@ def stream_order_wide_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixtures — the driver tables have no dual-stream shape) joined
     stream-stream with 24 h TTL watermarks, checked against a DuckDB
     range-join oracle over the drained sink's input files."""
-    from pyspark.sql import types as T
-
     from bigdata_spark_realtime_spark import schemas as S
     from bigdata_spark_realtime_spark.streaming.order import (
         enrich_order_info,
@@ -848,16 +846,10 @@ def stream_order_wide_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     base, dim_user, dim_prov = _order_fixtures(spark)
-    info_schema = T.StructType(
-        S.ORDER_INFO_SCHEMA.fields + [T.StructField("event_ts", T.LongType())]
-    )
-    det_schema = T.StructType(
-        S.ORDER_DETAIL_SCHEMA.fields + [T.StructField("event_ts", T.LongType())]
-    )
-    info = spark.readStream.schema(info_schema).json(
+    info = spark.readStream.schema(S.ORDER_INFO_STREAM_SCHEMA).json(
         os.path.join(base, "orders", "order_info")
     )
-    det = spark.readStream.schema(det_schema).json(
+    det = spark.readStream.schema(S.ORDER_DETAIL_STREAM_SCHEMA).json(
         os.path.join(base, "orders", "order_detail")
     )
     wide = order_wide_join(
@@ -947,8 +939,6 @@ def stream_order_outer_orphans(spark: SparkSession, sf_dir: str) -> DataFrame:
     import json as _json
     import shutil
 
-    from pyspark.sql import types as T
-
     from bigdata_spark_realtime_spark import schemas as S
     from bigdata_spark_realtime_spark.streaming.order import (
         enrich_order_info,
@@ -980,17 +970,15 @@ def stream_order_outer_orphans(spark: SparkSession, sf_dir: str) -> DataFrame:
                                  "create_time": "2030-01-01 00:00:00",
                                  "event_ts": flush}) + "\n")
 
-    info_schema = T.StructType(
-        S.ORDER_INFO_SCHEMA.fields + [T.StructField("event_ts", T.LongType())]
+    info = (
+        spark.readStream.schema(S.ORDER_INFO_STREAM_SCHEMA)
+        .option("maxFilesPerTrigger", 2)
+        .json(os.path.join(work, "order_info"))
     )
-    det_schema = T.StructType(
-        S.ORDER_DETAIL_SCHEMA.fields + [T.StructField("event_ts", T.LongType())]
-    )
-    info = spark.readStream.schema(info_schema).option("maxFilesPerTrigger", 2).json(
-        os.path.join(work, "order_info")
-    )
-    det = spark.readStream.schema(det_schema).option("maxFilesPerTrigger", 2).json(
-        os.path.join(work, "order_detail")
+    det = (
+        spark.readStream.schema(S.ORDER_DETAIL_STREAM_SCHEMA)
+        .option("maxFilesPerTrigger", 2)
+        .json(os.path.join(work, "order_detail"))
     )
     wide = order_wide_join(
         enrich_order_info(info, dim_user, dim_prov), det,

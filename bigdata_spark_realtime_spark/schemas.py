@@ -93,6 +93,15 @@ ORDER_DETAIL_SCHEMA = _s(
     ("split_activity_amount", DOUBLE), ("split_coupon_amount", DOUBLE),
 )
 
+#: the order streams' wire rows: each bean plus ``event_ts``, the epoch
+#: millis the stream-stream join watermarks on
+ORDER_INFO_STREAM_SCHEMA = T.StructType(
+    ORDER_INFO_SCHEMA.fields + [T.StructField("event_ts", LONG)]
+)
+ORDER_DETAIL_STREAM_SCHEMA = T.StructType(
+    ORDER_DETAIL_SCHEMA.fields + [T.StructField("event_ts", LONG)]
+)
+
 # dimension rows (raw JSON in Redis in the reference; tables here)
 DIM_USER_SCHEMA = _s(("id", LONG), ("gender", STR), ("birthday", STR))
 DIM_PROVINCE_SCHEMA = _s(

@@ -10,7 +10,8 @@ directory of data files. Every replay keeps three conditions:
   linked on its own (``_SUCCESS`` and hidden entries skipped).
 - Content stamp. The link dir is keyed by a stamp of the table's whole
   data-file set, so an append or an in-place rewrite gets a fresh dir,
-  never stale or dangling links.
+  never stale links. A dir left behind with only dangling links (its
+  table deleted or rewritten) is deleted by the next replay.
 - Sentinel-only last batch. A flushed replay reads every data file in
   its first micro-batch and one far-future sentinel row alone in the
   next. With one file per batch, the watermark would advance between
@@ -25,6 +26,7 @@ from __future__ import annotations
 
 import hashlib
 import os
+import shutil
 import tempfile
 import uuid
 from urllib.parse import urlparse
@@ -109,6 +111,7 @@ def replay_table(
         tempfile.gettempdir(),
         f"bsr_replay_{table_stamp(path)}{'' if flush is None else '_flush'}",
     )
+    _prune_dead_link_dirs(stream_dir)
     os.makedirs(stream_dir, exist_ok=True)
     for f in files:
         link = os.path.join(stream_dir, os.path.basename(f))
@@ -123,6 +126,25 @@ def replay_table(
     if name == "events":
         df = df.withColumn("event_time", ts_to_timestamp_expr(kind))
     return df
+
+
+def _prune_dead_link_dirs(keep: str) -> None:
+    """Delete each sibling ``bsr_replay_*`` dir of ``keep`` that holds at
+    least one link and whose links all dangle. A dir with no link is
+    kept: another replay may be filling it."""
+    for entry in os.scandir(os.path.dirname(keep)):
+        if (
+            not entry.name.startswith("bsr_replay_")
+            or entry.path == keep
+            or not entry.is_dir(follow_symlinks=False)
+        ):
+            continue
+        try:
+            links = [e.path for e in os.scandir(entry.path) if e.is_symlink()]
+        except FileNotFoundError:  # pruned by a concurrent replay
+            continue
+        if links and not any(os.path.exists(link) for link in links):
+            shutil.rmtree(entry.path, ignore_errors=True)
 
 
 def _write_sentinel(path: str, sentinel: str, values: dict) -> None:

@@ -67,8 +67,6 @@ def test_order_stream_to_store_to_serving(spark, tmp_path):
     """§3.2 stages 5-10: order streams → stream-stream join →
     create_date-partitioned store (doc-id = detail_id) → statsByItem /
     detailByItem served from the store."""
-    from pyspark.sql import types as T
-
     from bigdata_spark_realtime_spark.streaming.order import (
         enrich_order_info,
         order_wide_join,
@@ -82,15 +80,13 @@ def test_order_stream_to_store_to_serving(spark, tmp_path):
     dim_prov = spark.read.schema(S.DIM_PROVINCE_SCHEMA).json(
         str(tmp_path / "dims" / "base_province")
     )
-    isch = T.StructType(S.ORDER_INFO_SCHEMA.fields + [T.StructField("event_ts", T.LongType())])
-    dsch = T.StructType(S.ORDER_DETAIL_SCHEMA.fields + [T.StructField("event_ts", T.LongType())])
     info = (
-        spark.readStream.schema(isch)
+        spark.readStream.schema(S.ORDER_INFO_STREAM_SCHEMA)
         .option("maxFilesPerTrigger", 1)
         .json(str(tmp_path / "orders" / "order_info"))
     )
     det = (
-        spark.readStream.schema(dsch)
+        spark.readStream.schema(S.ORDER_DETAIL_STREAM_SCHEMA)
         .option("maxFilesPerTrigger", 1)
         .json(str(tmp_path / "orders" / "order_detail"))
     )

@@ -13,7 +13,6 @@ from __future__ import annotations
 import re
 
 import pytest
-from pyspark.sql import types as T
 
 from bigdata_spark_realtime_spark import schemas as S
 from bigdata_spark_realtime_spark.plans.hints import parse_size_bytes
@@ -90,13 +89,10 @@ def _dau_and_order_wide(spark, d):
         split_base_log(raw)["page"], dim_user, dim_prov, "2024-03-01", streaming=True
     )
 
-    def with_ts(schema):
-        return T.StructType(schema.fields + [T.StructField("event_ts", T.LongType())])
-
-    info = spark.readStream.schema(with_ts(S.ORDER_INFO_SCHEMA)).json(
+    info = spark.readStream.schema(S.ORDER_INFO_STREAM_SCHEMA).json(
         str(d / "orders" / "order_info")
     )
-    det = spark.readStream.schema(with_ts(S.ORDER_DETAIL_SCHEMA)).json(
+    det = spark.readStream.schema(S.ORDER_DETAIL_STREAM_SCHEMA).json(
         str(d / "orders" / "order_detail")
     )
     info = enrich_order_info(info, dim_user, dim_prov)

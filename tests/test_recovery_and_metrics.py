@@ -35,14 +35,15 @@ def test_checkpoint_recovery_no_dups_no_loss(spark, tmp_path):
     src = str(tmp_path / "src")
     ckpt = str(tmp_path / "ckpt")
     out = str(tmp_path / "out")
-    _write_file(src, "f0.json", [{"k": "a", "seq": 1}, {"k": "b", "seq": 2}])
-    schema = "k string, seq long"
+    _write_file(src, "f0.json", [{"k": "a", "seq": 1, "dt": "2024-03-01"},
+                                 {"k": "b", "seq": 2, "dt": "2024-03-02"}])
+    schema = "k string, seq long, dt string"
 
     def run_once():
         stream = spark.readStream.schema(schema).json(src)
         q = (
             stream.writeStream.foreachBatch(
-                foreach_batch_upsert(spark, out, ["k"], "seq")
+                foreach_batch_upsert(spark, out, ["k"], "seq", "dt")
             )
             .option("checkpointLocation", ckpt)
             .trigger(processingTime="0 seconds")
@@ -61,7 +62,8 @@ def test_checkpoint_recovery_no_dups_no_loss(spark, tmp_path):
     assert spark.read.parquet(out).count() == 2
 
     # new file after restart → only the new rows flow through
-    _write_file(src, "f1.json", [{"k": "c", "seq": 3}, {"k": "a", "seq": 9}])
+    _write_file(src, "f1.json", [{"k": "c", "seq": 3, "dt": "2024-03-02"},
+                                 {"k": "a", "seq": 9, "dt": "2024-03-01"}])
     run_once()
     rows = {r.k: r.seq for r in spark.read.parquet(out).collect()}
     assert rows == {"a": 9, "b": 2, "c": 3}  # upsert: a advanced, no dups

@@ -7,7 +7,6 @@ import uuid
 
 import pytest
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from bigdata_spark_realtime_spark import schemas as S
 from bigdata_spark_realtime_spark.functions import scalar as fns
@@ -41,14 +40,9 @@ def api(spark, tmp_path_factory):
         split_base_log(raw)["page"], dim_user, dim_prov, TD, streaming=False
     )
 
-    info_schema = T.StructType(
-        S.ORDER_INFO_SCHEMA.fields + [T.StructField("event_ts", T.LongType())]
-    )
-    det_schema = T.StructType(
-        S.ORDER_DETAIL_SCHEMA.fields + [T.StructField("event_ts", T.LongType())]
-    )
-    info = spark.read.schema(info_schema).json(str(d / "orders" / "order_info"))
-    det = spark.read.schema(det_schema).json(str(d / "orders" / "order_detail"))
+    orders = d / "orders"
+    info = spark.read.schema(S.ORDER_INFO_STREAM_SCHEMA).json(str(orders / "order_info"))
+    det = spark.read.schema(S.ORDER_DETAIL_STREAM_SCHEMA).json(str(orders / "order_detail"))
     wide = order_wide_join(
         enrich_order_info(info, dim_user, dim_prov), det, streaming=False
     )

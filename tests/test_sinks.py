@@ -1,21 +1,20 @@
 """Effectively-once upsert sink (K5/D3/W4): idempotence + last-write-wins,
 session-conf hygiene, one execution per streaming epoch, null days, the
 dt-partitioned serving store (the ES index-per-day replacement: partition
-pruning + day-scoped merges), and compaction atomicity under concurrent
-readers."""
+pruning + day-scoped merges that leave other days' files alone), the first
+write creating the store in place, a day's file count across upserts, and
+the store path's scheme."""
 
 from __future__ import annotations
 
 import json
 import os
-import threading
 
 import pytest
 from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from bigdata_spark_realtime_spark.streaming.sinks import (
-    compact_partition,
     foreach_batch_upsert,
     upsert_parquet,
 )
@@ -35,9 +34,9 @@ def test_upsert_idempotent_and_last_write_wins(spark, tmp_path):
         [("m1", "2024-03-01", 100, "a"), ("m2", "2024-03-01", 110, "b")],
         "mid string, dt string, ts long, payload string",
     )
-    upsert_parquet(spark, b1, path, ["dt", "mid"], "ts")
+    upsert_parquet(spark, b1, path, ["dt", "mid"], "ts", partition_by="dt")
     # replay of the same batch (at-least-once delivery) → no duplicates
-    upsert_parquet(spark, b1, path, ["dt", "mid"], "ts")
+    upsert_parquet(spark, b1, path, ["dt", "mid"], "ts", partition_by="dt")
     assert spark.read.parquet(path).count() == 2
 
     # newer write for m1 wins; stale write for m2 loses
@@ -45,12 +44,12 @@ def test_upsert_idempotent_and_last_write_wins(spark, tmp_path):
         [("m1", "2024-03-01", 200, "a2"), ("m2", "2024-03-01", 50, "stale")],
         "mid string, dt string, ts long, payload string",
     )
-    upsert_parquet(spark, b2, path, ["dt", "mid"], "ts")
+    upsert_parquet(spark, b2, path, ["dt", "mid"], "ts", partition_by="dt")
     rows = {r.mid: r for r in spark.read.parquet(path).collect()}
     assert len(rows) == 2
     assert rows["m1"].payload == "a2" and rows["m1"].ts == 200
     assert rows["m2"].payload == "b" and rows["m2"].ts == 110
-    # the swap's temp and old copies are gone
+    # no temp or old copy beside the store
     assert os.listdir(tmp_path) == ["dau_table"]
 
 
@@ -66,7 +65,7 @@ def test_partitioned_upsert_does_not_leak_session_conf(spark, tmp_path):
         "mid string, dt string, ts long, payload string",
     )
     upsert_parquet(spark, b, path, ["dt", "mid"], "ts", partition_by="dt")
-    # second call takes the os.path.exists(path) branch that used to
+    # second call merges into the stored day, the path that used to
     # flip the session conf
     b2 = spark.createDataFrame(
         [("m1", "2024-03-01", 200, "a2")], "mid string, dt string, ts long, payload string"
@@ -78,8 +77,7 @@ def test_partitioned_upsert_does_not_leak_session_conf(spark, tmp_path):
     assert rows == {"m1": "a2", "m2": "b"}
 
 
-@pytest.mark.parametrize("partition_by", ["dt", None])
-def test_stream_epoch_runs_once(spark, tmp_path, partition_by):
+def test_stream_epoch_runs_once(spark, tmp_path):
     """The sink runs each micro-batch's stateful plan once: ForeachBatchSink
     hands over an uncached LogicalRDD, so every extra action on it would
     re-run the dedup state store (and the tap) for that epoch."""
@@ -97,7 +95,7 @@ def test_stream_epoch_runs_once(spark, tmp_path, partition_by):
     cached_before = _persistent_rdds(spark)
     q = (
         deduped.writeStream.foreachBatch(
-            foreach_batch_upsert(spark, out, ["k"], "ts", partition_by)
+            foreach_batch_upsert(spark, out, ["k"], "ts", "dt")
         )
         .option("checkpointLocation", str(tmp_path / "ckpt"))
         .start()
@@ -119,28 +117,28 @@ def test_stream_epoch_runs_once(spark, tmp_path, partition_by):
 
 def test_empty_batch_creates_no_table(spark, tmp_path):
     empty = _df(spark, [])
-    for partition_by in ("dt", None):
-        upsert_parquet(spark, empty, str(tmp_path / f"direct_{partition_by}"),
-                       ["dt", "mid"], "ts", partition_by=partition_by)
-        sink = foreach_batch_upsert(spark, str(tmp_path / f"stream_{partition_by}"),
-                                    ["dt", "mid"], "ts", partition_by)
-        sink(empty, 0)
+    upsert_parquet(spark, empty, str(tmp_path / "direct"), ["dt", "mid"], "ts",
+                   partition_by="dt")
+    sink = foreach_batch_upsert(spark, str(tmp_path / "stream"), ["dt", "mid"], "ts", "dt")
+    sink(empty, 0)
     assert os.listdir(tmp_path) == []
 
 
-@pytest.mark.parametrize("partition_by", ["dt", None])
-def test_failed_upsert_unpersists_batch_and_keeps_store(spark, tmp_path, partition_by):
-    path = str(tmp_path / "store")
+@pytest.mark.parametrize("as_uri", [False, True], ids=["path", "file_uri"])
+def test_failed_upsert_unpersists_batch_and_keeps_store(spark, tmp_path, as_uri):
+    store = tmp_path / "store"
+    path = store.as_uri() if as_uri else str(store)
     upsert_parquet(spark, _df(spark, [("m1", "2024-03-01", 1, "a")]), path,
-                   ["dt", "mid"], "ts", partition_by=partition_by)
+                   ["dt", "mid"], "ts", partition_by="dt")
     cached_before = _persistent_rdds(spark)
     bad = spark.createDataFrame([("m1", "2024-03-01", 2, "b")],
                                 "mid string, dt string, ts long, w string")
     with pytest.raises(AnalysisException):
-        upsert_parquet(spark, bad, path, ["dt", "mid"], "ts", partition_by=partition_by)
+        upsert_parquet(spark, bad, path, ["dt", "mid"], "ts", partition_by="dt")
     assert _persistent_rdds(spark) == cached_before
     assert [tuple(r) for r in spark.read.parquet(path).select("mid", "dt", "ts", "v").collect()] \
         == [("m1", "2024-03-01", 1, "a")]
+    assert os.listdir(tmp_path) == ["store"]
 
 
 @pytest.mark.parametrize("no_day", [None, ""])
@@ -193,16 +191,31 @@ def test_partitioned_upsert_and_pruning(spark, tmp_path):
     assert q.count() == 1
 
 
-def test_compact_partition_preserves_rows_and_shrinks_files(spark, tmp_path):
-    from pyspark.sql import functions as F
-
-    from bigdata_spark_realtime_spark.streaming.sinks import (
-        compact_partition,
-        upsert_parquet,
-    )
-
+def test_upsert_leaves_untouched_days_files_alone(spark, tmp_path):
+    """Only the batch's days are read and rewritten: a stored day that the
+    batch does not touch keeps its very files (names, sizes, mtimes)."""
     path = str(tmp_path / "dau")
-    # simulate many micro-batch upserts -> many small files in one day
+    upsert_parquet(spark, _df(spark, [("m1", "2024-03-01", 1, "a"), ("m2", "2024-03-02", 2, "b")]),
+                   path, ["dt", "mid"], "ts", partition_by="dt")
+
+    def files(day):
+        d = os.path.join(path, f"dt={day}")
+        return sorted((e.name, e.stat().st_size, e.stat().st_mtime_ns) for e in os.scandir(d))
+
+    day1, day2 = files("2024-03-01"), files("2024-03-02")
+    upsert_parquet(spark, _df(spark, [("m2", "2024-03-02", 9, "b2")]),
+                   path, ["dt", "mid"], "ts", partition_by="dt")
+    assert files("2024-03-01") == day1
+    assert files("2024-03-02") != day2
+
+
+def test_repeated_upserts_keep_a_days_file_count(spark, tmp_path):
+    """The merge rewrites every day it touches, so N upserts into one day
+    leave it with the file count of a single upsert: small files never
+    pile up across micro-batches."""
+    path = str(tmp_path / "dau")
+    day_dir = tmp_path / "dau" / "dt=2024-03-01"
+    counts = []
     for batch in range(6):
         df = spark.range(batch * 10, batch * 10 + 10).select(
             F.col("id").alias("mid"),
@@ -210,82 +223,38 @@ def test_compact_partition_preserves_rows_and_shrinks_files(spark, tmp_path):
             F.col("id").alias("ts"),
         ).repartition(4)
         upsert_parquet(spark, df, path, ["dt", "mid"], "ts", partition_by="dt")
-    part_dir = tmp_path / "dau" / "dt=2024-03-01"
-    before = spark.read.option("basePath", path).parquet(str(part_dir)).collect()
-
-    n_files = compact_partition(spark, path, "dt", "2024-03-01", target_files=1)
-    assert n_files == 1
-    after = spark.read.option("basePath", path).parquet(str(part_dir)).collect()
-    assert sorted((r.mid, r.ts) for r in after) == sorted(
-        (r.mid, r.ts) for r in before
-    )
-    # compacting a missing partition is a no-op
-    assert compact_partition(spark, path, "dt", "1999-01-01") == 0
+        counts.append(len([f for f in os.listdir(day_dir) if f.endswith(".parquet")]))
+    assert counts == [counts[0]] * 6, counts
+    assert sorted(r.mid for r in spark.read.parquet(path).collect()) == list(range(60))
 
 
-def test_compact_keeps_temp_dirs_outside_table_root(spark, tmp_path):
-    path = str(tmp_path / "store")
-    b = spark.createDataFrame(
-        [(f"m{i}", "2024-03-01", i, "x") for i in range(20)]
-        + [(f"m{i}", "2024-03-02", i, "y") for i in range(20)],
-        "mid string, dt string, ts long, payload string",
-    )
-    b.repartition(8).write.partitionBy("dt").parquet(path)
-    seen_in_root: set[str] = set()
-    stop = threading.Event()
-
-    def watch_root():
-        while not stop.is_set():
-            seen_in_root.update(
-                e for e in os.listdir(path) if not e.startswith("dt=") and
-                not e.startswith("_") and not e.startswith(".")
-            )
-
-    t = threading.Thread(target=watch_root)
-    t.start()
-    try:
-        n = compact_partition(spark, path, "dt", "2024-03-01", target_files=1)
-    finally:
-        stop.set()
-        t.join()
-    assert n == 1
-    assert seen_in_root == set(), f"temp entries leaked into table root: {seen_in_root}"
-    assert spark.read.parquet(path).count() == 40
+def test_first_upsert_creates_the_store_in_place(spark, tmp_path):
+    """A missing store is created by the same dynamic overwrite as every
+    later merge: day dirs (null day included) land straight in the store,
+    with no staging dir inside it and no temp copy beside it."""
+    path = str(tmp_path / "dau")
+    upsert_parquet(spark, _df(spark, [("m1", "2024-03-01", 1, "a"), ("m2", None, 2, "b")]),
+                   path, ["dt", "mid"], "ts", partition_by="dt")
+    assert os.listdir(tmp_path) == ["dau"]
+    assert sorted(os.listdir(path)) == ["dt=2024-03-01", "dt=__HIVE_DEFAULT_PARTITION__"]
+    rows = {(r.mid, r.dt): (r.ts, r.v) for r in spark.read.parquet(path).collect()}
+    assert rows == {("m1", "2024-03-01"): (1, "a"), ("m2", None): (2, "b")}
 
 
-def test_concurrent_reads_never_double_count_during_compaction(spark, tmp_path):
-    path = str(tmp_path / "store2")
-    b = spark.createDataFrame(
-        [(f"m{i}", "2024-03-01", i, "x") for i in range(30)]
-        + [(f"m{i}", "2024-03-02", i, "y") for i in range(10)],
-        "mid string, dt string, ts long, payload string",
-    )
-    b.repartition(6).write.partitionBy("dt").parquet(path)
-    errors: list[Exception] = []
-    counts: list[int] = []
-    stop = threading.Event()
+def test_file_uri_store_behaves_like_its_path(spark, tmp_path):
+    uri = (tmp_path / "dau").as_uri()
+    upsert_parquet(spark, _df(spark, [("m1", "2024-03-01", 1, "a")]), uri,
+                   ["dt", "mid"], "ts", partition_by="dt")
+    upsert_parquet(spark, _df(spark, [("m2", "2024-03-01", 2, "b")]), uri,
+                   ["dt", "mid"], "ts", partition_by="dt")
+    rows = {r.mid: r.v for r in spark.read.parquet(str(tmp_path / "dau")).collect()}
+    assert rows == {"m1": "a", "m2": "b"}
+    assert os.listdir(tmp_path) == ["dau"]
 
-    def reader():
-        while not stop.is_set():
-            try:
-                counts.append(spark.read.parquet(path).count())
-            except Exception as e:  # a vanished-mid-swap dir is a failure
-                errors.append(e)
 
-    t = threading.Thread(target=reader)
-    t.start()
-    try:
-        for _ in range(3):
-            compact_partition(spark, path, "dt", "2024-03-01", target_files=1)
-    finally:
-        stop.set()
-        t.join()
-    # Plain parquet has no transaction log: an in-flight read that listed
-    # the old files before the swap may fail with a vanished-file error
-    # and must retry. What the swap DOES guarantee: no reader ever sees
-    # both copies (double-count) or a half-written partition.
-    for e in errors:
-        msg = str(e)
-        assert any(s in msg for s in ("FileNotFound", "does not exist", "PATH_NOT_FOUND")), msg
-    assert set(counts) <= {40, 10}, sorted(set(counts))
-    assert spark.read.parquet(path).count() == 40
+def test_non_file_scheme_raises_before_spark(tmp_path, monkeypatch):
+    """No session and no frame: the scheme is refused before either is used."""
+    monkeypatch.chdir(tmp_path)
+    with pytest.raises(ValueError, match="s3a"):
+        upsert_parquet(None, None, "s3a://bucket/dau", ["dt", "mid"], "ts", partition_by="dt")
+    assert os.listdir(tmp_path) == []

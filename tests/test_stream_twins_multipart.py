@@ -125,6 +125,45 @@ def test_replay_dir_is_content_stamped_across_append_and_rewrite(
     assert _drain(spark, replay(), "t_replay_c") == 40
 
 
+def test_replay_prunes_link_dirs_whose_table_is_gone(spark, tmp_path):
+    """A replay deletes each sibling link dir whose links all dangle; a
+    dir whose links are live, and an empty dir that another replay may
+    be filling, are left as they are."""
+    import tempfile
+    import uuid
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from bigdata_spark_realtime_spark.sources.replay import (
+        replay_table,
+        table_stamp,
+    )
+
+    def link_dir(name):
+        path = str(tmp_path / name / "t.parquet")
+        return os.path.join(tempfile.gettempdir(), f"bsr_replay_{table_stamp(path)}")
+
+    for name in ("gone", "live", "next"):
+        (tmp_path / name).mkdir()
+        pq.write_table(pa.table({"k": [1, 2]}), str(tmp_path / name / "t.parquet"))
+    replay_table(spark, str(tmp_path / "gone"), "t")
+    replay_table(spark, str(tmp_path / "live"), "t")
+    gone, live = link_dir("gone"), link_dir("live")
+    live_links = sorted(os.listdir(live))
+    filling = os.path.join(tempfile.gettempdir(), f"bsr_replay_{uuid.uuid4().hex[:12]}")
+    os.makedirs(filling)
+    try:
+        os.remove(str(tmp_path / "gone" / "t.parquet"))
+        replay_table(spark, str(tmp_path / "next"), "t")
+        assert not os.path.exists(gone)
+        assert sorted(os.listdir(live)) == live_links == ["t.parquet"]
+        assert all(os.path.exists(os.path.join(live, f)) for f in live_links)
+        assert os.path.isdir(link_dir("next")) and os.path.isdir(filling)
+    finally:
+        os.rmdir(filling)
+
+
 def test_flush_sentinel_refreshes_on_append(spark, sf_dir, tmp_path):
     """stream_windowed_counts' sentinel carries max(ts)+10y; an append
     with later timestamps must regenerate it (the first-file-only stamp

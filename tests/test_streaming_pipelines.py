@@ -13,7 +13,6 @@ import os
 
 import pytest
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from bigdata_spark_realtime_spark import schemas as S
 from bigdata_spark_realtime_spark.sources import fixtures as FX
@@ -181,17 +180,15 @@ def test_dau_stream_dedup_and_enrich(spark, fixture_dir):
 
 def test_order_stream_stream_join_ttl(spark, fixture_dir):
     meta = json.loads((fixture_dir / "meta.json").read_text())
-    info_schema = T.StructType(S.ORDER_INFO_SCHEMA.fields + [T.StructField("event_ts", T.LongType())])
-    det_schema = T.StructType(S.ORDER_DETAIL_SCHEMA.fields + [T.StructField("event_ts", T.LongType())])
 
     dim_user, dim_prov = _dims(spark, fixture_dir)
     info_stream = (
-        spark.readStream.schema(info_schema)
+        spark.readStream.schema(S.ORDER_INFO_STREAM_SCHEMA)
         .option("maxFilesPerTrigger", 1)
         .json(str(fixture_dir / "orders" / "order_info"))
     )
     det_stream = (
-        spark.readStream.schema(det_schema)
+        spark.readStream.schema(S.ORDER_DETAIL_STREAM_SCHEMA)
         .option("maxFilesPerTrigger", 1)
         .json(str(fixture_dir / "orders" / "order_detail"))
     )
@@ -283,20 +280,14 @@ def test_order_stream_left_outer_emits_orphans_once(spark, fixture_dir, tmp_path
     work = tmp_path / "orders_outer"
     shutil.copytree(src, work)
 
-    info_schema = T.StructType(
-        S.ORDER_INFO_SCHEMA.fields + [T.StructField("event_ts", T.LongType())]
-    )
-    det_schema = T.StructType(
-        S.ORDER_DETAIL_SCHEMA.fields + [T.StructField("event_ts", T.LongType())]
-    )
     dim_user, dim_prov = _dims(spark, fixture_dir)
     info_stream = (
-        spark.readStream.schema(info_schema)
+        spark.readStream.schema(S.ORDER_INFO_STREAM_SCHEMA)
         .option("maxFilesPerTrigger", 2)
         .json(str(work / "order_info"))
     )
     det_stream = (
-        spark.readStream.schema(det_schema)
+        spark.readStream.schema(S.ORDER_DETAIL_STREAM_SCHEMA)
         .option("maxFilesPerTrigger", 2)
         .json(str(work / "order_detail"))
     )
@@ -389,8 +380,6 @@ def _upsert_streams(session, fixture_dir, out):
     from bigdata_spark_realtime_spark.streaming.sinks import foreach_batch_upsert
 
     dim_user, dim_prov = _dims(session, fixture_dir)
-    info_schema = T.StructType(S.ORDER_INFO_SCHEMA.fields + [T.StructField("event_ts", T.LongType())])
-    det_schema = T.StructType(S.ORDER_DETAIL_SCHEMA.fields + [T.StructField("event_ts", T.LongType())])
     raw = (
         session.readStream.format("text")
         .option("maxFilesPerTrigger", 1)
@@ -398,12 +387,12 @@ def _upsert_streams(session, fixture_dir, out):
     )
     dau = build_dau(split_base_log(raw)["page"], dim_user, dim_prov, AGE_REF, streaming=True)
     info = (
-        session.readStream.schema(info_schema)
+        session.readStream.schema(S.ORDER_INFO_STREAM_SCHEMA)
         .option("maxFilesPerTrigger", 1)
         .json(str(fixture_dir / "orders" / "order_info"))
     )
     det = (
-        session.readStream.schema(det_schema)
+        session.readStream.schema(S.ORDER_DETAIL_STREAM_SCHEMA)
         .option("maxFilesPerTrigger", 1)
         .json(str(fixture_dir / "orders" / "order_detail"))
     )
